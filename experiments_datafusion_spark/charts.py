@@ -57,18 +57,6 @@ def _fmt(v: float) -> str:
     return f"{v:.3g}"
 
 
-def render_line_chart(
-    points: list[tuple[float, float]],
-    title: str,
-    xlabel: str,
-    ylabel: str,
-    out_path: str | Path,
-    log_x: bool | None = None,
-) -> None:
-    """Single-series convenience wrapper over render_multi_line_chart."""
-    render_multi_line_chart({"": points}, title, xlabel, ylabel, out_path, log_x)
-
-
 def render_multi_line_chart(
     series: dict[str, list[tuple[float, float]]],
     title: str,

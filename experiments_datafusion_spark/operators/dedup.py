@@ -125,18 +125,17 @@ def jaccard_pairs(
             eager=True
         )
     # Round 14: the post-pin chain (sizes + posting self-join + verify) is
-    # ONE spark.sql() program over a view of the pinned postings — one
-    # parse+analysis pass instead of ~10 chained ops (the py4j +
-    # eager-re-analysis construction floor).  Threshold is cast to DOUBLE
-    # explicitly (a bare SQL 0.5 is DECIMAL); the long/long division is
-    # double in both forms.  Rows proven identical.
-    sh.createOrReplaceTempView("jac_sh_v")
+    # ONE spark.sql() program over the pinned postings, passed in as the
+    # {sh} argument — one parse+analysis pass instead of ~10 chained ops
+    # (the py4j + eager-re-analysis construction floor).  Threshold is cast
+    # to DOUBLE explicitly (a bare SQL 0.5 is DECIMAL); the long/long
+    # division is double in both forms.  Rows proven identical.
     jac = "common / (sa.n_sh + sb.n_sh - common)"
     return df.sparkSession.sql(f"""
-WITH sizes AS (SELECT doc_id, count(1) AS n_sh FROM jac_sh_v GROUP BY doc_id),
+WITH sizes AS (SELECT doc_id, count(1) AS n_sh FROM {{sh}} GROUP BY doc_id),
 common AS (
   SELECT a.doc_id AS x, b.doc_id AS y, count(1) AS common
-  FROM jac_sh_v a JOIN jac_sh_v b
+  FROM {{sh}} a JOIN {{sh}} b
     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
 )
@@ -145,7 +144,7 @@ FROM common
 JOIN sizes sa ON x = sa.doc_id
 JOIN sizes sb ON y = sb.doc_id
 WHERE {jac} >= CAST({threshold!r} AS DOUBLE)
-""")
+""", sh=sh)
 
 
 # --- MinHash + LSH ----------------------------------------------------------
@@ -162,12 +161,6 @@ def minhash_signatures_from_postings(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*mins)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    return minhash_signatures_from_postings(doc_shingles(df, id_col, text_col))
-
-
 def _band_hash(band: int) -> Column:
     cols = [
         F.col(f"mh{band * ROWS_PER_BAND + r}").cast("string") for r in range(ROWS_PER_BAND)
@@ -176,34 +169,6 @@ def _band_hash(band: int) -> Column:
     for c in cols[1:]:
         out = F.concat(out, F.lit(","), c)
     return F.md5(out)
-
-
-def _verify_candidates(
-    candidates: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard computed ONLY for candidate pairs (the whole point of
-    LSH: verification cost is proportional to candidates, not all co-shingle
-    pairs). candidates: (x, y); sh: (doc_id, shingle) posting rows."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        candidates.join(a, candidates.x == F.col("a.doc_id"))
-        .join(
-            b,
-            (candidates.y == F.col("b.doc_id"))
-            & (F.col("a.shingle") == F.col("b.shingle")),
-        )
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("common") / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("common"))
-    return (
-        common.join(sa, F.col("x") == F.col("sa.doc_id"))
-        .join(sb, F.col("y") == F.col("sb.doc_id"))
-        .where(jac >= threshold)
-        .select("x", "y", F.round(jac, 4).alias("jaccard"))
-    )
 
 
 def minhash_lsh_pairs(
@@ -230,12 +195,11 @@ def minhash_lsh_pairs(
     # verify join — so ITS pin earns the md5 shingle scan once).
     # Round 14: the whole post-pin pipeline (signatures -> bands ->
     # candidate bucket join -> exact-Jaccard verify) is ONE spark.sql()
-    # program over a view of the pinned postings — one parse+analysis pass
+    # program over the pinned postings — one parse+analysis pass
     # instead of the ~20-op chain whose 32 min-expressions and 8 md5 band
     # hashes dominated this key's Python-side construction (~1.3-1.7 s at
     # sf0.1).  Expression replicas: the flat SQL concat equals the nested
     # DF concat on strings; integer minhash arithmetic is term-identical.
-    sh.createOrReplaceTempView("mh_sh_v")
     mins = ",\n         ".join(
         f"min(({MINHASH_A[i]} * (shingle % {MINHASH_P}) + {MINHASH_B[i]})"
         f" % {MINHASH_P}) AS mh{i}"
@@ -254,7 +218,7 @@ def minhash_lsh_pairs(
 WITH sig AS (
   SELECT doc_id,
          {mins}
-  FROM mh_sh_v GROUP BY doc_id
+  FROM {{sh}} GROUP BY doc_id
 ),
 bands AS (
   SELECT doc_id, posexplode(array({band_exprs})) AS (band, bh) FROM sig
@@ -264,12 +228,12 @@ cand AS (
   FROM bands a JOIN bands b
     ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, count(1) AS n_sh FROM mh_sh_v GROUP BY doc_id),
+sizes AS (SELECT doc_id, count(1) AS n_sh FROM {{sh}} GROUP BY doc_id),
 common AS (
   SELECT x, y, count(1) AS common
   FROM cand c
-  JOIN mh_sh_v a ON c.x = a.doc_id
-  JOIN mh_sh_v b ON c.y = b.doc_id AND a.shingle = b.shingle
+  JOIN {{sh}} a ON c.x = a.doc_id
+  JOIN {{sh}} b ON c.y = b.doc_id AND a.shingle = b.shingle
   GROUP BY x, y
 )
 SELECT x, y, round({jac}, 4) AS jaccard
@@ -277,7 +241,7 @@ FROM common
 JOIN sizes sa ON x = sa.doc_id
 JOIN sizes sb ON y = sb.doc_id
 WHERE {jac} >= CAST({threshold!r} AS DOUBLE)
-""")
+""", sh=sh)
 
 
 # --- SimHash ----------------------------------------------------------------

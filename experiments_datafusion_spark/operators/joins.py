@@ -81,16 +81,6 @@ def asof_join(
     )
 
 
-def range_join(
-    left: DataFrame, right: DataFrame, left_val, lo, hi, how: str = "inner"
-) -> DataFrame:
-    """Band/range join: left_val BETWEEN lo AND hi. Declared as a plain
-    theta join — Spark broadcasts the smaller side (nested-loop probe);
-    callers with a huge right side should bucket `lo` into bins first."""
-    cond = (left_val >= lo) & (left_val <= hi)
-    return left.join(F.broadcast(right), cond, how)
-
-
 def salted_join(
     big: DataFrame,
     skewed_small: DataFrame,

@@ -97,19 +97,12 @@ def topk_bruteforce(
     set against the partitioned corpus, rank per query with a deterministic
     tiebreak on neighbor id.
 
-    Round 14: one spark.sql() program over views of the norm-attached
-    sides (same tree, one analysis pass).  The SQL higher-order functions
-    are the literal dialect twins of dotd()/_with_norm() — aggregate /
-    zip_with with the identical lambdas, so the sequential double
-    accumulation is bit-for-bit the same."""
+    Round 14: one spark.sql() program taking the norm-attached sides as
+    its {corpus} / {queries} arguments (same tree, one analysis pass).
+    The SQL higher-order functions are the literal dialect twins of
+    dotd()/_with_norm() — aggregate / zip_with with the identical lambdas,
+    so the sequential double accumulation is bit-for-bit the same."""
     spark = corpus.sparkSession
-    _with_norm(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"), "nrm"
-    ).createOrReplaceTempView("bf_corpus_v")
-    _with_norm(queries).select(
-        F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    ).createOrReplaceTempView("bf_queries_v")
     dot = ("aggregate(zip_with(q_emb, c_emb, (x, y) -> x * y),"
            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
     return spark.sql(f"""
@@ -122,12 +115,20 @@ FROM (
   FROM (
     SELECT /*+ BROADCAST(q) */ q.query_id, c.neighbor_id,
            {dot} / (q.q_nrm * c.nrm) AS cos_raw
-    FROM bf_corpus_v c CROSS JOIN bf_queries_v q
+    FROM {{corpus}} c CROSS JOIN {{queries}} q
     WHERE q.query_id != c.neighbor_id
   )
 )
 WHERE rank <= {k}
-""")
+""",
+        corpus=_with_norm(corpus).select(
+            F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"), "nrm"
+        ),
+        queries=_with_norm(queries).select(
+            F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"),
+            F.col("nrm").alias("q_nrm"),
+        ),
+    )
 
 
 def mmr_rerank(
@@ -258,23 +259,6 @@ def lsh_bucket(vec: Column, n_planes: int = N_PLANES) -> Column:
         proj = _proj(vec, plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(F.lit(0))
     return bucket
-
-
-def lsh_table_buckets(vec: Column, planes_per_table: int, n_tables: int) -> Column:
-    """Array of bucket ids, one per LSH table (OR-construction): table j
-    uses its own disjoint plane slice LSH_PLANES[j*m:(j+1)*m].  AND within a
-    table (all m bits must match) controls precision; OR across tables
-    controls recall — the standard (m, L) LSH trade (MMDS ch.3)."""
-    m = planes_per_table
-    assert m * n_tables <= len(LSH_PLANES), "not enough precomputed planes"
-    buckets = []
-    for j in range(n_tables):
-        bucket = F.lit(0)
-        for i, plane in enumerate(LSH_PLANES[j * m : (j + 1) * m]):
-            proj = _proj(vec, plane)
-            bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        buckets.append(bucket)
-    return F.array(*buckets)
 
 
 def embedding_lsh_pairs(
@@ -566,27 +550,30 @@ def _pq_encode_agg_floor() -> str:
 
 def _pq_scan_sql(id_col: str, k: int, d_expr: str) -> str:
     """One-analysis-pass SQL for subspace split -> argmin encode -> ADC
-    broadcast join -> integer sum -> windowed top-k, over the
-    pq_corpus_v / pq_cb_v / pq_qtab_v temp views (round 14 — replaces the
-    per-op DataFrame chain; expression-identical, proven row-identical)."""
+    broadcast join -> integer sum -> windowed top-k (round 14 — replaces the
+    per-op DataFrame chain; expression-identical, proven row-identical).
+    The text keeps {corpus} / {cb} / {qtab} placeholders for the frames
+    passed to spark.sql().  Pass a projection of the caller's corpus, not
+    the frame itself: spark.sql() drops its view of each frame after
+    analysis, and dropping a view of a cached frame uncaches it."""
     slices = ", ".join(
         f"slice(embedding, {m * PQ_SUBDIM + 1}, {PQ_SUBDIM})" for m in range(PQ_M)
     )
     return f"""
 WITH sub AS (
   SELECT {id_col} AS vid, posexplode(array({slices})) AS (m, subvec)
-  FROM pq_corpus_v
+  FROM {{corpus}}
 ),
 codes AS (
   SELECT vid, m, mn.k AS code FROM (
     SELECT /*+ BROADCAST(cb) */ s.vid, s.m,
            min(named_struct('d', {d_expr}, 'k', cb.k)) AS mn
-    FROM sub s JOIN pq_cb_v cb ON s.m = cb.m
+    FROM sub s JOIN {{cb}} cb ON s.m = cb.m
     GROUP BY s.vid, s.m)
 ),
 scored AS (
   SELECT /*+ BROADCAST(q) */ q.query_id, c.vid AS neighbor_id, sum(q.d_int) AS s
-  FROM codes c JOIN pq_qtab_v q ON c.m = q.m AND c.code = q.code
+  FROM codes c JOIN {{qtab}} q ON c.m = q.m AND c.code = q.code
   WHERE c.vid != q.query_id
   GROUP BY q.query_id, c.vid
 )
@@ -746,23 +733,18 @@ def topk_pq(
     not literal-fuse it.
 
     Round 14: encode + ADC scan + rank are ONE spark.sql() program over
-    the corpus / codebook / ADC-table views instead of ~10 chained
+    the corpus / codebook / ADC-table frames instead of ~10 chained
     DataFrame ops — construction paid a py4j round trip plus an eager
     re-analysis of the growing tree per op (~0.5 s of pure driver time at
     sf0.1 for this key, the r13 'eager per-op analysis' floor item); one
     SQL string analyzes the identical tree once.  The expressions are
     1:1 replicas (power == **, element_at is 1-based in both, struct-min
     argmin field order (d, k) unchanged), proven row-identical."""
-    cb_rows, qtab_rows = _pq_local_setup(corpus, queries, id_col)
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        cb_rows, "m int, k int, cent array<double>"
-    ).createOrReplaceTempView("pq_cb_v")
-    spark.createDataFrame(
-        qtab_rows, "query_id bigint, m int, code int, d_int bigint"
-    ).createOrReplaceTempView("pq_qtab_v")
-    corpus.createOrReplaceTempView("pq_corpus_v")
-    return spark.sql(_pq_scan_sql(id_col, k, _pq_encode_agg_seed()))
+    codebook, qtab = _pq_local_dfs(corpus, queries, id_col)
+    return corpus.sparkSession.sql(
+        _pq_scan_sql(id_col, k, _pq_encode_agg_seed()),
+        corpus=corpus.select(id_col, "embedding"), cb=codebook, qtab=qtab,
+    )
 
 
 def topk_ivfpq(
@@ -1034,11 +1016,11 @@ def topk_pq_trained(
     # The dropped any_value(subvec) of _pq_floor_argmin was dead here (the
     # old .select pruned it); grouped rows are unchanged.
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        cb, "m int, k int, cent array<double>"
-    ).createOrReplaceTempView("pq_cb_v")
-    spark.createDataFrame(
-        qtab_rows, "query_id bigint, m int, code int, d_int bigint"
-    ).createOrReplaceTempView("pq_qtab_v")
-    corpus.createOrReplaceTempView("pq_corpus_v")
-    return spark.sql(_pq_scan_sql(id_col, k, _pq_encode_agg_floor()))
+    return spark.sql(
+        _pq_scan_sql(id_col, k, _pq_encode_agg_floor()),
+        corpus=corpus.select(id_col, "embedding"),
+        cb=spark.createDataFrame(cb, "m int, k int, cent array<double>"),
+        qtab=spark.createDataFrame(
+            qtab_rows, "query_id bigint, m int, code int, d_int bigint"
+        ),
+    )

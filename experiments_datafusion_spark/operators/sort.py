@@ -48,14 +48,6 @@ def sort_batch(df: DataFrame, exprs: Sequence[Column] | None = None) -> DataFram
     return df.orderBy(*(exprs if exprs is not None else make_sort_exprs(df)))
 
 
-def sort_within_partitions(df: DataFrame, exprs: Sequence[Column] | None = None) -> DataFrame:
-    """Per-partition sort without a global shuffle — the per-batch analog of
-    the reference's single-batch sort; at scale this is the cheap option
-    when downstream only needs within-partition order (e.g. merge joins,
-    clustered writes)."""
-    return df.sortWithinPartitions(*(exprs if exprs is not None else make_sort_exprs(df)))
-
-
 def make_sorted_runs(
     df: DataFrame,
     num_runs: int,

@@ -220,13 +220,13 @@ GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
 )
 def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL frontend."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT c_mktsegment, c_nationkey, count(*) AS n
-        FROM customer
+        FROM {customer}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        """
+        """,
+        customer=table(spark, sf_dir, "customer"),
     )
 
 

@@ -149,12 +149,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5-deep iteration plan optimizes and executes as ONE job, and the five
     # eager checkpoint jobs it replaces were pure scheduling floor.
     # Round 14: the unrolled iterations build as ONE spark.sql() program
-    # over the pinned edge/node views instead of ~20 chained DataFrame ops
-    # (each op paid a py4j round trip + eager re-analysis of the growing
-    # 5-iteration tree); the arithmetic is the exact-integer-division
-    # replica of the old idiv() — ((a - a%b)/b) cast long — term for term.
-    edges.createOrReplaceTempView("pr_edges_v")
-    nodes.createOrReplaceTempView("pr_nodes_v")
+    # over the pinned edges and nodes, passed in as its {edges} / {nodes}
+    # arguments, instead of ~20 chained DataFrame ops (each op paid a py4j
+    # round trip + eager re-analysis of the growing 5-iteration tree); the
+    # arithmetic is the exact-integer-division replica of the old idiv() —
+    # ((a - a%b)/b) cast long — term for term.  The program text goes
+    # through str.format: placeholders are {edges} in the plain strings
+    # and {{nodes}} in the f-string.
 
     def idiv_sql(a: str, b: str) -> str:
         # exact integer division on longs: a - a%b is an exact multiple of
@@ -163,10 +164,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     damped = idiv_sql("coalesce(i.s_u, CAST(0 AS BIGINT)) * 85", "100")
     ctes = [
-        "deg AS (SELECT src, count(*) AS outdeg FROM pr_edges_v GROUP BY src)",
+        "deg AS (SELECT src, count(*) AS outdeg FROM {edges} GROUP BY src)",
         """cs AS (
   SELECT e.src, e.dst, d.outdeg
-  FROM pr_edges_v e JOIN deg d ON e.src = d.src)""",
+  FROM {edges} e JOIN deg d ON e.src = d.src)""",
         f"""inc0 AS (
   SELECT dst AS node, sum(c) AS s_u FROM (
     SELECT dst, {idiv_sql(f"CAST({rank0} AS BIGINT)", "outdeg")} AS c FROM cs)
@@ -189,9 +190,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         + f"""
 SELECT nd.node AS user_id,
        {_X.sparksql_exact_round(rank_u, 12, 6)} AS pagerank
-FROM pr_nodes_v nd LEFT JOIN {fin} i ON nd.node = i.node
+FROM {{nodes}} nd LEFT JOIN {fin} i ON nd.node = i.node
 ORDER BY pagerank DESC, user_id ASC
-LIMIT 20"""
+LIMIT 20""",
+        edges=edges,
+        nodes=nodes,
     )
 
 

@@ -190,16 +190,19 @@ def dup_spans(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame:
     hash_sql = {
         T.hash64: "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)",
         T.fast_hash64: "xxhash64({x})",
-    }[hash_fn].format(x=f"substring(text, p, {SPAN_W})")
-    spread(table(spark, sf_dir, "documents")).createOrReplaceTempView(
-        "dupspans_docs_sp"
-    )
+    }.get(hash_fn)
+    if hash_sql is None:
+        raise ValueError(
+            f"dup_spans: unsupported hash_fn {hash_fn!r}; "
+            "pass T.hash64 or T.fast_hash64"
+        )
+    hash_sql = hash_sql.format(x=f"substring(text, p, {SPAN_W})")
     return spark.sql(f"""
 WITH spans AS (
   SELECT DISTINCT doc_id, {hash_sql} AS s FROM (
     SELECT doc_id, text,
            explode(sequence(1, length(text) - {SPAN_W - 1}, {SPAN_STRIDE})) AS p
-    FROM dupspans_docs_sp WHERE length(text) >= {SPAN_W}
+    FROM {{docs}} WHERE length(text) >= {SPAN_W}
   )
 ),
 wnd AS (SELECT doc_id, count(1) OVER (PARTITION BY s) AS nd FROM spans),
@@ -210,7 +213,7 @@ per_doc AS (
 )
 SELECT doc_id, n_spans, n_dup, round(n_dup / n_spans, 4) AS dup_frac
 FROM per_doc WHERE n_dup > 0
-""")
+""", docs=spread(table(spark, sf_dir, "documents")))
 
 
 # ---- round 4: winnowing fingerprints, fractional-epoch mixing, novelty ----
@@ -714,13 +717,14 @@ def containment_pairs(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame:
     # Round 14: post-pin chain as ONE spark.sql() program (same
     # construction-floor fix as jaccard_pairs; integer div arithmetic is
     # term-identical).  Rows proven identical.
-    sh = D.doc_shingles(table(spark, sf_dir, "documents"), hash_fn=hash_fn)
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("cont_sh_v")
+    sh = D.doc_shingles(
+        table(spark, sf_dir, "documents"), hash_fn=hash_fn
+    ).localCheckpoint(eager=True)
     return spark.sql(f"""
-WITH sizes AS (SELECT doc_id, count(1) AS n_sh FROM cont_sh_v GROUP BY doc_id),
+WITH sizes AS (SELECT doc_id, count(1) AS n_sh FROM {{sh}} GROUP BY doc_id),
 common AS (
   SELECT a.doc_id AS x, b.doc_id AS y, count(1) AS c
-  FROM cont_sh_v a JOIN cont_sh_v b
+  FROM {{sh}} a JOIN {{sh}} b
     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
 )
@@ -735,7 +739,7 @@ JOIN sizes sa ON x = sa.doc_id
 JOIN sizes sb ON y = sb.doc_id
 WHERE ((c * 1000) div sa.n_sh) >= {_CONT_MILLI}
    OR ((c * 1000) div sb.n_sh) >= {_CONT_MILLI}
-""")
+""", sh=sh)
 
 
 @register(
@@ -819,12 +823,12 @@ def docs_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all pairs; norms join back on doc_id (hash-partitioned).  A
     100 TB run adds the hot-term frequency cap jaccard documents.
 
-    Round 14: the whole dataflow is ONE spark.sql() program over two temp
-    views instead of ~14 chained DataFrame ops — each PySpark op pays a
-    py4j round trip plus an eager re-analysis of the growing tree
-    (measured ~30-80 ms/op at sf0.1, ~0.7 s of pure driver time for this
-    key), while one SQL string parses and analyzes the identical tree
-    once (~0.2 s).  Rows proven identical at sf0.1 and the oracle is
+    Round 14: the whole dataflow is ONE spark.sql() program over two
+    DataFrame arguments instead of ~14 chained DataFrame ops — each
+    PySpark op pays a py4j round trip plus an eager re-analysis of the
+    growing tree (measured ~30-80 ms/op at sf0.1, ~0.7 s of pure driver
+    time for this key), while one SQL string parses and analyzes the
+    identical tree once (~0.2 s).  Rows proven identical at sf0.1 and the oracle is
     unchanged.  The round-13 eager localCheckpoint on `kept` is gone with
     the rewrite: its three consumers read the same canonical
     exchange-rooted subtree, which runtime exchange reuse computes once
@@ -832,8 +836,6 @@ def docs_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself cost more driver time (plan->RDD conversion + a blocking job)
     than the reuse saves."""
     docs = table(spark, sf_dir, "documents")
-    spread(docs).createOrReplaceTempView("tfidf_docs_sp")
-    docs.createOrReplaceTempView("tfidf_docs")
     # Expression-level replica of the former DataFrame chain: double
     # literals carry an explicit DOUBLE cast (a bare 1.0 parses as
     # DECIMAL in Spark SQL and would change the idf arithmetic), ln ==
@@ -841,10 +843,10 @@ def docs_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
 WITH toks AS (
   SELECT doc_id, explode(filter(split(text, '\\\\s+'), w -> w != '')) AS term
-  FROM tfidf_docs_sp
+  FROM {{docs_sp}}
 ),
 tf AS (SELECT doc_id, term, count(1) AS tf FROM toks GROUP BY doc_id, term),
-n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tfidf_docs),
+n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM {{docs}}),
 wdf AS (SELECT doc_id, term, tf, count(1) OVER (PARTITION BY term) AS df FROM tf),
 kept AS (
   SELECT /*+ BROADCAST(n) */ doc_id, term,
@@ -871,4 +873,4 @@ JOIN (SELECT doc_id AS doc_a, n_u FROM norms) na USING (doc_a)
 JOIN (SELECT doc_id AS doc_b, n_u FROM norms) nb USING (doc_b)
 WHERE CAST(4.0 AS DOUBLE) * (CAST(p.num AS DOUBLE) * CAST(p.num AS DOUBLE))
       >= CAST(na.n_u AS DOUBLE) * CAST(nb.n_u AS DOUBLE)
-""")
+""", docs_sp=spread(docs), docs=docs)

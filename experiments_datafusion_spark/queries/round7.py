@@ -65,7 +65,6 @@ def _bpe_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w, freq, pos, sym): each distinct word exploded to dense 1-based
     character positions, carrying its corpus frequency.  Round 14: one
     spark.sql() program (identical tree, one analysis pass)."""
-    table(spark, sf_dir, "documents").createOrReplaceTempView("bpe_docs_v")
     return spark.sql("""
 SELECT w, freq, p0 + 1 AS pos, sym FROM (
   SELECT w, freq,
@@ -74,11 +73,11 @@ SELECT w, freq, p0 + 1 AS pos, sym FROM (
   FROM (
     SELECT w, count(1) AS freq FROM (
       SELECT explode(filter(split(text, '\\\\s+'), x -> x != '')) AS w
-      FROM bpe_docs_v
+      FROM {docs}
     ) GROUP BY w
   )
 )
-""")
+""", docs=table(spark, sf_dir, "documents"))
 
 
 def _bpe_rank_candidates(sym: DataFrame) -> list[tuple[str, str, int]]:
@@ -90,17 +89,16 @@ def _bpe_rank_candidates(sym: DataFrame) -> list[tuple[str, str, int]]:
     Round 14: one spark.sql() program per counting round (the merge APPLY
     stays a DataFrame chain — its pair literals come from corpus text and
     belong in Column objects, not interpolated SQL)."""
-    sym.createOrReplaceTempView("bpe_sym_v")
     rows = sym.sparkSession.sql(f"""
 SELECT sym, nxt, cnt FROM (
   SELECT sym, nxt, sum(freq) AS cnt FROM (
     SELECT freq, sym, lead(sym) OVER (PARTITION BY w ORDER BY pos) AS nxt
-    FROM bpe_sym_v
+    FROM {{sym}}
   ) WHERE nxt IS NOT NULL GROUP BY sym, nxt
 )
 ORDER BY cnt DESC, sym, nxt
 LIMIT {_BPE_CAND}
-""").collect()
+""", sym=sym).collect()
     return [(r["sym"], r["nxt"], int(r["cnt"])) for r in rows]
 
 
@@ -654,9 +652,7 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the banded self-join); round 14 builds the post-pin chain
     # as ONE spark.sql() program — integer shift/mask/xor expressions are
     # dialect-identical, rows proven identical.
-    _dhash_media(media).localCheckpoint(eager=True).createOrReplaceTempView(
-        "phash_hashes_v"
-    )
+    hashes = _dhash_media(media).localCheckpoint(eager=True)
     mask = (1 << _PH_BAND_BITS) - 1
     chunk_sql = ", ".join(
         f"(shiftright(dhash, {k * _PH_BAND_BITS}) & {mask})" for k in range(_PH_BANDS)
@@ -664,14 +660,14 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
 WITH chunks AS (
   SELECT media_id, dhash, posexplode(array({chunk_sql})) AS (band, ck)
-  FROM phash_hashes_v
+  FROM {{hashes}}
 )
 SELECT DISTINCT a.media_id AS x, b.media_id AS y,
        CAST(bit_count(a.dhash ^ b.dhash) AS BIGINT) AS hamming
 FROM chunks a JOIN chunks b
   ON a.band = b.band AND a.ck = b.ck AND a.media_id < b.media_id
 WHERE bit_count(a.dhash ^ b.dhash) <= {_PH_T}
-""")
+""", hashes=hashes)
 
 
 # ---- right-to-be-forgotten delete (data governance) ----------------------------

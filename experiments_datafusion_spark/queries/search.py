@@ -107,9 +107,7 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     first len(_BM25_TERMS) indices), and the r13 eager localCheckpoint on
     the wide tf table is gone: its consumers read the same canonical
     aggregate subtree, deduped at runtime by exchange reuse."""
-    docs = table(spark, sf_dir, "documents")
     all_terms = list(_BM25_TERMS) + list(_TERMS_B)
-    spread(docs).createOrReplaceTempView("rrf_docs_sp")
     tf_cols = ",\n         ".join(
         f"sum(CAST((term = '{t}') AS BIGINT)) AS tf_{i}"
         for i, t in enumerate(all_terms)
@@ -120,7 +118,7 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
 WITH toks AS (
   SELECT doc_id, explode(filter(split(text, '\\\\s+'), w -> w != '')) AS term
-  FROM rrf_docs_sp
+  FROM {{docs}}
 ),
 wide AS (
   SELECT doc_id, count(1) AS dl,
@@ -168,7 +166,7 @@ SELECT doc_id,
        CAST(CAST(rnk_a IS NOT NULL AS INT)
             + CAST(rnk_b IS NOT NULL AS INT) AS BIGINT) AS n_lists
 FROM fused
-""")
+""", docs=spread(table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -240,14 +238,11 @@ def freq_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # - document frequency stays the round-13 window count over
     #   partitionBy(term) (no vocab-sized broadcast; skew posture in the
     #   docstring above).
-    spread(table(spark, sf_dir, "documents")).createOrReplaceTempView(
-        "ftp_docs_sp"
-    )
     return spark.sql(f"""
 WITH toks AS (
   SELECT doc_id,
          explode(array_distinct(filter(split(text, '\\\\s+'), w -> w != ''))) AS term
-  FROM ftp_docs_sp
+  FROM {{docs}}
 ),
 wdf AS (
   SELECT doc_id, term, count(1) OVER (PARTITION BY term) AS df FROM toks
@@ -274,4 +269,4 @@ SELECT /*+ BROADCAST(stats) */ term_a, term_b,
        CAST((support * n_docs * 1000000) div (df_a * df_b) AS BIGINT) AS lift_micro
 FROM pairs CROSS JOIN stats
 WHERE support * 100 >= n_docs * {_PAIR_MIN_SUPPORT_PCT}
-""")
+""", docs=spread(table(spark, sf_dir, "documents")))

@@ -91,25 +91,26 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 14: one spark.sql() program (same tree, one analysis pass)
     instead of the ~9-op DataFrame chain; the broadcast hint and the
     syntactic join order are preserved, predicates push down identically."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("tpch_lineitem_v")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("tpch_orders_v")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("tpch_customer_v")
     return spark.sql("""
 SELECT /*+ BROADCAST(c) */
        l_orderkey,
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        date_format(o_orderdate, 'yyyy-MM-dd')            AS orderdate,
        o_orderpriority
-FROM tpch_lineitem_v l
-JOIN tpch_orders_v o   ON l.l_orderkey = o.o_orderkey
-JOIN tpch_customer_v c ON o.o_custkey = c.c_custkey
+FROM {lineitem} l
+JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c ON o.o_custkey = c.c_custkey
 WHERE c.c_mktsegment = 'BUILDING'
   AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
   AND l.l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
 GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10
-""")
+""",
+        lineitem=table(spark, sf_dir, "lineitem"),
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+    )
 
 
 @register(
@@ -170,28 +171,29 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 14: one spark.sql() program (same tree, one analysis pass)
     instead of the ~10-op DataFrame chain; broadcast hints and syntactic
     join order preserved."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("tpch_lineitem_v")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("tpch_orders_v")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("tpch_customer_v")
-    table(spark, sf_dir, "supplier").createOrReplaceTempView("tpch_supplier_v")
-    table(spark, sf_dir, "nation").createOrReplaceTempView("tpch_nation_v")
-    table(spark, sf_dir, "region").createOrReplaceTempView("tpch_region_v")
     return spark.sql("""
 SELECT /*+ BROADCAST(s), BROADCAST(n), BROADCAST(r) */
        n_name,
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM tpch_lineitem_v l
-JOIN tpch_orders_v o   ON l.l_orderkey = o.o_orderkey
-JOIN tpch_customer_v c ON o.o_custkey = c.c_custkey
-JOIN tpch_supplier_v s ON l.l_suppkey = s.s_suppkey
-                      AND c.c_nationkey = s.s_nationkey
-JOIN tpch_nation_v n   ON s.s_nationkey = n.n_nationkey
-JOIN tpch_region_v r   ON n.n_regionkey = r.r_regionkey
+FROM {lineitem} l
+JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c ON o.o_custkey = c.c_custkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+                  AND c.c_nationkey = s.s_nationkey
+JOIN {nation} n   ON s.s_nationkey = n.n_nationkey
+JOIN {region} r   ON n.n_regionkey = r.r_regionkey
 WHERE r.r_name = 'ASIA'
   AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY n_name
-""")
+""",
+        lineitem=table(spark, sf_dir, "lineitem"),
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+        supplier=table(spark, sf_dir, "supplier"),
+        nation=table(spark, sf_dir, "nation"),
+        region=table(spark, sf_dir, "region"),
+    )
 
 
 @register(
@@ -250,10 +252,6 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 14: one spark.sql() program (same tree, one analysis pass)
     instead of the ~9-op DataFrame chain; broadcast hint and syntactic
     join order preserved."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("tpch_lineitem_v")
-    table(spark, sf_dir, "orders").createOrReplaceTempView("tpch_orders_v")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("tpch_customer_v")
-    table(spark, sf_dir, "nation").createOrReplaceTempView("tpch_nation_v")
     return spark.sql("""
 SELECT /*+ BROADCAST(n) */
        c_custkey,
@@ -261,17 +259,22 @@ SELECT /*+ BROADCAST(n) */
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        round(c_acctbal, 2)                               AS acctbal,
        n_name
-FROM tpch_lineitem_v l
-JOIN tpch_orders_v o   ON l.l_orderkey = o.o_orderkey
-JOIN tpch_customer_v c ON o.o_custkey = c.c_custkey
-JOIN tpch_nation_v n   ON c.c_nationkey = n.n_nationkey
+FROM {lineitem} l
+JOIN {orders} o   ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c ON o.o_custkey = c.c_custkey
+JOIN {nation} n   ON c.c_nationkey = n.n_nationkey
 WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1997-07-01 00:00:00'
   AND l.l_returnflag = 'R'
 GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
-""")
+""",
+        lineitem=table(spark, sf_dir, "lineitem"),
+        orders=table(spark, sf_dir, "orders"),
+        customer=table(spark, sf_dir, "customer"),
+        nation=table(spark, sf_dir, "nation"),
+    )
 
 
 @register(

@@ -171,13 +171,13 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, i + 1, w
 
     spark.udtf.register("edfs_split_tokens", SplitTokens)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         SELECT t.doc_id, t.pos, t.token
-        FROM documents d, LATERAL edfs_split_tokens(d.doc_id, d.text) t
+        FROM {docs} d, LATERAL edfs_split_tokens(d.doc_id, d.text) t
         WHERE d.doc_id < 50
-        """
+        """,
+        docs=table(spark, sf_dir, "documents"),
     )
 
 

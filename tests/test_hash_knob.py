@@ -129,3 +129,10 @@ def test_posting_list_twins_identical_output(spark, sf_dir, slow_key, fast_key):
     fast = q[fast_key].fn(spark, sf_dir)
     assert fast.columns == slow.columns
     assert _rows(fast) == _rows(slow)
+
+
+def test_dup_spans_rejects_unknown_hash_fn(spark, sf_dir):
+    """dup_spans supports exactly the two hash knobs; any other callable
+    fails with a message that names them."""
+    with pytest.raises(ValueError, match=r"T\.hash64 or T\.fast_hash64"):
+        llm_extras.dup_spans(spark, sf_dir, T.fingerprint_md5)
