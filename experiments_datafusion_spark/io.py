@@ -90,45 +90,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-# --- generic readers (DataFusion-19 scan surface -> Spark built-ins) -------
-
-def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    opts = {"header": "true", "inferSchema": "false", **options}
-    reader = spark.read.options(**opts)
-    return reader.schema(schema).csv(path) if schema else reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    reader = spark.read.options(**options)
-    return reader.schema(schema).json(path) if schema else reader.json(path)
-
-
-# --- sinks ------------------------------------------------------------------
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def write_noop(df: DataFrame) -> None:
-    """Force full execution without materializing output — the bench sink."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def materialize_then_rmtree(df: DataFrame, root: str) -> DataFrame:
     """Eagerly materialize ``df`` (localCheckpoint pins its partitions in
     the block manager, detaching it from any files it was reading), then
@@ -146,20 +107,6 @@ def materialize_then_rmtree(df: DataFrame, root: str) -> DataFrame:
     out = df.localCheckpoint(eager=True)
     shutil.rmtree(root, ignore_errors=True)
     return out
-
-
-def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-line text source (one `value` column) — the raw-corpus entry
-    point for LLM-pipeline ingestion."""
-    return spark.read.text(path)
 
 
 def read_xml(spark: SparkSession, path: str, row_tag: str = "row", schema=None, **options) -> DataFrame:

@@ -7,10 +7,15 @@ snapshot diff, change-data-feed).
 
 Design rules, each one a scale decision:
 
-* **Snapshots are immutable.**  ``commit`` writes a fresh ``v{N}/`` parquet
-  directory and never edits an earlier one — copy-on-write is what keeps
-  old versions readable (time travel) and what makes vacuum a pure
-  metadata diff.
+* **Snapshots are immutable.**  Every commit writes its new files into a
+  fresh directory and never edits an earlier one — copy-on-write is what
+  keeps old versions readable (time travel) and what makes vacuum a pure
+  metadata diff.  Full commits and compactions write ``v{N}/``; appends
+  write a batch-unique ``b-*/`` and partial rewrites an ``rw-*/``.
+* **One write protocol per commit kind.**  Appends always rebase over
+  concurrent commits; partial rewrites always check the files they read
+  and rebase only over blind appends; a full commit never rebases.
+  Incremental compaction is a partial rewrite.
 * **Reads go through the manifest, not the directory.**  ``read`` hands
   Spark the version's explicit file list, exactly what a manifest-driven
   reader does; a file vacuumed away or an uncommitted stray in the same
@@ -35,6 +40,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import threading
 import uuid
 from dataclasses import dataclass
@@ -84,6 +90,76 @@ def _append_schema_ok(table_schema, batch_schema) -> bool:
     return True
 
 
+def _plain_path(p: str) -> str:
+    """A manifest path from a ``_metadata.file_path`` URI (or a path)."""
+    return p[len("file:"):] if p.startswith("file:") else p
+
+
+def _entry_schema(df: DataFrame) -> list:
+    """The ``schema`` list a log entry records for ``df``."""
+    return [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
+
+
+@contextlib.contextmanager
+def _removed_on_error(data_dir: str):
+    """Remove ``data_dir`` if the block raises: data written for a commit
+    that never published is referenced by nothing."""
+    try:
+        yield
+    except BaseException:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        raise
+
+
+def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None) -> list[dict]:
+    """Write ``df`` as parquet into the NEW directory ``data_dir`` and return
+    its manifest file dicts ``{"path", "size"}``, sorted by path.
+
+    ``stats_cols`` adds each file's write-time ``n_rows`` and per-column
+    ``stats`` {col: [lo, hi]} (ONE distributed aggregate over the files just
+    written); ``cluster_tag`` marks every file as a member of that
+    clustering cube (see ``SnapshotLog.commit``).  A failure after the
+    write removes ``data_dir``; a failed write leaves it alone, because
+    mode("error") on a name another writer took must not delete theirs."""
+    df.write.mode("error").parquet(data_dir)
+    with _removed_on_error(data_dir):
+        files = [
+            {"path": p, "size": os.path.getsize(p)}
+            for p in sorted(
+                os.path.join(data_dir, f)
+                for f in os.listdir(data_dir)
+                if f.endswith(".parquet")
+            )
+        ]
+        if stats_cols:
+            stats = file_stats(
+                df.sparkSession.read.parquet(*[f["path"] for f in files]), stats_cols
+            )
+            by_path = {_plain_path(r.file_path): r for r in stats}
+            for f in files:
+                r = by_path.get(f["path"])
+                if r is None:
+                    # an EMPTY part-file contributes no group to the stats
+                    # aggregate — record it as such
+                    f["n_rows"] = 0
+                    f["stats"] = {}
+                    continue
+                f["n_rows"] = r.n_rows
+                # a file whose stats column is all-NULL has no [lo, hi];
+                # omit that column's block (stats_only_agg/prune raise
+                # loudly on a missing block instead of min()-ing None)
+                f["stats"] = {
+                    c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
+                    for c in stats_cols
+                    if getattr(r, f"{c}_lo") is not None
+                    and getattr(r, f"{c}_hi") is not None
+                }
+        if cluster_tag:
+            for f in files:
+                f["cluster"] = list(cluster_tag)
+        return files
+
+
 class SnapshotLog:
     """Versioned snapshot log rooted at ``root``.
 
@@ -91,8 +167,12 @@ class SnapshotLog:
 
         root/_log/00000.json   {"version": 0, "note": ..., "files": [...]}
         root/_log/00001.json
-        root/v0/part-*.parquet   (immutable)
-        root/v1/part-*.parquet
+        root/v0/part-*.parquet       (immutable; full commits and compactions)
+        root/b-<uuid>/part-*.parquet (an append's batch)
+        root/rw-<uuid>/part-*.parquet (a partial rewrite's new files)
+
+    The manifest entry, not the directory, says which files a version
+    holds: an append's entry lists its parent's files plus its batch.
 
     EVERY commit kind carries the parent's SetTransaction map (``txns``)
     forward into its entry (round 12, VERDICT r11 missing #3): one
@@ -159,15 +239,16 @@ class SnapshotLog:
     def _parent_txns(self, parent: int) -> dict:
         """The SetTransaction map to carry into a child of ``parent`` —
         the parent entry's ``txns`` (every commit kind carries it, class
-        docstring), empty for a fresh table.
+        docstring), empty for a fresh table.  Read at the tip, it is the
+        map a replay check consults (``append_once``, ``commit_append``).
 
         LEGACY-LOG PROMOTION (round 13, ADVICE r12 #3): on a log written
         before the carry-forward rule, the tip may LACK ``txns`` while an
         older entry holds one (e.g. a pre-round-12 compaction interposed
         after the last ``append_once``).  Seeding the child from the bare
-        parent would publish a map that SHADOWS those older records from
-        ``_latest_txns``'s first-entry-with-map walk-back — a replayed
-        batch from another app would then re-commit (duplicate rows).  So
+        parent would publish a map that SHADOWS those older records — a
+        replayed batch from another app would then re-commit (duplicate
+        rows).  So
         when the parent carries no map, walk back to the newest entry
         that does and PROMOTE it into the child; once promoted, every
         descendant carries it and the walk-back is O(1) again."""
@@ -193,6 +274,12 @@ class SnapshotLog:
             entry["txns"] = txns
 
     # ---- write side ---------------------------------------------------------
+    #
+    # One body per commit kind.  A FULL commit (``commit``; ``compact``
+    # through it) replaces the table, so nothing commutes with it and it
+    # does not rebase.  An APPEND commutes with every concurrent commit and
+    # always rebases.  A REWRITE (DELETE/UPDATE, ``compact_incremental``)
+    # rebases over blind appends and aborts on a race for the same files.
 
     def commit(
         self,
@@ -227,79 +314,33 @@ class SnapshotLog:
         version = parent + 1
         data_dir = os.path.join(self.root, f"v{version}")
         try:
-            df.write.mode("error").parquet(data_dir)
+            files = _write_files(df, data_dir, stats_cols, cluster_tag)
         except Exception as exc:
             # two FULL commits racing the same version collide at the
             # data-dir write (mode("error") on v{N}) before either
             # reaches the log — surface it as the conflict it is.  A
             # full rewrite READ the whole table, so per the Delta rules
             # NO concurrent commit commutes with it: there is no rebase,
-            # the caller must re-derive (commit_rewrite_checked /
-            # commit_append_rebased are the rebaseable shapes).
+            # the caller must re-derive.
             if "PATH_ALREADY_EXISTS" in str(exc) or "already exists" in str(exc):
                 raise CommitConflict(
                     f"data dir v{version} already exists — another writer "
                     "is committing this version (full commits do not rebase)"
                 ) from exc
             raise
-        try:
-            files = sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-            entry = {
-                "version": version,
-                "note": note,
-                "kind": kind,
-                "schema": [
-                    [f.name, f.dataType.simpleString(), f.nullable] for f in df.schema
-                ],
-                "files": [{"path": p, "size": os.path.getsize(p)} for p in files],
-            }
-            self._set_txns(entry, self._parent_txns(parent))
-            if stats_cols:
-                spark = df.sparkSession
-                stats = file_stats_nd(spark.read.parquet(*files), stats_cols)
-                by_path = {
-                    r.file_path[len("file:"):]
-                    if r.file_path.startswith("file:")
-                    else r.file_path: r
-                    for r in stats
-                }
-                for f in entry["files"]:
-                    r = by_path.get(f["path"])
-                    if r is None:
-                        # an EMPTY part-file contributes no group to the
-                        # stats aggregate — record it as such (the old
-                        # KeyError here orphaned the data dir)
-                        f["n_rows"] = 0
-                        f["stats"] = {}
-                        continue
-                    f["n_rows"] = r.n_rows
-                    # a file whose stats column is all-NULL has no [lo, hi];
-                    # omit that column's block (stats_only_agg/prune raise
-                    # loudly on a missing block instead of min()-ing None)
-                    f["stats"] = {
-                        c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
-                        for c in stats_cols
-                        if getattr(r, f"{c}_lo") is not None
-                        and getattr(r, f"{c}_hi") is not None
-                    }
-            if cluster_tag:
-                for f in entry["files"]:
-                    f["cluster"] = list(cluster_tag)
+        entry = {
+            "version": version,
+            "note": note,
+            "kind": kind,
+            "schema": _entry_schema(df),
+            "files": files,
+        }
+        self._set_txns(entry, self._parent_txns(parent))
+        # a failed publish (CommitConflict included) must not leave an
+        # orphaned v{N} directory — the next commit at this version
+        # writes mode("error") and would wedge on the leftovers
+        with _removed_on_error(data_dir):
             self._publish(version, entry)
-        except BaseException:
-            # anything failing AFTER the parquet write but BEFORE the
-            # publish (stats drift, CommitConflict) must not leave an
-            # orphaned v{N} directory — the next commit at this version
-            # writes mode("error") and would wedge on the leftovers
-            import shutil
-
-            with contextlib.suppress(FileNotFoundError):
-                shutil.rmtree(data_dir)
-            raise
         return version
 
     def commit_append(
@@ -307,10 +348,11 @@ class SnapshotLog:
         df: DataFrame,
         note: str = "",
         kind: str = "data",
+        attempts: int = 10,
         txn: tuple[str, int] | None = None,
     ) -> int:
         """APPEND commit: write only the NEW rows' files; the manifest entry
-        lists the parent version's files PLUS the new ones — the add-file
+        lists the latest version's files PLUS the new ones — the add-file
         incremental commit every streaming ingest uses (a full-rewrite
         commit would copy the whole table per micro-batch; this one's write
         cost is O(batch) and its log cost O(live files)).  Reads need no
@@ -318,137 +360,49 @@ class SnapshotLog:
         version, vacuum, stats manifests, and the MoR reader all work
         unchanged.
 
+        CONCURRENT-SAFE: the batch is written ONCE to a batch-unique
+        ``b-*`` directory (readers never list directories — the manifest
+        IS the file list — so data-dir naming is free), then published
+        through ``commit_append_files``, which rebases on CommitConflict:
+        it re-reads the new latest version, re-checks the schema, and
+        re-publishes the SAME data files under the next version.  This is
+        Delta's optimistic rebase for blind appends — an append commutes
+        with any concurrent commit, so a retry never rewrites data, only
+        the O(live files) entry.
+
         SCHEMA ENFORCEMENT (what a table format's append does that a bare
-        directory write doesn't): the batch's schema must equal the
-        table's committed schema — a drifted producer fails HERE, loudly,
-        instead of poisoning the table with files a later scan can't
-        union.  Schema EVOLUTION stays an explicit full commit (see
+        directory write doesn't): the batch's schema must match the
+        table's committed schema — a drifted producer fails loudly instead
+        of poisoning the table with files a later scan can't union.
+        Schema EVOLUTION stays an explicit full commit (see
         table_time_travel_multi's ADD COLUMN dataflow).
 
         ``txn=(app_id, txn_version)`` records the Delta SetTransaction
-        action ATOMICALLY with the commit (round 12, ADVICE r11 #1): the
-        dedup record is part of the entry the put-if-absent link
-        publishes, so no crash, retry, or concurrent reader can observe
-        the append without its txn record.  A replayed batch (txn_version
-        <= the recorded one) is a no-op returning the recorded commit
-        version — and writes nothing."""
-        parent = self.latest_version()
-        txns = self._parent_txns(parent)
+        action ATOMICALLY with the commit (round 12): the dedup record is
+        part of the entry the put-if-absent link publishes, so no crash,
+        retry, or concurrent reader can observe the append without its txn
+        record.  A replayed batch (txn_version <= the recorded one) is a
+        no-op returning the recorded commit version, answered from the
+        carried map at the tip BEFORE anything is written; a replay that
+        lands concurrently is caught by the rebase and its batch removed."""
         if txn is not None:
-            app_id, txn_version = txn
-            rec = txns.get(app_id)
-            if rec is not None and int(rec[0]) >= int(txn_version):
-                return int(rec[1])  # replay: answered from the carried map
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
-        if parent >= 0:
-            pe = self.entry(parent)
-            if pe.get("kind") == "staged":
-                # appends extend the PUBLISHED lineage; an append on top of
-                # a staged (unpublished) snapshot would carry its files
-                # into a data entry and leak the un-audited batch to
-                # consumers — publish or abandon the staged version first
-                raise ValueError(
-                    f"cannot append onto staged version {parent}; "
-                    "publish_staged or vacuum it first"
-                )
-            want = pe.get("schema")
-            if want is not None and not _append_schema_ok(want, schema):
-                raise ValueError(
-                    f"append schema mismatch: table has {want}, batch has {schema}"
-                )
-            if want is not None:
-                # the entry records the TABLE's schema: carried-forward
-                # files may hold NULLs a non-nullable batch doesn't
-                schema = want
-        parent_files = (
-            # carry the parent's file dicts VERBATIM (round 13): an append
-            # must not strip carried files' write-time stats / cluster
-            # tags — rebuilding {path, size} from the manifest silently
-            # un-clustered the table's metadata on every ingest
-            [dict(f) for f in self.entry(parent)["files"]]
-            if parent >= 0
-            else []
-        )
-        version = parent + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df.write.mode("error").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        entry = {
-            "version": version,
-            "note": note,
-            "kind": kind,
-            "schema": schema,
-            "files": parent_files
-            + [{"path": p, "size": os.path.getsize(p)} for p in new_files],
-        }
-        if txn is not None:
-            txns[txn[0]] = [int(txn[1]), version]
-        self._set_txns(entry, txns)
-        self._publish(version, entry)
-        return version
-
-    def commit_append_rebased(
-        self,
-        df: DataFrame,
-        note: str = "",
-        kind: str = "data",
-        attempts: int = 10,
-        txn: tuple[str, int] | None = None,
-    ) -> int:
-        """CONCURRENT-SAFE append: the multi-writer version of
-        ``commit_append``.  The batch's data files are written ONCE to a
-        batch-unique directory (readers never list directories — the
-        manifest IS the file list — so data-dir naming is free), then the
-        log entry is published put-if-absent; on CommitConflict the append
-        REBASES — re-reads the new latest version, re-derives its live
-        file list, re-checks the schema, and re-publishes the SAME data
-        files under the next version.  This is exactly Delta's optimistic
-        rebase for blind appends: appends commute with any concurrent
-        commit (the entry is always new-latest's files + this batch's), so
-        the retry never rewrites data, only the O(live files) entry.  At
-        100 TB this is what lets N streaming writers share one table.
-
-        ``txn`` as in ``commit_append`` — and because the map is re-read
-        from the NEW parent on every rebase attempt, two racing apps'
-        records can never clobber each other: the loser's retry carries
-        the winner's record forward and merges its own in (the two-app
-        interposition test pins this).  A rebase that discovers the txn
-        already recorded (this writer's own batch replayed concurrently)
-        returns the recorded version and removes its now-orphan data."""
-        import shutil
-        import uuid
-
+            rec = self._parent_txns(self.latest_version()).get(txn[0])
+            if rec is not None and int(rec[0]) >= int(txn[1]):
+                return int(rec[1])  # replay: nothing written at all
         data_dir = os.path.join(self.root, f"b-{uuid.uuid4().hex[:12]}")
-        df.write.mode("error").parquet(data_dir)
-        new_files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-        ]
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df.schema]
-        try:
+        new_files = _write_files(df, data_dir)
+        # attempts exhausted / schema drift / staged parent: the batch
+        # never became referenced — remove the orphan data directory
+        with _removed_on_error(data_dir):
             return self.commit_append_files(
                 new_files,
-                schema,
+                _entry_schema(df),
                 note=note,
                 kind=kind,
                 attempts=attempts,
                 txn=txn,
                 on_replay=lambda: shutil.rmtree(data_dir, ignore_errors=True),
             )
-        except BaseException:
-            # attempts exhausted / schema drift / staged parent: the batch
-            # never became referenced — remove the orphan data directory
-            # (same cleanup contract as commit()'s failure path)
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
 
     def commit_append_files(
         self,
@@ -460,23 +414,31 @@ class SnapshotLog:
         txn: tuple[str, int] | None = None,
         on_replay=None,
     ) -> int:
-        """The publish half of ``commit_append_rebased``, factored so
-        callers that already hold written data files — the snaplog
-        streaming SINK's driver-side commit of executor-written parquet
-        (round 12), exactly the Delta sink's task-files → one-log-commit
-        shape — share the same rebase loop, schema check, txn-map merge,
-        and put-if-absent publish.  ``new_files`` is ``[{"path", "size"},
-        ...]``; ``schema`` is the entry-schema list.  ``on_replay`` is
-        invoked (before returning the recorded version) when ``txn``
-        reveals the batch already landed, so the caller can drop its
-        now-orphan files."""
+        """The publish half of ``commit_append``, factored so callers that
+        already hold written data files — the snaplog streaming SINK's
+        driver-side commit of executor-written parquet (round 12), exactly
+        the Delta sink's task-files → one-log-commit shape — share the
+        same rebase loop, schema check, txn-map merge, and put-if-absent
+        publish.  ``new_files`` is ``[{"path", "size"}, ...]``; ``schema``
+        is the entry-schema list.  ``on_replay`` is invoked (before
+        returning the recorded version) when ``txn`` reveals the batch
+        already landed, so the caller can drop its now-orphan files.
+
+        Because the txn map is re-read from the NEW parent on every rebase
+        attempt, two racing apps' records never clobber each other: the
+        loser's retry carries the winner's record forward and merges its
+        own in."""
         for _ in range(attempts):
             parent = self.latest_version()
             entry_schema = schema
+            parent_files: list[dict] = []
             txns: dict = {}
             if parent >= 0:
                 pe = self.entry(parent)
                 if pe.get("kind") == "staged":
+                    # appends extend the PUBLISHED lineage; an append on
+                    # top of a staged (unpublished) snapshot would carry its
+                    # files into a data entry and leak the un-audited batch
                     raise ValueError(
                         f"cannot append onto staged version {parent}; "
                         "publish_staged or vacuum it first"
@@ -488,7 +450,13 @@ class SnapshotLog:
                         f"batch has {schema}"
                     )
                 if want is not None:
-                    entry_schema = want  # the TABLE's schema (see commit_append)
+                    # the entry records the TABLE's schema: carried-forward
+                    # files may hold NULLs a non-nullable batch doesn't
+                    entry_schema = want
+                # carry the parent's file dicts VERBATIM (round 13): an
+                # append must not strip carried files' write-time stats /
+                # cluster tags / schema_v
+                parent_files = [dict(f) for f in pe["files"]]
                 # _parent_txns, not pe["txns"]: a legacy tip without the
                 # carry rule must promote older apps' records (ADVICE r12 #3)
                 txns = (
@@ -505,12 +473,6 @@ class SnapshotLog:
                         on_replay()
                     return int(rec[1])
                 txns[txn[0]] = [int(txn[1]), parent + 1]
-            parent_files = (
-                # verbatim carry: keep stats/cluster blocks (round 13)
-                [dict(f) for f in self.entry(parent)["files"]]
-                if parent >= 0
-                else []
-            )
             entry = {
                 "version": parent + 1,
                 "note": note,
@@ -532,77 +494,27 @@ class SnapshotLog:
         self,
         df_new: DataFrame,
         keep_files,
-        note: str = "",
-        kind: str = "data",
-    ) -> int:
-        """PARTIAL-rewrite commit — the real copy-on-write DELETE/UPDATE
-        shape: the new manifest carries ``keep_files`` forward UNTOUCHED
-        (they are referenced, never copied) and adds the rewritten files
-        from ``df_new``; only the affected slice of the table is ever
-        written.  Cost is O(affected files) data + O(live files) log,
-        independent of table size — the difference between this and a
-        whole-table rewrite is the entire point of clustering + manifest
-        stats (prune the affected set first, then rewrite just it)."""
-        parent = self.latest_version()
-        by_path = (
-            {f["path"]: f for f in self.entry(parent)["files"]}
-            if parent >= 0
-            else {}
-        )
-        version = parent + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df_new.write.mode("error").parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-        entry = {
-            "version": version,
-            "note": note,
-            "kind": kind,
-            "schema": [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in df_new.schema
-            ],
-            # keep_files may arrive as file: URIs (the _metadata.file_path
-            # form stats manifests carry); normalize to plain paths, and
-            # carry the parent's dict verbatim when the path is known —
-            # a partial rewrite must not strip kept files' stats/cluster
-            # blocks (round 13)
-            "files": [
-                dict(by_path.get(p) or {"path": p, "size": os.path.getsize(p)})
-                for p in sorted(
-                    k[len("file:"):] if k.startswith("file:") else k
-                    for k in keep_files
-                )
-            ]
-            + [{"path": p, "size": os.path.getsize(p)} for p in new_files],
-        }
-        self._set_txns(entry, self._parent_txns(parent))
-        self._publish(version, entry)
-        return version
-
-    def commit_rewrite_checked(
-        self,
-        df_new: DataFrame,
-        keep_files,
         removed_files,
         note: str = "",
         kind: str = "data",
         attempts: int = 10,
         on_publish_attempt=None,
+        stats_cols=None,
+        cluster_tag=None,
     ) -> int:
-        """CONCURRENT-SAFE partial rewrite — the optimistic-concurrency
-        half that ``commit_rewrite`` lacks (Delta's conflict-detection
-        rules, public spec, re-expressed over the put-if-absent log).
+        """PARTIAL-rewrite commit — the copy-on-write DELETE/UPDATE shape,
+        with Delta's optimistic-concurrency conflict rules (public spec)
+        re-expressed over the put-if-absent log.  Only the affected slice
+        of the table is ever written: cost is O(affected files) data +
+        O(live files) log, independent of table size.
 
-        The caller derived ``keep_files`` (carried forward untouched) and
-        ``removed_files`` (the files it rewrote into ``df_new``) from some
-        snapshot it READ.  The new data is written ONCE to a
-        rewrite-unique directory; then the publish loop re-reads the
-        CURRENT latest version and applies the compatibility check before
-        every attempt:
+        The caller derived ``keep_files`` (carried forward untouched, by
+        reference) and ``removed_files`` (the files it rewrote into
+        ``df_new``) from some snapshot it READ; either list may hold
+        ``file:`` URIs (the ``_metadata.file_path`` form stats manifests
+        carry).  The new data is written ONCE to a rewrite-unique ``rw-*``
+        directory; then the publish loop re-reads the CURRENT latest
+        version and applies the compatibility check before every attempt:
 
         * every file this transaction read (keep + removed) must still be
           live — a concurrent commit that removed/rewrote any of them
@@ -613,42 +525,28 @@ class SnapshotLog:
           this rewrite — the rebase carries them forward unchanged, which
           is exactly Delta's WriteSerializable rule: an append racing a
           delete lands as if it happened after it (appended rows are NOT
-          re-filtered by the delete predicate; a reader wanting full
-          Serializable must serialize at the application level).
+          re-filtered by the delete predicate).
 
+        The new entry is every live file except ``removed_files`` (dicts
+        verbatim: stats / cluster / schema_v survive) plus the new files.
         On CommitConflict the loop rebases and retries; data files are
-        never rewritten — the retry cost is one O(live files) log entry.
-        At 100 TB this is what lets compaction/DELETE/UPDATE maintenance
-        run continuously against a table streaming writers are appending
-        to.
+        never rewritten.  A rewrite needs a table to rewrite and refuses a
+        staged tip.  ``stats_cols`` / ``cluster_tag`` as in ``commit``
+        (compaction records them on the files it writes).
 
         ``on_publish_attempt`` (round 12): an observability hook called
         with the 0-based attempt index just before each publish attempt —
         the supported way for tests and race-demonstration keys to
-        interpose a concurrent commit deterministically, replacing the
-        ``_publish`` monkey-patch the round-11 key used (VERDICT r11
-        wrong #3)."""
-        import shutil
-
-        data_dir = os.path.join(self.root, f"rw-{uuid.uuid4().hex[:12]}")
-        df_new.write.mode("error").parquet(data_dir)
-        new_files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-        ]
-
-        def norm(p: str) -> str:
-            return p[len("file:"):] if p.startswith("file:") else p
-
-        keep = {norm(p) for p in keep_files}
-        removed = {norm(p) for p in removed_files}
+        interpose a concurrent commit deterministically."""
+        keep = {_plain_path(p) for p in keep_files}
+        removed = {_plain_path(p) for p in removed_files}
         read_set = keep | removed
-        schema = [[f.name, f.dataType.simpleString(), f.nullable] for f in df_new.schema]
-        try:
+        data_dir = os.path.join(self.root, f"rw-{uuid.uuid4().hex[:12]}")
+        new_files = _write_files(df_new, data_dir, stats_cols, cluster_tag)
+        schema = _entry_schema(df_new)
+        # abort paths (ConcurrentModification, staged parent, attempts
+        # exhausted) must not leave the rw-* data directory behind
+        with _removed_on_error(data_dir):
             for attempt in range(attempts):
                 parent = self.latest_version()
                 if parent < 0:
@@ -671,9 +569,6 @@ class SnapshotLog:
                     "note": note,
                     "kind": kind,
                     "schema": schema,
-                    # rebase: everything live except what we rewrote — which
-                    # carries concurrently APPENDED files forward — plus ours
-                    # (dicts verbatim: stats/cluster/schema_v survive, r13)
                     "files": [
                         dict(f)
                         for p, f in sorted(live.items())
@@ -692,12 +587,6 @@ class SnapshotLog:
             raise CommitConflict(
                 f"rewrite did not land after {attempts} rebase attempts"
             )
-        except BaseException:
-            # abort paths (ConcurrentModification, staged parent, attempts
-            # exhausted) must not leave the rw-* data directory behind —
-            # same orphan-cleanup contract as commit() (ADVICE r11)
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
 
     # ---- log side -----------------------------------------------------------
     #
@@ -837,7 +726,7 @@ class SnapshotLog:
 
         ``min_age_s`` (round 12) is the in-flight-writer guard Delta gets
         from its modification-time retention: an optimistic writer
-        (rebased append, checked rewrite, the streaming sink's task
+        (append, rewrite, incremental compaction, the streaming sink's task
         files) writes data BEFORE its log entry publishes, so a vacuum
         racing it would sweep the not-yet-referenced files and the commit
         would publish dangling paths.  Files younger than ``min_age_s``
@@ -927,22 +816,15 @@ class SnapshotLog:
         n = max(1, math.ceil(total / target_file_bytes))
         df = self.read(spark, v)
         if sort_cols:
-            df = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
             return self.commit(
-                df,
+                _clustered(df, n, sort_cols=sort_cols),
                 note=f"compact v{v} -> {n} files clustered on {list(sort_cols)}",
                 stats_cols=list(sort_cols),
                 cluster_tag=list(sort_cols),
             )
         if zorder_cols:
-            df = (
-                df.withColumn("_z", zorder_col([F.col(c) for c in zorder_cols]))
-                .repartitionByRange(n, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
             return self.commit(
-                df,
+                _clustered(df, n, zorder_cols=zorder_cols),
                 note=f"compact v{v} -> {n} files zordered on {list(zorder_cols)}",
                 stats_cols=list(zorder_cols),
                 cluster_tag=["z:" + c for c in zorder_cols],
@@ -979,7 +861,12 @@ class SnapshotLog:
         exchange for O(new data) writes; a periodic full ``compact``
         resets it.  Returns the current version unchanged when every
         file is already clustered (idempotent, like OPTIMIZE on a
-        settled table)."""
+        settled table).
+
+        The result publishes through ``commit_rewrite`` (keep = the settled
+        cube files, removed = the rewritten ones), so it rebases over
+        concurrent appends, aborts on a concurrent change to the files it
+        read, and refuses a staged tip."""
         import math
 
         if bool(sort_cols) == bool(zorder_cols):
@@ -997,83 +884,23 @@ class SnapshotLog:
         total = sum(f["size"] for f in todo)
         n = max(1, math.ceil(total / target_file_bytes))
         df = self._read_manifest_files(spark, entry, todo)
-        if sort_cols:
-            df = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-        else:
-            df = (
-                df.withColumn("_z", zorder_col([F.col(c) for c in cols]))
-                .repartitionByRange(n, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        version = v + 1
-        data_dir = os.path.join(self.root, f"v{version}")
-        df.write.mode("error").parquet(data_dir)
-        try:
-            paths = sorted(
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            )
-            new_files = [{"path": p, "size": os.path.getsize(p)} for p in paths]
-            stats = file_stats_nd(spark.read.parquet(*paths), cols)
-            by_path = {
-                r.file_path[len("file:"):]
-                if r.file_path.startswith("file:")
-                else r.file_path: r
-                for r in stats
-            }
-            for f in new_files:
-                r = by_path.get(f["path"])
-                f["cluster"] = spec
-                if r is None:
-                    f["n_rows"] = 0
-                    f["stats"] = {}
-                    continue
-                f["n_rows"] = r.n_rows
-                f["stats"] = {
-                    c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
-                    for c in cols
-                    if getattr(r, f"{c}_lo") is not None
-                    and getattr(r, f"{c}_hi") is not None
-                }
-            new_entry = {
-                "version": version,
-                "note": (
-                    f"incremental compact: {len(todo)} unclustered file(s) "
-                    f"-> {len(new_files)} cube file(s) on {cols}; "
-                    f"{len(keep)} settled file(s) untouched"
-                ),
-                "kind": "compacted",
-                "schema": entry.get("schema"),
-                # settled cube files carried VERBATIM (stats + tag intact)
-                "files": [dict(f) for f in keep] + new_files,
-            }
-            self._set_txns(new_entry, self._parent_txns(v))
-            self._publish(version, new_entry)
-        except BaseException:
-            import shutil
+        return self.commit_rewrite(
+            _clustered(df, n, sort_cols, zorder_cols),
+            keep_files=[f["path"] for f in keep],
+            removed_files=[f["path"] for f in todo],
+            note=(
+                f"incremental compact: {len(todo)} unclustered file(s) "
+                f"-> one cube on {cols}; {len(keep)} settled file(s) untouched"
+            ),
+            kind="compacted",
+            stats_cols=cols,
+            cluster_tag=spec,
+        )
 
-            with contextlib.suppress(FileNotFoundError):
-                shutil.rmtree(data_dir)
-            raise
-        return version
-
-    def stats_manifest(self, spark: SparkSession, version: int, col: str):
-        """Per-file [lo, hi, n_rows] stats for ``col`` — the add-file stats
-        a table format records at write time (O(files) driver rows)."""
-        return file_stats(self.read(spark, version), col)
-
-    def stats_manifest_nd(self, spark: SparkSession, version: int, cols):
-        """Multi-column add-file stats (see file_stats_nd)."""
-        return file_stats_nd(self.read(spark, version), cols)
-
-    @staticmethod
-    def prune(stats, lo, hi) -> list[str]:
-        """Planning-time file skipping: keep files whose [lo, hi] interval
-        intersects the predicate band (conservative — the residual filter
-        must stay on the scan)."""
-        return [r.file_path for r in stats if r.hi >= lo and r.lo <= hi]
+    def stats_manifest(self, spark: SparkSession, version: int, cols):
+        """Per-file add-file stats for ``cols`` over a version (see
+        ``file_stats``) — O(files) driver rows."""
+        return file_stats(self.read(spark, version), cols)
 
     def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
         """Read a subset of an entry's manifest files as TABLE rows.  A
@@ -1153,24 +980,31 @@ class EvolvingLog(SnapshotLog):
 
     def append_columns(self, df: DataFrame, note: str = "", txn=None) -> int:
         """Append commit: new files are written under the CURRENT live
-        schema; carried-forward parent files keep their original
-        schema_v (they are referenced, never rewritten).  ``txn`` as in
+        schema; carried-forward files keep their original schema_v (they
+        are referenced, never rewritten — the verbatim dict carry keeps
+        the stamp, also for files a rebase carried in).  ``txn`` as in
         ``commit_append`` (the SetTransaction record lands in the commit
         entry; the _stamp below only re-stamps column metadata on the
-        version this writer just won)."""
+        version this writer just won).
+
+        The append rebases like any other, so an EVOLVE may land between
+        the schema check and the publish.  The entry then keeps the
+        evolved live columns, and the batch's files resolve through the
+        parent's generation, the one they were written under — stamping
+        the pre-evolve columns would silently revert the evolve."""
         parent = self.latest_version()
-        columns = self.entry(parent)["columns"]
+        columns = [tuple(c) for c in self.entry(parent)["columns"]]
         if [c[1] for c in columns] != list(df.columns):
             raise ValueError(
                 f"append schema mismatch: live columns {columns}, df {df.columns}"
             )
-        parent_sv = {
-            f["path"]: f["schema_v"] for f in self.entry(parent)["files"]
-        }
         v = self.commit_append(df, note=note, txn=txn)
         if txn is not None and v <= parent:
             return v  # replayed batch: nothing committed, nothing to stamp
-        self._stamp(v, [tuple(c) for c in columns], schema_v_of=parent_sv)
+        live = self._live_cols_at(v - 1)
+        written_at = v if live == columns else parent
+        sv_of = {f["path"]: f.get("schema_v", written_at) for f in self.entry(v)["files"]}
+        self._stamp(v, live, schema_v_of=sv_of)
         return v
 
     def evolve(self, new_columns, note: str = "", attempts: int = 10) -> int:
@@ -1252,33 +1086,7 @@ class EvolvingLog(SnapshotLog):
         }
         self._stamp(version, cols, schema_v_of=sv_of)
 
-    def _rewrite_cols_checked(self, df: DataFrame) -> list:
-        cols = self._live_cols_at(self.latest_version())
-        if [c[1] for c in cols] != list(df.columns):
-            raise ValueError(
-                f"rewrite schema mismatch: live columns {cols}, "
-                f"df {df.columns}"
-            )
-        return cols
-
     def commit_rewrite(
-        self,
-        df_new: DataFrame,
-        keep_files,
-        note: str = "",
-        kind: str = "data",
-    ) -> int:
-        """Partial rewrite under the id mapping (round 13): the rewritten
-        files land at the LIVE generation, kept files keep their
-        schema_v, and the entry is re-stamped with the live columns —
-        without this the inherited path published an entry with neither,
-        breaking every subsequent evolved read (KeyError)."""
-        cols = self._rewrite_cols_checked(df_new)
-        v = super().commit_rewrite(df_new, keep_files, note=note, kind=kind)
-        self._stamp_keep(v, cols)
-        return v
-
-    def commit_rewrite_checked(
         self,
         df_new: DataFrame,
         keep_files,
@@ -1287,12 +1095,22 @@ class EvolvingLog(SnapshotLog):
         kind: str = "data",
         attempts: int = 10,
         on_publish_attempt=None,
+        stats_cols=None,
+        cluster_tag=None,
     ) -> int:
-        """Concurrent-safe partial rewrite under the id mapping — same
-        stamping contract as ``commit_rewrite`` above; concurrently
-        appended files carried by the rebase keep their own schema_v
-        through the verbatim dict carry."""
-        cols = self._rewrite_cols_checked(df_new)
+        """Partial rewrite under the id mapping (round 13): the rewritten
+        files land at the LIVE generation, kept files and files a rebase
+        carried in keep their schema_v (verbatim dict carry), and the
+        entry is re-stamped with the live columns — an unstamped entry
+        breaks every subsequent evolved read (KeyError).  The incremental
+        compaction publishes through here too, so its new cube lands at
+        the live generation while settled cube files keep theirs."""
+        cols = self._live_cols_at(self.latest_version())
+        if [c[1] for c in cols] != list(df_new.columns):
+            raise ValueError(
+                f"rewrite schema mismatch: live columns {cols}, "
+                f"df {df_new.columns}"
+            )
 
         def guard(attempt: int) -> None:
             # a concurrent EVOLVE does not commute with this rewrite: the
@@ -1310,7 +1128,7 @@ class EvolvingLog(SnapshotLog):
             if on_publish_attempt is not None:
                 on_publish_attempt(attempt)
 
-        v = super().commit_rewrite_checked(
+        v = super().commit_rewrite(
             df_new,
             keep_files,
             removed_files,
@@ -1318,6 +1136,8 @@ class EvolvingLog(SnapshotLog):
             kind=kind,
             attempts=attempts,
             on_publish_attempt=guard,
+            stats_cols=stats_cols,
+            cluster_tag=cluster_tag,
         )
         self._stamp_keep(v, cols)
         return v
@@ -1352,38 +1172,10 @@ class EvolvingLog(SnapshotLog):
         self._stamp(v, cols)
         return v
 
-    def compact_incremental(
-        self,
-        spark: SparkSession,
-        sort_cols=None,
-        zorder_cols=None,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> int:
-        """Incremental OPTIMIZE under the id mapping (round 13): the todo
-        files are read through the id-mapped ``_read_manifest_files``
-        override (they may span schema generations), the rewritten cube
-        lands at the LIVE generation, and carried cube files KEEP their
-        original ``schema_v``."""
-        parent = self.latest_version()
-        cols = [tuple(c) for c in self.entry(parent)["columns"]]
-        keep_sv = {
-            f["path"]: f["schema_v"] for f in self.entry(parent)["files"]
-        }
-        v = super().compact_incremental(
-            spark,
-            sort_cols=sort_cols,
-            zorder_cols=zorder_cols,
-            target_file_bytes=target_file_bytes,
-        )
-        if v == parent:
-            return v  # settled table: no new entry to stamp
-        self._stamp(v, cols, schema_v_of=keep_sv)
-        return v
-
     def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
-        """Id-mapped read of a manifest subset: group by schema generation,
+        """Id-mapped read of manifest files: group by schema generation,
         project each group to the live schema through the column ids,
-        union — read_evolved's dataflow restricted to ``files``."""
+        union."""
         live = [(int(i), n, t) for i, n, t in entry["columns"]]
         by_schema: dict[int, list[str]] = {}
         for f in files:
@@ -1400,7 +1192,7 @@ class EvolvingLog(SnapshotLog):
             part = spark.read.parquet(*sorted(paths)).select(*proj)
             out = part if out is None else out.unionByName(part)
         if out is None:
-            raise ValueError("no files to read")
+            raise ValueError(f"version {entry['version']} has no data files")
         return out
 
     def read_evolved(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -1409,26 +1201,22 @@ class EvolvingLog(SnapshotLog):
         each projected to the live schema, unioned.  The number of
         sub-scans is the number of SCHEMAS in play (a handful), not the
         number of files."""
-        v = self.latest_version() if version is None else version
-        entry = self.entry(v)
-        live = [(int(i), n, t) for i, n, t in entry["columns"]]
-        by_schema: dict[int, list[str]] = {}
-        for f in entry["files"]:
-            by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
-        out = None
-        for sv, paths in sorted(by_schema.items()):
-            written = {int(i): (n, t) for i, n, t in self.entry(sv)["columns"]}
-            proj = [
-                F.col(written[i][0]).cast(t).alias(n)
-                if i in written
-                else F.lit(None).cast(t).alias(n)
-                for i, n, t in live
-            ]
-            part = spark.read.parquet(*sorted(paths)).select(*proj)
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            raise ValueError(f"version {v} has no data files")
-        return out
+        entry = self.entry(self.latest_version() if version is None else version)
+        return self._read_manifest_files(spark, entry, entry["files"])
+
+
+def _clustered(df: DataFrame, n: int, sort_cols=None, zorder_cols=None) -> DataFrame:
+    """``df`` cut into ``n`` range partitions on ``sort_cols`` — or on the
+    Z-value of ``zorder_cols`` — and sorted within each: the layout of one
+    clustering cube."""
+    if sort_cols:
+        return df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
+    return (
+        df.withColumn("_z", zorder_col([F.col(c) for c in zorder_cols]))
+        .repartitionByRange(n, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
 
 
 def zorder_col(cols, bits_per_dim: int = 16):
@@ -1457,28 +1245,14 @@ def zorder_col(cols, bits_per_dim: int = 16):
 # ---- shared dataflows over snapshots ---------------------------------------------
 
 
-def file_stats(df: DataFrame, col: str):
-    """Per-file [lo, hi, n_rows] for ``col`` — ONE distributed aggregate
-    keyed on the file-metadata column, never a driver-side footer walk;
-    returns O(files) driver rows (the manifest is catalog state, not
-    data)."""
-    return (
-        df.groupBy(F.col("_metadata.file_path").alias("file_path"))
-        .agg(
-            F.min(col).alias("lo"),
-            F.max(col).alias("hi"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
-    )
-
-
-def file_stats_nd(df: DataFrame, cols):
-    """Multi-column add-file stats: per-file [``c``_lo, ``c``_hi] for every
-    stats column, still ONE distributed aggregate.  This is what a table
-    format's per-file stats block actually holds (Delta's minValues /
+def file_stats(df: DataFrame, cols):
+    """Per-file add-file stats: ``n_rows`` and [``c``_lo, ``c``_hi] for every
+    column in ``cols`` — ONE distributed aggregate keyed on the
+    file-metadata column, never a driver-side footer walk; returns O(files)
+    driver rows (the manifest is catalog state, not data).  This is what a
+    table format's per-file stats block holds (Delta's minValues /
     maxValues maps) and what makes MULTI-dimensional file skipping work
-    when the layout clusters both dimensions (Z-order)."""
+    when the layout clusters several dimensions (Z-order)."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs += [F.min(c).alias(f"{c}_lo"), F.max(c).alias(f"{c}_hi")]
@@ -1489,11 +1263,11 @@ def file_stats_nd(df: DataFrame, cols):
     )
 
 
-def prune_nd(stats, bands: dict) -> list[str]:
+def prune(stats, bands: dict) -> list[str]:
     """Conjunctive planning-time skip: keep files whose per-column [lo, hi]
     interval intersects EVERY predicate band (``{col: (lo, hi)}``) — the
-    multi-dimensional manifest-pruning rule.  Conservative as always: the
-    residual filter stays on the scan."""
+    manifest-pruning rule.  Conservative as always: the residual filter
+    stays on the scan."""
     keep = []
     for r in stats:
         if all(
@@ -1502,21 +1276,6 @@ def prune_nd(stats, bands: dict) -> list[str]:
         ):
             keep.append(r.file_path)
     return keep
-
-
-def _latest_txns(log: SnapshotLog) -> dict:
-    """The newest entry's transaction map (Delta's SetTransaction state:
-    ``{app_id: [last txn_version, its commit version]}``).  EVERY commit
-    kind carries the map forward (round 12), so this is ONE entry read at
-    the tip; the walk-back survives only as a compatibility path for logs
-    written before the carry-forward rule (it stops at the first entry
-    holding a map, which is sound because carry-forward means no newer
-    entry could have silently dropped one)."""
-    for v in reversed(log.versions()):
-        e = log.entry(v)
-        if "txns" in e:
-            return dict(e["txns"])
-    return {}
 
 
 def append_once(log: SnapshotLog, df: DataFrame, app_id: str, txn_version: int) -> int:
@@ -1532,26 +1291,26 @@ def append_once(log: SnapshotLog, df: DataFrame, app_id: str, txn_version: int) 
     returns the recorded commit version.
 
     ATOMICITY (round 12, ADVICE r11 #1): the txn record is published IN
-    the commit entry itself through ``commit_append_rebased(txn=...)`` —
+    the commit entry itself through ``commit_append(txn=...)`` —
     one put-if-absent link carries both, so there is no window in which
     the append is visible without its dedup record (the old post-publish
     ``_republish`` had exactly that window), and racing writers for
     OTHER app_ids rebase over each other, merging maps instead of
     clobbering them."""
-    rec = _latest_txns(log).get(app_id)
+    rec = log._parent_txns(log.latest_version()).get(app_id)
     if rec is not None and int(rec[0]) >= int(txn_version):
         return int(rec[1])  # replay fast-path: nothing written at all
     if isinstance(log, EvolvingLog):
         # id-mapped target (round 13): route through append_columns so
         # the new entry re-stamps the live columns and the new files'
-        # generation — the plain rebased append published neither,
-        # breaking the next evolved read (the compaction-probe bug class)
+        # generation — the plain append published neither, breaking the
+        # next evolved read (the compaction-probe bug class)
         return log.append_columns(
             df,
             note=f"{app_id} txn {txn_version}",
             txn=(app_id, int(txn_version)),
         )
-    return log.commit_append_rebased(
+    return log.commit_append(
         df, note=f"{app_id} txn {txn_version}", txn=(app_id, int(txn_version))
     )
 
@@ -1778,7 +1537,7 @@ def publish_staged(
     CONCURRENCY (round 11): publishing IS an append of the staged batch,
     so it commutes with any concurrent commit — on CommitConflict the
     rebase re-resolves the (possibly moved) published head and retries,
-    exactly like commit_append_rebased; the staged files are added onto
+    exactly like commit_append; the staged files are added onto
     whatever head won."""
     e = log.entry(staged_version)
     if e.get("kind") != "staged":
@@ -1840,7 +1599,8 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
     the inherited path silently returned a PLAIN log whose name-keyed
     read corrupted renamed columns — the compaction-probe bug class."""
     e = src.entry(src.latest_version())
-    if isinstance(src, EvolvingLog):
+    evolving = isinstance(src, EvolvingLog)
+    if evolving:
         live = src._live_cols_at(src.latest_version())
         live_lists = [list(c) for c in live]
         for f in e["files"]:
@@ -1853,20 +1613,7 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
                     "land at the live generation) or materialize with "
                     "read_evolved"
                 )
-        dst = EvolvingLog(dst_root)
-        if dst.latest_version() >= 0:
-            raise ValueError("clone target already has a log")
-        entry = {
-            "version": 0,
-            "note": note or f"shallow clone of {src.root} v{e['version']}",
-            "kind": "data",
-            "schema": e.get("schema"),
-            "files": [dict(f) for f in e["files"]],
-        }
-        dst._publish(0, entry)
-        dst._stamp(0, live)  # self-contained: every file at the clone's v0
-        return dst
-    dst = SnapshotLog(dst_root)
+    dst = (EvolvingLog if evolving else SnapshotLog)(dst_root)
     if dst.latest_version() >= 0:
         raise ValueError("clone target already has a log")
     entry = {
@@ -1877,6 +1624,8 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
         "files": [dict(f) for f in e["files"]],
     }
     dst._publish(0, entry)
+    if evolving:
+        dst._stamp(0, live)  # self-contained: every file at the clone's v0
     return dst
 
 
@@ -1913,7 +1662,7 @@ def file_bloom_packed(df: DataFrame, col: str, m: int = 8192, k: int = 3):
     state is the set of NON-ZERO words only — O(min(m/64, keys*k)) per
     file vs file_bloom's O(distinct positions) python ints (measured at
     10M rows/32 files: the positions-set collect is the build-cost
-    lever; see tools/probe_table_format.py).  Returns
+    lever; see BENCH_NOTES.md, "Table-format layer at 10M rows").  Returns
     {file_path: {word: bits}}."""
     pos = F.explode(
         F.array(

@@ -226,7 +226,7 @@ def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {customer}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
         """,
-        customer=table(spark, sf_dir, "customer"),
+        customer=table(spark, sf_dir, "customer").select("c_mktsegment", "c_nationkey"),
     )
 
 

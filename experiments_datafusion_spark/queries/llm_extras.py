@@ -835,7 +835,7 @@ def docs_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the dedup_minhash_lsh r13 precedent) — and the checkpoint call
     itself cost more driver time (plan->RDD conversion + a blocking job)
     than the reuse saves."""
-    docs = table(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     # Expression-level replica of the former DataFrame chain: double
     # literals carry an explicit DOUBLE cast (a bare 1.0 parses as
     # DECIMAL in Spark SQL and would change the idf arithmetic), ln ==

@@ -24,6 +24,7 @@ from experiments_datafusion_spark.operators.table_format import (
     file_bloom,
     merge_into,
     merge_upsert,
+    prune,
 )
 from experiments_datafusion_spark.queries import register
 
@@ -338,15 +339,15 @@ def table_delete_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     log.commit(
         orders.repartitionByRange(_DEL_FILES, "o_custkey"), note="clustered base"
     )
-    stats = log.stats_manifest(spark, 0, "o_custkey")
-    affected = set(SnapshotLog.prune(stats, _DEL_LO, _DEL_HI))
+    stats = log.stats_manifest(spark, 0, ["o_custkey"])
+    affected = set(prune(stats, {"o_custkey": (_DEL_LO, _DEL_HI)}))
     keep = [r.file_path for r in stats if r.file_path not in affected]
     # rewrite just the affected slice, minus the cohort (the residual NOT
     # BETWEEN stays because manifest pruning is conservative)
     rewritten = log.read_files(spark, sorted(affected)).where(
         ~F.col("o_custkey").between(_DEL_LO, _DEL_HI)
     )
-    v1 = log.commit_rewrite(rewritten, keep, note="band delete")
+    v1 = log.commit_rewrite(rewritten, keep, sorted(affected), note="band delete")
     out = log.read(spark, v1).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_custkey").cast("bigint").alias("cust_sum"),
@@ -450,7 +451,7 @@ def table_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by the Z-VALUE of two scan dimensions (queries/packing.zorder_value, the
 # OPTIMIZE ZORDER BY idiom) gives every file a tight bounding RECTANGLE,
 # so a conjunctive 2-D predicate skips files on BOTH dimensions from one
-# multi-column stats manifest (operators/table_format.file_stats_nd — the
+# multi-column stats manifest (operators/table_format.file_stats — the
 # minValues/maxValues map a real format stores per file).  A 1-D
 # range-clustered layout can only ever prune on its cluster column; the
 # z-layout's y-band pruning power is pinned against exactly that
@@ -512,12 +513,10 @@ def scan_pruning_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round10.py."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune_nd
-
     root = tempfile.mkdtemp(prefix="zprune_")
     log = zorder_layout_log(spark, sf_dir, root)
-    stats = log.stats_manifest_nd(spark, 0, ["x", "y"])
-    survivors = prune_nd(
+    stats = log.stats_manifest(spark, 0, ["x", "y"])
+    survivors = prune(
         stats, {"x": (_ZX_LO, _ZX_HI), "y": (_ZY_LO, _ZY_HI)}
     )
     band = log.read_files(spark, survivors).where(
@@ -677,14 +676,12 @@ def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read are value-verified together."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune_nd
-
     root = tempfile.mkdtemp(prefix="pevo_")
     log = partition_evolution_log(spark, sf_dir, root)
     from datetime import datetime
 
-    stats = log.stats_manifest_nd(spark, 1, ["o_orderdate", "o_custkey"])
-    survivors = prune_nd(
+    stats = log.stats_manifest(spark, 1, ["o_orderdate", "o_custkey"])
+    survivors = prune(
         stats,
         {
             "o_orderdate": (
@@ -754,8 +751,8 @@ def scan_pruning_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size the bloom from the table, ~12 bits per expected key per file —
     # a FIXED m saturates once files carry more keys than bits (measured:
     # at 10M rows / 32 files the 8192-bit default keeps all 32 files —
-    # still conservative/correct, but zero skipping; see
-    # tools/probe_table_format.py).  Real formats size per-file blooms
+    # still conservative/correct, but zero skipping; see BENCH_NOTES.md,
+    # "Table-format layer at 10M rows").  Real formats size per-file blooms
     # from write-time stats for exactly this reason.
     m = max(8192, 12 * (orders.count() // _BLOOM_FILES))
     # packed-bitmap representation (64-bit words, one bit_or aggregate) —

@@ -1,6 +1,6 @@
 """Round-11 operators: writer concurrency beyond blind appends — the
 snapshot log's optimistic-concurrency path for REWRITE commits
-(``commit_rewrite_checked``), demonstrated end-to-end as a DELETE racing a
+(``commit_rewrite``), demonstrated end-to-end as a DELETE racing a
 late-arriving append, plus clustered compaction.
 
 The reference repo (a single-process sort bench, lib.rs:23-87) has no
@@ -400,7 +400,7 @@ WHERE o_orderdate >= TIMESTAMP '{_CR_CUT}'
 )
 def table_concurrent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE racing a concurrent APPEND on one table — the multi-writer
-    dataflow ``commit_rewrite_checked`` exists for.  The table holds
+    dataflow ``commit_rewrite``'s conflict check exists for.  The table holds
     pre-cut orders custkey-clustered into {_CR_FILES} files with
     write-time stats; a compliance DELETE of the custkey band derives its
     affected/kept file split from v0's manifest stats (O(affected) data
@@ -452,12 +452,12 @@ def table_concurrent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     def race_on_first_attempt(attempt: int) -> None:
         if attempt == 0:
             state["interposed"] = True
-            SnapshotLog(root).commit_append_rebased(
+            SnapshotLog(root).commit_append(
                 orders.where(F.col("o_orderdate") >= _CR_CUT),
                 note="late-arrival append",
             )
 
-    log.commit_rewrite_checked(
+    log.commit_rewrite(
         rewritten,
         keep_files=kept,
         removed_files=affected,

@@ -398,7 +398,7 @@ def table_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     without duplicating the data."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune_nd
+    from experiments_datafusion_spark.operators.table_format import prune
 
     root = tempfile.mkdtemp(prefix="tcz_")
     log = SnapshotLog(root)
@@ -425,7 +425,7 @@ def table_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )()
             for f in files
         ]
-        return prune_nd(rows, bands), len(files)
+        return prune(rows, bands), len(files)
 
     x_band = {"x": (_ZCX_LO, _ZCX_HI)}
     y_band = {"y": (_ZCY_LO, _ZCY_HI)}

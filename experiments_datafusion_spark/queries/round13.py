@@ -90,14 +90,19 @@ def table_cdf_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("amount_c"),
         )
     )
-    log.commit_append(base, note="v0 base")
+    v0 = log.commit_append(base, note="v0 base")
     post = base.where(F.col("k") % _CR_DEL != 0).withColumn(
         "amount_c",
         F.when(F.col("k") % _CR_UPD == 0, F.col("amount_c") * 2).otherwise(
             F.col("amount_c")
         ),
     )
-    log.commit_rewrite(post, keep_files=[], note="v1 update+delete rewrite")
+    log.commit_rewrite(
+        post,
+        keep_files=[],
+        removed_files=log.live_files([v0]),
+        note="v1 update+delete rewrite",
+    )
     log.compact(spark, target_file_bytes=1 << 30)  # v2: layout-only
     out = (
         spark.read.format("snaplog")
@@ -168,14 +173,19 @@ def table_sql_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("amount_c"),
         )
     )
-    log.commit_append(base, note="v0 base")
+    v0 = log.commit_append(base, note="v0 base")
     post = base.where(F.col("k") % _SC_DEL != 0).withColumn(
         "amount_c",
         F.when(F.col("k") % _SC_UPD == 0, F.col("amount_c") * 3).otherwise(
             F.col("amount_c")
         ),
     )
-    log.commit_rewrite(post, keep_files=[], note="v1 update+delete rewrite")
+    log.commit_rewrite(
+        post,
+        keep_files=[],
+        removed_files=log.live_files([v0]),
+        note="v1 update+delete rewrite",
+    )
     register_snaplog_changes_sql(spark, "sl_changes", root, 1, cdf_key="k")
     out = spark.sql(
         """
@@ -288,17 +298,16 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ingest), band pruning after the incremental pass is GRANULARITY-
         EQUIVALENT to the full rewrite: both layouts cluster the band's
         rows into files of the same target size, so per-band survivor
-        counts match to within ONE boundary-straddling file (exact
-        equality was over-pinned by the interrupted build session — it
-        held at sf0.01 by boundary luck and failed at sf0.1, where the
-        incremental cube's file edges land at different b values than
-        the full rewrite's; both layouts are non-overlapping and both
-        strictly prune, which is the real invariant);
+        counts differ by at most TWO — one boundary-straddling file at
+        each end of the band (the incremental cube's file edges land at
+        different b values than the full rewrite's; exact equality holds
+        at sf0.01 by boundary luck and fails at sf0.1), and both layouts
+        strictly prune;
       * both probe-band aggregates are oracled against raw orders, so a
         row lost or duplicated by the manifest surgery hash-mismatches."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune_nd
+    from experiments_datafusion_spark.operators.table_format import prune
 
     _register_sources(spark)
     root = tempfile.mkdtemp(prefix="tci_")
@@ -355,7 +364,7 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )()
             for f in files
         ]
-        return prune_nd(rows, {"b": band}), len(files)
+        return prune(rows, {"b": band}), len(files)
 
     for band in (_CI_OLD, _CI_NEW):
         keep_inc, total_inc = survivors(v_inc, band)
@@ -364,20 +373,16 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert 0 < len(keep_full) < total_full, (band, len(keep_full), total_full)
         # fresh-territory appends: pruning GRANULARITY comparable to the
         # full rewrite — same target file size, so survivor counts track
-        # each other up to boundary-straddling files.  The REAL invariant
-        # is the strict pruning asserted above (both layouts skip files);
-        # the count comparison is a granularity diagnostic, not a pin —
-        # a hard +-1 was itself point-measured (r13 advisor) and a
-        # different scale/seed can legally place >=2 straddlers.
-        if abs(len(keep_inc) - len(keep_full)) > 1:
-            import warnings
-
-            warnings.warn(
-                "table_compact_incremental: survivor-count granularity "
-                f"diverged beyond one straddler: band={band} "
-                f"inc={len(keep_inc)} full={len(keep_full)}",
-                stacklevel=2,
-            )
+        # each other up to boundary-straddling files.  The two layouts cut
+        # their files at different b values, so one band can straddle up
+        # to one extra file at EACH end in either layout: a difference of
+        # at most 2.  Anything more means the incremental cube lost its
+        # clustering.
+        assert abs(len(keep_inc) - len(keep_full)) <= 2, (
+            band,
+            len(keep_inc),
+            len(keep_full),
+        )
 
     read = log.read(spark, v_inc)
     old_lo, old_hi = _CI_OLD

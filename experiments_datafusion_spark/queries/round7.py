@@ -77,7 +77,7 @@ SELECT w, freq, p0 + 1 AS pos, sym FROM (
     ) GROUP BY w
   )
 )
-""", docs=table(spark, sf_dir, "documents"))
+""", docs=table(spark, sf_dir, "documents").select("text"))
 
 
 def _bpe_rank_candidates(sym: DataFrame) -> list[tuple[str, str, int]]:

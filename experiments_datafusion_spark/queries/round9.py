@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from experiments_datafusion_spark.io import materialize_then_rmtree, table
 from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
-    file_stats,
     mor_current_view,
     mor_read,
+    prune,
 )
 from experiments_datafusion_spark.queries import register
 
@@ -186,20 +186,6 @@ def scan_pruning_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MANIFEST_FILES = 16
 
 
-def build_file_manifest(spark: SparkSession, path: str, col: str):
-    """Per-file [min, max, rows] for ``col`` over a plain parquet dir —
-    thin wrapper over operators/table_format.file_stats (the log-backed
-    variant is SnapshotLog.stats_manifest)."""
-    return file_stats(spark.read.parquet(path), col)
-
-
-def prune_files(manifest, lo, hi) -> list[str]:
-    """Planning-time skip: keep files whose [lo, hi] intersects the
-    predicate interval — the manifest-pruning rule every table format
-    applies before handing Spark the file list."""
-    return [r.file_path for r in manifest if r.hi >= lo and r.lo <= hi]
-
-
 @register(
     "scan_pruning_manifest",
     tags=("io", "layout", "maintenance"),
@@ -233,8 +219,8 @@ def scan_pruning_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = log.commit(
         orders.repartitionByRange(_MANIFEST_FILES, "o_custkey"), note="clustered"
     )
-    manifest = log.stats_manifest(spark, v, "o_custkey")
-    survivors = SnapshotLog.prune(manifest, _PRUNE_LO, _PRUNE_HI)
+    manifest = log.stats_manifest(spark, v, ["o_custkey"])
+    survivors = prune(manifest, {"o_custkey": (_PRUNE_LO, _PRUNE_HI)})
     band = log.read_files(spark, survivors).where(
         F.col("o_custkey").between(_PRUNE_LO, _PRUNE_HI)
     )

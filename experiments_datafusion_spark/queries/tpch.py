@@ -107,9 +107,13 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10
 """,
-        lineitem=table(spark, sf_dir, "lineitem"),
-        orders=table(spark, sf_dir, "orders"),
-        customer=table(spark, sf_dir, "customer"),
+        lineitem=table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount", "l_shipdate"
+        ),
+        orders=table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
+        ),
+        customer=table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
     )
 
 
@@ -187,12 +191,18 @@ WHERE r.r_name = 'ASIA'
   AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY n_name
 """,
-        lineitem=table(spark, sf_dir, "lineitem"),
-        orders=table(spark, sf_dir, "orders"),
-        customer=table(spark, sf_dir, "customer"),
-        supplier=table(spark, sf_dir, "supplier"),
-        nation=table(spark, sf_dir, "nation"),
-        region=table(spark, sf_dir, "region"),
+        lineitem=table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+        ),
+        orders=table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate"
+        ),
+        customer=table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"),
+        supplier=table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey"),
+        nation=table(spark, sf_dir, "nation").select(
+            "n_nationkey", "n_name", "n_regionkey"
+        ),
+        region=table(spark, sf_dir, "region").select("r_regionkey", "r_name"),
     )
 
 
@@ -270,10 +280,16 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """,
-        lineitem=table(spark, sf_dir, "lineitem"),
-        orders=table(spark, sf_dir, "orders"),
-        customer=table(spark, sf_dir, "customer"),
-        nation=table(spark, sf_dir, "nation"),
+        lineitem=table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount", "l_returnflag"
+        ),
+        orders=table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderdate"
+        ),
+        customer=table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_name", "c_acctbal", "c_nationkey"
+        ),
+        nation=table(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
     )
 
 

@@ -177,7 +177,7 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {docs} d, LATERAL edfs_split_tokens(d.doc_id, d.text) t
         WHERE d.doc_id < 50
         """,
-        docs=table(spark, sf_dir, "documents"),
+        docs=table(spark, sf_dir, "documents").select("doc_id", "text"),
     )
 
 

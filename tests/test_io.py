@@ -16,23 +16,25 @@ def _rows(df, key):
 
 def test_parquet_roundtrip(spark, sf_dir, tmp_path):
     src = io.table(spark, sf_dir, "nation")
-    io.write_parquet(src, str(tmp_path / "nation_pq"))
-    back = io.read_parquet(spark, str(tmp_path / "nation_pq"))
+    src.write.mode("overwrite").parquet(str(tmp_path / "nation_pq"))
+    back = spark.read.parquet(str(tmp_path / "nation_pq"))
     assert _rows(back, "n_nationkey") == _rows(src, "n_nationkey")
 
 
 def test_csv_roundtrip_with_schema(spark, sf_dir, tmp_path):
     src = io.table(spark, sf_dir, "region")
-    io.write_csv(src, str(tmp_path / "region_csv"))
-    back = io.read_csv(spark, str(tmp_path / "region_csv"), schema=src.schema)
+    src.write.mode("overwrite").option("header", "true").csv(str(tmp_path / "region_csv"))
+    back = spark.read.option("header", "true").schema(src.schema).csv(
+        str(tmp_path / "region_csv")
+    )
     assert back.schema == src.schema
     assert _rows(back, "r_regionkey") == _rows(src, "r_regionkey")
 
 
 def test_json_roundtrip(spark, sf_dir, tmp_path):
     src = io.table(spark, sf_dir, "supplier")
-    io.write_json(src, str(tmp_path / "supp_json"))
-    back = io.read_json(spark, str(tmp_path / "supp_json"), schema=src.schema)
+    src.write.mode("overwrite").json(str(tmp_path / "supp_json"))
+    back = spark.read.schema(src.schema).json(str(tmp_path / "supp_json"))
     assert _rows(back, "s_suppkey") == _rows(src, "s_suppkey")
 
 
@@ -40,8 +42,10 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     """Hive-style partitioned layout: a filter on the partition column must
     prune directories (PartitionFilters), not scan everything."""
     src = io.table(spark, sf_dir, "customer")
-    io.write_parquet(src, str(tmp_path / "cust_part"), partition_by=["c_mktsegment"])
-    back = io.read_parquet(spark, str(tmp_path / "cust_part")).where(
+    src.write.mode("overwrite").partitionBy("c_mktsegment").parquet(
+        str(tmp_path / "cust_part")
+    )
+    back = spark.read.parquet(str(tmp_path / "cust_part")).where(
         F.col("c_mktsegment") == "BUILDING"
     )
     p = audit(back)
@@ -87,20 +91,20 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
 
 
 def test_noop_sink_runs(spark, sf_dir):
-    io.write_noop(io.table(spark, sf_dir, "region"))
+    io.table(spark, sf_dir, "region").write.format("noop").mode("overwrite").save()
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     src = io.table(spark, sf_dir, "customer")
-    io.write_orc(src, str(tmp_path / "cust_orc"))
-    back = io.read_orc(spark, str(tmp_path / "cust_orc"))
+    src.write.mode("overwrite").orc(str(tmp_path / "cust_orc"))
+    back = spark.read.orc(str(tmp_path / "cust_orc"))
     assert _rows(back, "c_custkey") == _rows(src, "c_custkey")
 
 
 def test_orc_filter_pushdown(spark, sf_dir, tmp_path):
     src = io.table(spark, sf_dir, "orders")
-    io.write_orc(src, str(tmp_path / "orders_orc"))
-    df = io.read_orc(spark, str(tmp_path / "orders_orc")).where(
+    src.write.mode("overwrite").orc(str(tmp_path / "orders_orc"))
+    df = spark.read.orc(str(tmp_path / "orders_orc")).where(
         F.col("o_orderkey") < 100
     ).select("o_orderkey")
     p = audit(df)
@@ -110,7 +114,7 @@ def test_orc_filter_pushdown(spark, sf_dir, tmp_path):
 def test_text_source_reads_lines(spark, tmp_path):
     f = tmp_path / "corpus.txt"
     f.write_text("alpha\nbeta\ngamma\n")
-    df = io.read_text(spark, str(f))
+    df = spark.read.text(str(f))
     assert df.columns == ["value"]
     assert df.count() == 3
 
@@ -137,8 +141,10 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     orders = io.table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    io.write_parquet(orders, str(tmp_path / "orders_by_year"), partition_by=["o_year"])
-    fact = io.read_parquet(spark, str(tmp_path / "orders_by_year"))
+    orders.write.mode("overwrite").partitionBy("o_year").parquet(
+        str(tmp_path / "orders_by_year")
+    )
+    fact = spark.read.parquet(str(tmp_path / "orders_by_year"))
     dim = (
         spark.range(1992, 1999)
         .select(F.col("id").cast("int").alias("o_year"))

@@ -1,6 +1,6 @@
 """Model-based STATE-MACHINE fuzZing of the snapshot log (rounds 11-13):
-a seeded random walk over the commit surface — append, rebased append,
-checked band-delete rewrite, compaction (round-robin AND clustered),
+a seeded random walk over the commit surface — append, band-delete
+rewrite, compaction (round-robin AND clustered),
 RESTORE, log checkpointing, TIMESTAMP AS OF, and (round 12, VERDICT r11
 next #8) write-audit-publish (stage + publish AND stage + abandon +
 recovery), shallow CLONE, and retention VACUUM — with a plain-Python
@@ -114,11 +114,11 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
     cloned = False
     for step in range(1, 31):
         op = rng.choices(
-            ["append", "append_rebased", "delete", "compact",
+            ["append", "delete", "compact",
              "compact_sorted", "restore", "checkpoint", "wap_publish",
              "wap_abandon", "vacuum_retain", "clone", "sink_commit",
              "batch_cdf", "paced_drain"],
-            weights=[20, 10, 16, 8, 8, 8, 4, 8, 5, 4, 3, 10, 8, 4],
+            weights=[30, 16, 8, 8, 8, 4, 8, 5, 4, 3, 10, 8, 4],
         )[0]
         if op == "sink_commit":
             # the streaming sink's commit shape: append_once with a
@@ -268,34 +268,28 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             cur = sorted(cur + ids)
             v = log.commit_append(_df(spark, ids), note=f"append {step}")
             clean_adds[v] = ids
-        elif op == "append_rebased":
-            ids = fresh_ids(rng.randint(1, 15))
-            cur = sorted(cur + ids)
-            v = log.commit_append_rebased(_df(spark, ids), note=f"appendr {step}")
-            clean_adds[v] = ids
         elif op == "delete":
             if not cur:
                 continue
             lo = rng.choice(cur)
             hi = lo + rng.randint(0, max(cur) - lo)
-            # checked rewrite: affected = files whose [min,max] hits the band
-            # (one distributed stats pass), keep = the rest — the pruned
-            # DELETE shape under a random band
+            # rewrite: affected = files whose [min,max] hits the band (one
+            # distributed stats pass), keep = the rest — the pruned DELETE
+            # shape under a random band
             from experiments_datafusion_spark.operators.table_format import (
                 file_stats,
+                prune,
             )
 
-            stats = file_stats(log.read(spark), "id")
-            affected = [
-                r.file_path for r in stats if r.hi >= lo and r.lo <= hi
-            ]
-            kept = [r.file_path for r in stats if not (r.hi >= lo and r.lo <= hi)]
+            stats = file_stats(log.read(spark), ["id"])
+            affected = prune(stats, {"id": (lo, hi)})
+            kept = [r.file_path for r in stats if r.file_path not in affected]
             if not affected:
                 continue
             df_new = log.read_files(spark, affected).where(
                 ~F.col("id").between(lo, hi)
             )
-            v = log.commit_rewrite_checked(
+            v = log.commit_rewrite(
                 df_new, keep_files=kept, removed_files=affected,
                 note=f"delete [{lo},{hi}]",
             )
@@ -462,7 +456,12 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             df_new = log.read_evolved(spark).where(
                 F.col(name).isNull() | (F.col(name) % 3 != 0)
             )
-            log.commit_rewrite(df_new, keep_files=[], note=f"rewrite {step}")
+            log.commit_rewrite(
+                df_new,
+                keep_files=[],
+                removed_files=log.live_files([log.latest_version()]),
+                note=f"rewrite {step}",
+            )
             rewrote = True
             rows = [
                 r for r in rows if r.get(cid) is None or r[cid] % 3 != 0

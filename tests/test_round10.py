@@ -11,6 +11,7 @@ from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
     changes_between,
     merge_upsert,
+    prune,
 )
 from experiments_datafusion_spark.queries import all_queries
 
@@ -176,14 +177,14 @@ def test_delete_pruned_rewrites_only_affected_files(spark, sf_dir, tmp_path):
     log = SnapshotLog(str(tmp_path / "t"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     log.commit(orders.repartitionByRange(R10._DEL_FILES, "o_custkey"))
-    stats = log.stats_manifest(spark, 0, "o_custkey")
-    affected = set(SnapshotLog.prune(stats, R10._DEL_LO, R10._DEL_HI))
+    stats = log.stats_manifest(spark, 0, ["o_custkey"])
+    affected = set(prune(stats, {"o_custkey": (R10._DEL_LO, R10._DEL_HI)}))
     keep = [r.file_path for r in stats if r.file_path not in affected]
     assert 0 < len(affected) < len(stats)  # the prune genuinely bites
     rewritten = log.read_files(spark, sorted(affected)).where(
         ~SF.col("o_custkey").between(R10._DEL_LO, R10._DEL_HI)
     )
-    v1 = log.commit_rewrite(rewritten, keep)
+    v1 = log.commit_rewrite(rewritten, keep, sorted(affected))
     norm = {p[len("file:"):] if p.startswith("file:") else p for p in keep}
     v1_paths = {fe.path for fe in log.manifest(v1)}
     assert norm < v1_paths  # every untouched file carried forward by path
@@ -294,19 +295,14 @@ def test_zorder_2d_manifest_pruning(spark, sf_dir, tmp_path):
     structurally cannot."""
     import pyspark.sql.functions as SF
 
-    from experiments_datafusion_spark.operators.table_format import (
-        SnapshotLog,
-        file_stats_nd,
-        prune_nd,
-    )
     from experiments_datafusion_spark.plans.audit import file_scan_metrics
     from experiments_datafusion_spark.queries import round10 as R10
 
     log = R10.zorder_layout_log(spark, sf_dir, str(tmp_path / "z"))
-    stats = log.stats_manifest_nd(spark, 0, ["x", "y"])
+    stats = log.stats_manifest(spark, 0, ["x", "y"])
     total = len(stats)
     bands = {"x": (R10._ZX_LO, R10._ZX_HI), "y": (R10._ZY_LO, R10._ZY_HI)}
-    survivors = prune_nd(stats, bands)
+    survivors = prune(stats, bands)
     assert 0 < len(survivors) < total
 
     band = log.read_files(spark, survivors).where(
@@ -322,8 +318,8 @@ def test_zorder_2d_manifest_pruning(spark, sf_dir, tmp_path):
     one_d = SnapshotLog(str(tmp_path / "xonly"))
     one_d.commit(log.read(spark, 0).repartitionByRange(R10._Z_FILES, "x"))
     y_band = {"y": (R10._ZY_LO, R10._ZY_HI)}
-    z_y_survivors = prune_nd(stats, y_band)
-    x_y_survivors = prune_nd(one_d.stats_manifest_nd(spark, 0, ["x", "y"]), y_band)
+    z_y_survivors = prune(stats, y_band)
+    x_y_survivors = prune(one_d.stats_manifest(spark, 0, ["x", "y"]), y_band)
     # 1-D layout has no y locality (an x-range file sees ~uniform y, so
     # nearly every file straddles the band); the z layout genuinely skips
     assert len(z_y_survivors) < len(x_y_survivors)
@@ -516,13 +512,12 @@ def test_partition_evolution_prunes_both_layout_generations(spark, sf_dir, tmp_p
     mixed layout)."""
     from datetime import datetime
 
-    from experiments_datafusion_spark.operators.table_format import prune_nd
     from experiments_datafusion_spark.queries import round10 as R10
 
     log = R10.partition_evolution_log(spark, sf_dir, str(tmp_path / "pe"))
     spec_a = {f["path"] for f in log.entry(0)["files"]}
     spec_b = {f["path"] for f in log.entry(1)["files"]} - spec_a
-    stats = log.stats_manifest_nd(spark, 1, ["o_orderdate", "o_custkey"])
+    stats = log.stats_manifest(spark, 1, ["o_orderdate", "o_custkey"])
     bands = {
         "o_orderdate": (
             datetime.fromisoformat(R10._PE_D_LO),
@@ -532,7 +527,7 @@ def test_partition_evolution_prunes_both_layout_generations(spark, sf_dir, tmp_p
     }
     survivors = {
         p[len("file:"):] if p.startswith("file:") else p
-        for p in prune_nd(stats, bands)
+        for p in prune(stats, bands)
     }
     kept_a = {p for p in survivors if p in spec_a}
     kept_b = {p for p in survivors if p in spec_b}
@@ -571,10 +566,10 @@ def test_bloom_prunes_where_minmax_cannot(spark, sf_dir, tmp_path):
     # min/max tier: a MID-domain probe sits inside every file's [min, max]
     # (a probe near the domain edge can luck into some pruning even here);
     # the scan's keep-set for the IN predicate is the UNION over probes
-    stats = log.stats_manifest(spark, 0, "o_orderkey")
+    stats = log.stats_manifest(spark, 0, ["o_orderkey"])
     for k in probes[1:]:  # 421, 1287 — mid-domain at every sf
-        assert len(SnapshotLog.prune(stats, k, k)) == R10._BLOOM_FILES
-    minmax_keep = {p for k in probes for p in SnapshotLog.prune(stats, k, k)}
+        assert len(prune(stats, {"o_orderkey": (k, k)})) == R10._BLOOM_FILES
+    minmax_keep = {p for k in probes for p in prune(stats, {"o_orderkey": (k, k)})}
     # bloom tier: strictly fewer files, none containing a probe is lost
     m = max(8192, 12 * (orders.count() // R10._BLOOM_FILES))
     blooms = file_bloom(log.read(spark, 0), "o_orderkey", m=m)
@@ -692,13 +687,22 @@ def test_append_rebases_on_conflict(spark, tmp_path):
         return real_publish(version, entry)
 
     log._publish = racy_publish
-    v = log.commit_append_rebased(spark.range(20, 30), note="loser-rebased")
+    v = log.commit_append(spark.range(20, 30), note="loser-rebased")
     assert v == 2  # rebased past the winner's version 1
     assert log.entry(2)["note"] == "loser-rebased"
     assert sorted(r.id for r in log.read(spark, 2).collect()) == list(range(30))
-    # the loser's data files were written exactly once (one batch dir)
-    batch_dirs = [d for d in os.listdir(str(tmp_path / "t")) if d.startswith("b-")]
-    assert len(batch_dirs) == 1
+    # the loser's data files were written exactly once: the files v2 added
+    # live in ONE batch dir, and no other batch dir (an orphan from a
+    # rewritten retry) exists beside the winner's
+    def dirs(v: int) -> set:
+        return {os.path.dirname(f["path"]) for f in log.entry(v)["files"]}
+
+    loser_dirs = dirs(2) - dirs(1)
+    assert len(loser_dirs) == 1
+    batch_dirs = {
+        os.path.join(log.root, d) for d in os.listdir(log.root) if d.startswith("b-")
+    }
+    assert batch_dirs == (dirs(1) - dirs(0)) | loser_dirs
 
 
 def test_rebased_append_schema_check_uses_new_latest(spark, tmp_path):
@@ -709,7 +713,7 @@ def test_rebased_append_schema_check_uses_new_latest(spark, tmp_path):
     log = SnapshotLog(str(tmp_path / "t"))
     log.commit(spark.range(3).select(F.col("id"), F.lit(1).alias("x")))
     with pytest.raises(ValueError, match="schema mismatch"):
-        log.commit_append_rebased(spark.range(3))  # missing column x
+        log.commit_append(spark.range(3))  # missing column x
 
 
 # ---- write-audit-publish -----------------------------------------------------------
@@ -1092,7 +1096,7 @@ def test_snaplog_source_survives_log_checkpoint(spark, tmp_path):
 
 def test_concurrent_appends_all_land_no_lost_updates(spark, tmp_path):
     """Stress the put-if-absent protocol with real concurrency: 6 threads
-    append disjoint row ranges through commit_append_rebased against ONE
+    append disjoint row ranges through commit_append against ONE
     log root.  Every batch must land (6 commits after the base), the
     final version must contain every row exactly once, and each thread's
     data files must be written exactly once (6 batch dirs)."""
@@ -1106,7 +1110,7 @@ def test_concurrent_appends_all_land_no_lost_updates(spark, tmp_path):
         try:
             # each thread its own handle, as separate writers would have
             own = SnapshotLog(str(tmp_path / "t"))
-            own.commit_append_rebased(
+            own.commit_append(
                 spark.range(100 + i * 50, 100 + (i + 1) * 50), note=f"w{i}"
             )
         except Exception as exc:  # noqa: BLE001

@@ -114,11 +114,11 @@ def test_rewrite_checked_rebases_over_interposed_append(spark, tmp_path):
             interposed["done"] = True
             # a second writer appends 1000..1019 and WINS this version
             other = SnapshotLog(log.root)
-            other.commit_append_rebased(spark.range(1000, 1020), note="racer")
+            other.commit_append(spark.range(1000, 1020), note="racer")
         real_publish(version, entry)
 
     log._publish = publish_with_interposition
-    v = log.commit_rewrite_checked(
+    v = log.commit_rewrite(
         rewritten, keep_files=high, removed_files=low, note="delete ids<10"
     )
     log._publish = real_publish
@@ -140,7 +140,7 @@ def test_rewrite_checked_same_file_race_raises(spark, tmp_path):
     log = _two_file_table(spark, str(tmp_path / "t"))
     low, high = _files_by_half(log, spark)
     # writer A lands first: removes the low file (deletes ids < 10)
-    log.commit_rewrite_checked(
+    log.commit_rewrite(
         spark.read.parquet(*low).where(F.col("id") >= 10),
         keep_files=high,
         removed_files=low,
@@ -148,7 +148,7 @@ def test_rewrite_checked_same_file_race_raises(spark, tmp_path):
     )
     # writer B, still derived from v0, rewrites the same low file
     with pytest.raises(ConcurrentModification, match="removed files"):
-        log.commit_rewrite_checked(
+        log.commit_rewrite(
             spark.read.parquet(*low).where(F.col("id") >= 20),
             keep_files=high,
             removed_files=low,
@@ -166,7 +166,7 @@ def test_rewrite_checked_keep_file_removed_raises(spark, tmp_path):
     # concurrent writer compacts the WHOLE table (removes every v0 file)
     log.commit(log.read(spark, 0).repartition(1), note="compact-all")
     with pytest.raises(ConcurrentModification):
-        log.commit_rewrite_checked(
+        log.commit_rewrite(
             spark.read.parquet(*low).where(F.col("id") >= 10),
             keep_files=high,
             removed_files=low,
@@ -176,7 +176,7 @@ def test_rewrite_checked_keep_file_removed_raises(spark, tmp_path):
 def test_concurrent_appends_and_rewriter_all_land(spark, tmp_path):
     """The r10 6-appender stress extended with a REWRITER: 5 threads
     append disjoint ranges while 1 thread deletes ids 0..9 through
-    commit_rewrite_checked.  All six commits land, the final table is
+    commit_rewrite.  All six commits land, the final table is
     exactly (base - deleted) + appends, and no version is lost."""
     log = SnapshotLog(str(tmp_path / "t"))
     log.commit(spark.range(100).repartitionByRange(2, "id"), note="v0")
@@ -186,7 +186,7 @@ def test_concurrent_appends_and_rewriter_all_land(spark, tmp_path):
     def appender(i: int) -> None:
         try:
             own = SnapshotLog(str(tmp_path / "t"))
-            own.commit_append_rebased(
+            own.commit_append(
                 spark.range(100 + i * 50, 100 + (i + 1) * 50), note=f"w{i}"
             )
         except Exception as exc:  # noqa: BLE001
@@ -195,7 +195,7 @@ def test_concurrent_appends_and_rewriter_all_land(spark, tmp_path):
     def rewriter() -> None:
         try:
             own = SnapshotLog(str(tmp_path / "t"))
-            own.commit_rewrite_checked(
+            own.commit_rewrite(
                 spark.read.parquet(*low).where(F.col("id") >= 10),
                 keep_files=high,
                 removed_files=low,
@@ -214,6 +214,24 @@ def test_concurrent_appends_and_rewriter_all_land(spark, tmp_path):
     assert log.latest_version() == 6  # base + 5 appends + 1 rewrite
     got = sorted(r.id for r in log.read(spark).collect())
     assert got == list(range(10, 100)) + list(range(100, 350))
+
+
+def test_rewrite_from_stale_snapshot_keeps_concurrent_append(spark, tmp_path):
+    """Lost-append regression: a DELETE derived from v0 publishes after
+    another writer appended 10 rows.  The rewrite rebases over the blind
+    append, so all 10 appended rows stay visible."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    v0 = log.commit_append(spark.range(100).repartitionByRange(2, "id"), note="v0")
+    low, high = _files_by_half(log, spark, v0)
+    SnapshotLog(log.root).commit_append(spark.range(1000, 1010), note="other writer")
+    log.commit_rewrite(
+        spark.read.parquet(*low).where(F.col("id") >= 10),
+        keep_files=high,
+        removed_files=low,
+        note="delete ids<10",
+    )
+    got = sorted(r.id for r in log.read(spark).collect())
+    assert got == list(range(10, 100)) + list(range(1000, 1010))
 
 
 def test_append_nullability_narrowing_allowed_widening_refused(spark, tmp_path):
@@ -266,6 +284,35 @@ def test_evolve_rebases_over_concurrent_append(spark, tmp_path):
     v = log.evolve([(1, "a_renamed", "bigint")], note="rename a")
     log._publish = real_publish
     assert state["done"] and v == 2
+    got = log.read_evolved(spark)
+    assert got.columns == ["a_renamed"]
+    assert sorted(r.a_renamed for r in got.collect()) == list(range(8))
+
+
+def test_append_rebases_over_concurrent_evolve(spark, tmp_path):
+    """The mirror race: an append loses its first publish to an evolve.
+    The rebased append keeps the evolved columns (no silent revert) and
+    its batch, written under the old name, resolves through the parent's
+    generation."""
+    from experiments_datafusion_spark.operators.table_format import EvolvingLog
+
+    log = EvolvingLog(str(tmp_path / "t"))
+    log.commit_columns(spark.range(5).select(F.col("id").alias("a")), [(1, "a", "bigint")])
+
+    real_publish = log._publish
+    state = {"done": False}
+
+    def losing_first(version: int, entry: dict) -> None:
+        if not state["done"]:
+            state["done"] = True
+            EvolvingLog(log.root).evolve([(1, "a_renamed", "bigint")], note="rename a")
+        real_publish(version, entry)
+
+    log._publish = losing_first
+    v = log.append_columns(spark.range(5, 8).select(F.col("id").alias("a")))
+    log._publish = real_publish
+    assert state["done"] and v == 2
+    assert log.entry(v)["columns"] == [[1, "a_renamed", "bigint"]]
     got = log.read_evolved(spark)
     assert got.columns == ["a_renamed"]
     assert sorted(r.a_renamed for r in got.collect()) == list(range(8))

@@ -21,9 +21,9 @@ from experiments_datafusion_spark.operators.table_format import (
     append_once,
     changes_incremental,
     commit_staged,
-    file_stats_nd,
+    file_stats,
     merge_into,
-    prune_nd,
+    prune,
     publish_staged,
 )
 
@@ -106,9 +106,9 @@ def test_txns_carried_through_every_commit_kind(spark, tmp_path, monkeypatch):
     assert log.entry(log.latest_version())["txns"] == {"ing": [0, 0]}
     stats = [
         (r.file_path[len("file:"):] if r.file_path.startswith("file:") else r.file_path)
-        for r in file_stats_nd(log.read(spark), ["id"])
+        for r in file_stats(log.read(spark), ["id"])
     ]
-    log.commit_rewrite_checked(
+    log.commit_rewrite(
         log.read(spark).where(F.col("id") != 3),
         keep_files=[],
         removed_files=stats,
@@ -164,7 +164,7 @@ def test_rewrite_checked_abort_removes_orphan_dir(spark, tmp_path):
     log = SnapshotLog(root)
     log.commit(spark.range(10), note="v0")
     with pytest.raises(ConcurrentModification):
-        log.commit_rewrite_checked(
+        log.commit_rewrite(
             spark.range(3),
             keep_files=[],
             removed_files=[os.path.join(root, "v0", "no-such-file.parquet")],
@@ -177,9 +177,10 @@ def test_append_rebased_schema_mismatch_removes_orphan_dir(spark, tmp_path):
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(5), note="v0")
+    before = _stray_dirs(root, "b-")  # v0's own batch
     with pytest.raises(ValueError, match="schema mismatch"):
-        log.commit_append_rebased(spark.range(3).withColumn("extra", F.lit(1)))
-    assert _stray_dirs(root, "b-") == []
+        log.commit_append(spark.range(3).withColumn("extra", F.lit(1)))
+    assert _stray_dirs(root, "b-") == before
 
 
 # ---- staged-aware incremental CDF -----------------------------------------------------
@@ -602,7 +603,7 @@ def test_compact_zorder_prunes_both_dimensions(spark, tmp_path):
             )()
             for f in files
         ]
-        return prune_nd(rows, bands), len(files)
+        return prune(rows, bands), len(files)
 
     bands = {"x": (4, 11), "y": (40, 47)}
     keep0, total0 = survivors(0, bands)
@@ -939,7 +940,7 @@ def test_vacuum_min_age_spares_inflight_writer_files(spark, tmp_path):
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
     # simulate an in-flight rebased append: data written, entry not yet
-    # published (exactly commit_append_rebased's write-then-publish gap)
+    # published (exactly commit_append's write-then-publish gap)
     inflight_dir = os.path.join(root, "b-inflight")
     spark.range(4, 8).write.parquet(inflight_dir)
     inflight = [

@@ -309,9 +309,11 @@ def test_cdf_delete_rewrite_emits_delete_rows(spark, tmp_path):
     _register(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
-    log.commit_append(spark.range(8), note="v0")
+    v0 = log.commit_append(spark.range(8), note="v0")
     kept = spark.range(8).where("id NOT IN (2, 5)")
-    log.commit_rewrite(kept, keep_files=[], note="delete 2,5")
+    log.commit_rewrite(
+        kept, keep_files=[], removed_files=log.live_files([v0]), note="delete 2,5"
+    )
     got = _cdf(spark, root, start=1).collect()
     rows = sorted((r.id, r._change_type, r._commit_version) for r in got)
     assert rows == [(2, "delete", 1), (5, "delete", 1)]
@@ -326,11 +328,13 @@ def test_cdf_update_rewrite_with_cdfkey_emits_image_pairs(spark, tmp_path):
     base = spark.range(5).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("val")
     )
-    log.commit_append(base, note="v0")
+    v0 = log.commit_append(base, note="v0")
     updated = base.withColumn(
         "val", F.when(F.col("k") == 3, F.lit(999)).otherwise(F.col("val"))
     )
-    log.commit_rewrite(updated, keep_files=[], note="update k=3")
+    log.commit_rewrite(
+        updated, keep_files=[], removed_files=log.live_files([v0]), note="update k=3"
+    )
     got = _cdf(spark, root, start=1, cdfKey="k").collect()
     rows = sorted((r.k, r.val, r._change_type, r._commit_version) for r in got)
     assert rows == [
@@ -347,8 +351,13 @@ def test_cdf_rewrite_past_maxdiffbytes_refuses(spark, tmp_path):
     _register(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
-    log.commit_append(spark.range(8), note="v0")
-    log.commit_rewrite(spark.range(4), keep_files=[], note="bulk rewrite")
+    v0 = log.commit_append(spark.range(8), note="v0")
+    log.commit_rewrite(
+        spark.range(4),
+        keep_files=[],
+        removed_files=log.live_files([v0]),
+        note="bulk rewrite",
+    )
     with pytest.raises(Exception, match="maxDiffBytes"):
         _cdf(spark, root, start=1, maxDiffBytes="1").collect()
 
@@ -689,7 +698,7 @@ def EvolvingLogFactory(spark, root):
 
 
 def test_evolving_rewrite_stamps_and_resolves(spark, tmp_path):
-    """commit_rewrite / commit_rewrite_checked on an EvolvingLog: the
+    """commit_rewrite on an EvolvingLog: the
     rewritten files land at the live generation, kept files keep their
     schema_v, the entry carries the live columns — the inherited path
     published neither (KeyError on the next evolved read)."""
@@ -698,7 +707,10 @@ def test_evolving_rewrite_stamps_and_resolves(spark, tmp_path):
     root = str(tmp_path / "t")
     log = EvolvingLogFactory(spark, root)  # cube at old gen + evolved append
     post = log.read_evolved(spark).where("k != 2")
-    v = log.commit_rewrite(post, keep_files=[], note="delete k=2")
+    all_files = log.live_files([log.latest_version()])
+    v = log.commit_rewrite(
+        post, keep_files=[], removed_files=all_files, note="delete k=2"
+    )
     assert "columns" in log.entry(v)
     assert all(f["schema_v"] == v for f in log.entry(v)["files"])
     rows = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
@@ -708,6 +720,7 @@ def test_evolving_rewrite_stamps_and_resolves(spark, tmp_path):
         log.commit_rewrite(
             spark.createDataFrame([(1, 1)], "k bigint, wrong_c bigint"),
             keep_files=[],
+            removed_files=all_files,
         )
 
 
@@ -785,7 +798,7 @@ def test_evolving_checked_rewrite_aborts_on_concurrent_evolve(spark, tmp_path):
             )
 
     with pytest.raises(ConcurrentModification, match="schema change"):
-        log.commit_rewrite_checked(
+        log.commit_rewrite(
             df_new,
             keep_files=[],
             removed_files=all_paths,
@@ -863,7 +876,12 @@ def _evolved_rewrite_log(spark, root):
         "amount_c",
         F.when(F.col("k") == 2, F.lit(999)).otherwise(F.col("amount_c")),
     )
-    log.commit_rewrite(post, keep_files=[], note="v3 update k=2")
+    log.commit_rewrite(
+        post,
+        keep_files=[],
+        removed_files=log.live_files([log.latest_version()]),
+        note="v3 update k=2",
+    )
     return log
 
 
@@ -952,7 +970,10 @@ def test_append_carries_stats_and_cluster_tags_verbatim(spark, tmp_path):
     assert carried == cube  # verbatim: stats + tag survive the append
     # partial rewrite keeping the cube: survives too
     new_df = spark.range(200, 204).select((F.col("id") % 8).alias("b"), "id")
-    v3 = log.commit_rewrite(new_df, keep_files=sorted(cube), note="rw")
+    appended = sorted(log.live_files([v2]) - set(cube))
+    v3 = log.commit_rewrite(
+        new_df, keep_files=sorted(cube), removed_files=appended, note="rw"
+    )
     carried3 = {f["path"]: f for f in log.entry(v3)["files"] if f["path"] in cube}
     assert carried3 == cube
 

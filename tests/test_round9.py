@@ -126,15 +126,16 @@ def test_manifest_pruning_skips_files(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from experiments_datafusion_spark.io import table
+    from experiments_datafusion_spark.operators.table_format import file_stats, prune
     from experiments_datafusion_spark.plans.audit import file_scan_metrics
 
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     path = str(tmp_path / "t")
     orders.repartitionByRange(8, "o_custkey").write.mode("overwrite").parquet(path)
-    manifest = R9.build_file_manifest(spark, path, "o_custkey")
+    manifest = file_stats(spark.read.parquet(path), ["o_custkey"])
     assert len(manifest) == 8
     lo, hi = 101, 140
-    survivors = R9.prune_files(manifest, lo, hi)
+    survivors = prune(manifest, {"o_custkey": (lo, hi)})
     assert 0 < len(survivors) < 8, survivors
     pruned = spark.read.parquet(*survivors).where(
         F.col("o_custkey").between(lo, hi)
@@ -147,16 +148,18 @@ def test_manifest_pruning_skips_files(spark, sf_dir, tmp_path):
 
 
 def test_manifest_pruning_conservative_on_overlap(spark):
-    """prune_files keeps a file iff its [lo, hi] INTERSECTS the predicate
+    """prune keeps a file iff its [lo, hi] INTERSECTS the predicate
     interval — boundary-touching files must survive (off-by-one here
     silently drops matching rows at file boundaries)."""
     from collections import namedtuple
 
-    Row = namedtuple("Row", "file_path lo hi")
+    from experiments_datafusion_spark.operators.table_format import prune
+
+    Row = namedtuple("Row", "file_path k_lo k_hi")
     man = [Row("a", 0, 100), Row("b", 100, 200), Row("c", 201, 300)]
-    assert R9.prune_files(man, 100, 100) == ["a", "b"]
-    assert R9.prune_files(man, 150, 201) == ["b", "c"]
-    assert R9.prune_files(man, 301, 400) == []
+    assert prune(man, {"k": (100, 100)}) == ["a", "b"]
+    assert prune(man, {"k": (150, 201)}) == ["b", "c"]
+    assert prune(man, {"k": (301, 400)}) == []
 
 
 def test_positional_mor_equals_cow_row_for_row(spark, sf_dir, tmp_path):
