@@ -160,6 +160,90 @@ def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None
         return files
 
 
+def _id_projection(written, live) -> list:
+    """Map a file's WRITTEN column list to the LIVE one through the stable
+    column ids (the Iceberg rule, see ``EvolvingLog``): one
+    ``(live_name, written_name | None, live_type)`` per live column, where
+    a None written name means the column did not exist yet (NULL)."""
+    by_id = {int(i): n for i, n, _t in written}
+    return [(n, by_id.get(int(i)), t) for i, n, t in live]
+
+
+class LogView:
+    """What consumers see of a log at one moment: its entries, the
+    PUBLISHED subsequence (staged write-audit-publish entries are
+    invisible), and each published version's ``(added file dicts,
+    removed paths)`` delta against the previous published version — all
+    from one O(versions + manifest entries) forward pass.  Every reader
+    resolves versions here (``head``, ``resolve``), so the staged rule is
+    applied in this one place."""
+
+    def __init__(self, entries: dict[int, dict]):
+        self.entries = entries
+        self.versions = sorted(entries)
+        self.published = [
+            v for v in self.versions if entries[v].get("kind") != "staged"
+        ]
+        self.delta: dict[int, tuple[list[dict], list[str]]] = {}
+        prev: set[str] = set()
+        for v in self.published:
+            files = entries[v]["files"]
+            cur = {f["path"] for f in files}
+            added = [f for f in files if f["path"] not in prev]
+            self.delta[v] = (added, sorted(prev - cur))
+            prev = cur
+
+    @property
+    def head(self) -> int:
+        """The newest published version."""
+        if not self.published:
+            raise ValueError("no published version in the log")
+        return self.published[-1]
+
+    def resolve(self, version=None, ts=None) -> int:
+        """AS OF resolution: ``version`` must exist and be published;
+        ``ts`` picks the newest published version stamped at or before it
+        (Delta's TIMESTAMP AS OF, never a staged entry); neither gives
+        ``head``."""
+        if version is not None and ts is not None:
+            raise ValueError(
+                "versionAsOf and timestampAsOf are mutually exclusive"
+            )
+        if version is not None:
+            v = int(version)
+            if v not in self.entries:
+                raise ValueError(f"no version {v} in the log")
+            if v not in self.delta:
+                raise ValueError(
+                    f"version {v} is staged (write-audit-publish) — not "
+                    "consumer-visible; publish it first"
+                )
+            return v
+        if ts is not None:
+            at = [
+                v
+                for v in self.published
+                if self.entries[v].get("ts") is not None
+                and self.entries[v]["ts"] <= float(ts)
+            ]
+            if not at:
+                raise ValueError(f"no version committed at or before ts={ts}")
+            return at[-1]
+        return self.head
+
+    def file_projection(self, f: dict, live_cols) -> list | None:
+        """The id projection of one manifest file onto ``live_cols``
+        (``_id_projection``), or None when the file needs none: a plain
+        log, or a file written under the live column list."""
+        sv = f.get("schema_v")
+        if sv is None or live_cols is None:
+            return None
+        written = self.entries[sv].get("columns")
+        if written is None or list(map(list, written)) == list(map(list, live_cols)):
+            return None
+        return _id_projection(written, live_cols)
+
+
 class SnapshotLog:
     """Versioned snapshot log rooted at ``root``.
 
@@ -181,7 +265,12 @@ class SnapshotLog:
     Delta keeps SetTransaction actions live across checkpoints the same
     way.  ``clone_shallow`` is the one deliberate exception: a clone is a
     NEW table identity, and inheriting the source's txn map would make a
-    stream that switches to the clone silently skip batches."""
+    stream that switches to the clone silently skip batches.
+
+    ``view()`` is the one place where the staged rule is applied: staged
+    (write-audit-publish) entries are invisible to consumers, and AS OF
+    resolution — by version, by timestamp, or at the published head —
+    goes through its ``resolve`` / ``head``."""
 
     def __init__(self, root: str):
         self.root = root
@@ -653,29 +742,15 @@ class SnapshotLog:
                 os.remove(p)
         return upto
 
-    def version_as_of_ts(self, ts: float) -> int:
-        """Delta ``TIMESTAMP AS OF`` resolution: the newest version whose
-        commit timestamp is <= ``ts`` (every publish stamps one).  Like
-        the real thing, this is an O(versions) driver-side walk over log
-        entries — catalog metadata, never data.  Raises if the timestamp
-        predates the table.
-
-        STAGED entries are skipped (round 13, ADVICE r12 #1): a timestamp
-        landing between a WAP stage and its publish must resolve to the
-        newest PUBLISHED version at or before it — the staged snapshot's
-        file list is ONLY the unaudited batch, and surfacing it would
-        break the staged-versions-are-invisible invariant the versionAsOf
-        path already enforces (Delta resolves the same way)."""
-        best = None
-        for v in self.versions():
-            e = self.entry(v)
-            if e.get("kind") == "staged":
-                continue
-            if e.get("ts") is not None and e["ts"] <= ts:
-                best = v
-        if best is None:
-            raise ValueError(f"no version committed at or before ts={ts}")
-        return best
+    def view(self) -> LogView:
+        """The consumer-visible view of the log as it stands now (one
+        read of every entry; see ``LogView``).  The checkpoint is parsed
+        once here, where ``entry`` would parse it again per version."""
+        cp = self._checkpoint()
+        entries = {int(v): e for v, e in cp["entries"].items()} if cp else {}
+        for v in self._tail_versions():
+            entries[v] = self.entry(v)
+        return LogView(entries)
 
     def stamp_ts(self, version: int, ts: float) -> None:
         """Re-stamp a version's commit timestamp (ownership rule as in
@@ -1176,18 +1251,18 @@ class EvolvingLog(SnapshotLog):
         """Id-mapped read of manifest files: group by schema generation,
         project each group to the live schema through the column ids,
         union."""
-        live = [(int(i), n, t) for i, n, t in entry["columns"]]
         by_schema: dict[int, list[str]] = {}
         for f in files:
             by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
         out = None
         for sv, paths in sorted(by_schema.items()):
-            written = {int(i): (n, t) for i, n, t in self.entry(sv)["columns"]}
             proj = [
-                F.col(written[i][0]).cast(t).alias(n)
-                if i in written
-                else F.lit(None).cast(t).alias(n)
-                for i, n, t in live
+                F.col(pn).cast(t).alias(ln)
+                if pn is not None
+                else F.lit(None).cast(t).alias(ln)
+                for ln, pn, t in _id_projection(
+                    self.entry(sv)["columns"], entry["columns"]
+                )
             ]
             part = spark.read.parquet(*sorted(paths)).select(*proj)
             out = part if out is None else out.unionByName(part)
@@ -1438,34 +1513,23 @@ def changes_incremental(
     audited batch's files, never a re-diff against the staged entry's
     reset file list.  ``v_from`` itself must be published (a staged
     baseline has no consumer-visible meaning)."""
-    if log.entry(v_from).get("kind") == "staged":
-        raise ValueError(
-            f"v_from={v_from} is a staged (unpublished) version — the CDF "
-            "baseline must be consumer-visible"
-        )
-    vs = [
-        v
-        for v in log.versions()
-        if v_from < v <= v_to and log.entry(v).get("kind") != "staged"
-    ]
+    view = log.view()
+    view.resolve(version=v_from)  # refuses a staged baseline
+    vs = [v for v in view.published if v_from < v <= v_to]
     if not vs:
         raise ValueError(f"no published versions in ({v_from}, {v_to}]")
-    prev_files = {fe.path for fe in log.manifest(v_from)}
     out = None
     for v in vs:
-        cur = [fe.path for fe in log.manifest(v)]
-        removed = prev_files - set(cur)
+        added, removed = view.delta[v]
         if removed:
             raise ValueError(
                 f"version {v} removed {len(removed)} file(s) — range is not "
                 "append-only; use changes_between for rewrite-bearing ranges"
             )
-        added = [p for p in cur if p not in prev_files]
-        prev_files = set(cur)
         if not added:
             continue
         part = (
-            spark.read.parquet(*added)
+            spark.read.parquet(*[f["path"] for f in added])
             .withColumn(change_col, F.lit("insert"))
             .withColumn(version_col, F.lit(v).cast("bigint"))
         )
@@ -1502,7 +1566,7 @@ def commit_staged(log: SnapshotLog, df: DataFrame, note: str = "") -> int:
     """WRITE step of write-audit-publish: the batch lands as a STAGED
     snapshot (kind='staged') — durable, auditable, but invisible to
     consumers, because the published head resolves past staged entries
-    (``head_published``).  The Iceberg WAP / Delta-branch idea: data is
+    (``SnapshotLog.view``).  The Iceberg WAP / Delta-branch idea: data is
     written exactly once, at full parallelism, BEFORE anyone can read
     it.
 
@@ -1528,7 +1592,7 @@ def publish_staged(
 ) -> int:
     """PUBLISH step: a METADATA-ONLY append-commit merging the staged
     batch into the published head — the new entry's file list is
-    head_published's files PLUS the staged snapshot's files, kind='data',
+    the published head's files PLUS the staged snapshot's files, kind='data',
     so the audit-passed batch becomes visible atomically (one
     put-if-absent log append), zero data moved.  An audit failure simply
     never calls this: the staged entry stays invisible to consumers and
@@ -1543,8 +1607,9 @@ def publish_staged(
     if e.get("kind") != "staged":
         raise ValueError(f"version {staged_version} is not a staged snapshot")
     for _ in range(attempts):
-        head_files = [dict(f) for f in log.entry(head_published(log))["files"]]
-        parent = log.latest_version()
+        view = log.view()
+        head_files = [dict(f) for f in view.entries[view.head]["files"]]
+        parent = view.versions[-1]
         version = parent + 1
         entry = {
             "version": version,
@@ -1566,17 +1631,6 @@ def publish_staged(
         except CommitConflict:
             continue  # rebase: re-resolve the head, retry
     raise CommitConflict(f"publish did not land after {attempts} attempts")
-
-
-def head_published(log: SnapshotLog) -> int:
-    """The newest version consumers may read: staged entries are skipped."""
-    head = None
-    for v in log.versions():
-        if log.entry(v).get("kind") != "staged":
-            head = v
-    if head is None:
-        raise ValueError("no published version in the log")
-    return head
 
 
 def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLog:

@@ -957,17 +957,16 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     they exist) staged and AUDITED against the rule "no status 'P'"; a
     violation abandons the staged snapshot (head unchanged), a pass
     publishes it.  Batch B (custkey%5==1, 'P' rows pre-filtered) stages
-    clean and publishes.  The consumer read goes through head_published —
-    never sees staged data — and the oracle replays the audit decision
-    with NOT EXISTS over the identical rule, so staging, the gate, and
-    the publish merge are all value-verified."""
+    clean and publishes.  The consumer read goes through the log view's
+    published head — never sees staged data — and the oracle replays the
+    audit decision with NOT EXISTS over the identical rule, so staging,
+    the gate, and the publish merge are all value-verified."""
     import tempfile
 
     from experiments_datafusion_spark.operators.table_format import (
         ConstraintViolation,
         commit_staged,
         enforce_checks,
-        head_published,
         publish_staged,
     )
 
@@ -996,7 +995,7 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         except ConstraintViolation:
             pass  # audit failed: staged snapshot abandoned, head untouched
     out = (
-        log.read(spark, head_published(log))
+        log.read(spark, log.view().head)
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).alias("n"),

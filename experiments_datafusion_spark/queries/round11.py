@@ -175,12 +175,12 @@ WHERE o_orderdate < TIMESTAMP '{_TT_CUTS[1]}'
 def table_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIMESTAMP AS OF time travel (the Delta surface table_time_travel's
     VERSION AS OF twin lacks): every publish stamps a commit timestamp
-    in the log entry; ``version_as_of_ts`` resolves a query timestamp to
-    the newest version committed at or before it — an O(versions)
-    driver-side walk over catalog entries, never data.  Three growing
-    snapshots are stamped with a deterministic clock (10/20/30) and read
-    AS OF t=25, which must resolve to version 1 — the oracle recomputes
-    that snapshot's slice from raw orders."""
+    in the log entry; ``view().resolve(ts=...)`` resolves a query
+    timestamp to the newest published version committed at or before it
+    — an O(versions) driver-side walk over catalog entries, never data.
+    Three growing snapshots are stamped with a deterministic clock
+    (10/20/30) and read AS OF t=25, which must resolve to version 1 — the
+    oracle recomputes that snapshot's slice from raw orders."""
     import tempfile
 
     root = tempfile.mkdtemp(prefix="ttts_")
@@ -192,7 +192,7 @@ def table_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             note=f"as of {cut}",
         )
         log.stamp_ts(v, 10.0 * (i + 1))
-    v = log.version_as_of_ts(25.0)
+    v = log.view().resolve(ts=25.0)
     out = log.read(spark, v).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),

@@ -22,14 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from experiments_datafusion_spark.io import materialize_then_rmtree, table
 from experiments_datafusion_spark.operators.table_format import SnapshotLog
 from experiments_datafusion_spark.queries import register
-
-
-def _register_sources(spark: SparkSession) -> None:
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
-
-    register_sources(spark)
+from experiments_datafusion_spark.sources import register_sources
 
 
 # ---- batch snaplog DataSource ----------------------------------------------------------
@@ -69,7 +62,7 @@ def table_log_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one AS OF version vs incremental deltas) differs."""
     import tempfile
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tbs_")
     log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -137,7 +130,7 @@ def table_log_stream_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant unplannable one."""
     import tempfile
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tlsp_")
     ev = table(spark, sf_dir, "events").select(
         "event_id",
@@ -230,7 +223,7 @@ def table_stream_skipchanges(spark: SparkSession, sf_dir: str) -> DataFrame:
     events."""
     import tempfile
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tssc_")
     ev = table(spark, sf_dir, "events").select("event_id")
     log = SnapshotLog(f"{root}/t")
@@ -493,7 +486,7 @@ def table_log_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema enforcement are pinned in tests/test_round12.py."""
     import tempfile
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tlsk_")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id")
     ev.repartition(3).write.mode("overwrite").parquet(f"{root}/src")
@@ -566,7 +559,7 @@ def table_batch_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_staged,
     )
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tbc_")
     log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -631,7 +624,7 @@ def table_log_batch_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from experiments_datafusion_spark.operators.table_format import EvolvingLog
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tbe_")
     log = EvolvingLog(root)
     orders = table(spark, sf_dir, "orders")

@@ -22,14 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from experiments_datafusion_spark.io import materialize_then_rmtree, table
 from experiments_datafusion_spark.operators.table_format import SnapshotLog
 from experiments_datafusion_spark.queries import register
-
-
-def _register_sources(spark: SparkSession) -> None:
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
-
-    register_sources(spark)
+from experiments_datafusion_spark.sources import register_sources
 
 
 # ---- reader-API CDF over a rewrite-bearing range ---------------------------------------
@@ -79,7 +72,7 @@ def table_cdf_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite touches few files, which is exactly the bounded case."""
     import tempfile
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tcr_")
     log = SnapshotLog(root)
     base = (
@@ -162,7 +155,7 @@ def table_sql_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_snaplog_changes_sql,
     )
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tsc_")
     log = SnapshotLog(root)
     base = (
@@ -309,7 +302,7 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from experiments_datafusion_spark.operators.table_format import prune
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tci_")
     log = SnapshotLog(root)
     t = table(spark, sf_dir, "orders").select(
@@ -444,7 +437,7 @@ def table_sql_access(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_snaplog_sql,
     )
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tsa_")
     log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders").select(
@@ -513,7 +506,7 @@ def table_stream_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from experiments_datafusion_spark.operators.table_format import EvolvingLog
 
-    _register_sources(spark)
+    register_sources(spark)
     root = tempfile.mkdtemp(prefix="tst_")
     log = EvolvingLog(f"{root}/t")
     orders = table(spark, sf_dir, "orders")

@@ -52,7 +52,12 @@ def _ship_package(spark: SparkSession) -> None:
     driver's cwd.  Module-level UDF callables are cloudpickled *by reference*,
     so workers must import ``experiments_datafusion_spark`` themselves; if the
     external driver launched from a different directory, sys.path tweaks on
-    the driver side never reach the workers.  ``addPyFile`` does.
+    the driver side never reach the workers.  ``addPyFile`` does, for task
+    workers.  The Python data-source planner process (a streaming source's
+    ``latestOffset``/``partitions``) does not see it, so the package's
+    parent directory also goes on ``sc.environment["PYTHONPATH"]``, which
+    Spark hands every Python process it starts.  A data source captures
+    ``sc.environment`` when it is registered, so this must run first.
 
     The archive goes to a per-call private temp dir (never a fixed path:
     concurrent sessions on this host — driver verify, bench, pytest — would
@@ -67,6 +72,9 @@ def _ship_package(spark: SparkSession) -> None:
     from pathlib import Path
 
     pkg_dir = Path(__file__).resolve().parent
+    paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if str(pkg_dir.parent) not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join([str(pkg_dir.parent), *paths])
     stem = str(Path(tempfile.mkdtemp(prefix="edfs_pkg_")) / "edfs_pkg")
     try:
         zip_path = shutil.make_archive(

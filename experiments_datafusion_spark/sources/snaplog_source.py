@@ -13,16 +13,12 @@ added (appends add files; a full commit's files are all new), so
   * the reader never re-emits carried-forward files — consumers see each
     appended row exactly once (the incremental contract);
   * ``partitions()`` is driver-side O(new files) catalog work: the log is
-    resolved ONCE per planning call into a ``_LogView`` (versions, entries,
-    per-published-version file deltas in one forward pass) — round 12,
-    ADVICE r11 #5: the per-version re-resolution was O(versions^2) on long
-    logs — while the actual parquet reads happen ON EXECUTORS, one task
-    per new file (the distributed ``DataSourceStreamReader``, not the
-    driver-side simple reader);
-  * ``read()`` yields ``pyarrow.RecordBatch``es (round 11; the per-row
-    tuple path survives only as the measured-negative ``arrow=false``
-    arm), so rows flow parquet -> Arrow -> Spark without ever
-    materializing as Python objects;
+    resolved ONCE per planning call into a ``LogView`` (per-published-
+    version file deltas in one forward pass), while the actual parquet
+    reads happen ON EXECUTORS, one task per new file (the distributed
+    ``DataSourceStreamReader``, not the driver-side simple reader);
+  * ``read()`` yields ``pyarrow.RecordBatch``es, so rows flow parquet ->
+    Arrow -> Spark without ever materializing as Python objects;
   * replay is trivially exact: the same version range always names the
     same immutable files, the bit-identical replay contract exactly-once
     recovery needs from a source.
@@ -37,10 +33,9 @@ sees), computed in the same one-pass delta walk.
 
 Log-entry KIND awareness (rounds 11–12, Delta readStream contract):
 
-  * ``kind='staged'`` versions (write-audit-publish) are INVISIBLE — each
-    consumer-visible version diffs against the previous PUBLISHED version,
-    so the later ``publish_staged`` commit emits exactly the audited
-    batch's files, never the whole republished base;
+  * ``kind='staged'`` versions (write-audit-publish) are INVISIBLE
+    (``LogView``): each published version diffs against the previous
+    PUBLISHED one, so ``publish_staged`` emits exactly the audited batch;
   * a version that REMOVES files relative to its published parent
     (compaction, DELETE, rewrite) fails the stream loudly by default —
     silently re-emitting compacted rows as fresh inserts is never what a
@@ -102,13 +97,16 @@ Options (Spark lowercases DataSource option keys):
     fallback shape);
   * ``maxDiffBytes`` — ceiling (default 256 MiB) on the single-task
     rewrite diff; bulk rewrites past it are refused toward the
-    distributed ``changes_between`` join;
-  * ``arrow``    — default true; ``false`` keeps the legacy row-tuple
-    path (kept ONLY as the measured-negative A/B arm).
+    distributed ``changes_between`` join.
+
+Version resolution (AS OF, the published head, staged invisibility) is
+``LogView``'s, so the declared schema and the scanned rows always come
+from the same version.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections.abc import Iterator, Sequence
 
@@ -121,71 +119,37 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-def _log(root: str):
-    from experiments_datafusion_spark.operators.table_format import SnapshotLog
+from experiments_datafusion_spark.operators.table_format import (
+    LogView,
+    SnapshotLog,
+    _entry_schema,
+    _removed_on_error,
+    _write_files,
+)
 
-    return SnapshotLog(root)
+
+def _view(root: str) -> LogView:
+    """The log's consumer view; a root with no log yet reads as an empty
+    log (and is not created)."""
+    if not os.path.isdir(os.path.join(root, "_log")):
+        return LogView({})
+    return SnapshotLog(root).view()
 
 
-class _LogView:
-    """One-shot resolved snapshot of the log's metadata: versions, entries,
-    the published subsequence, and each published version's (added,
-    removed) file delta vs the PREVIOUS PUBLISHED version — all computed
-    in one O(versions + total manifest entries) forward pass, so planning
-    a micro-batch costs one log resolution instead of one per version.
-    Checkpointed logs read identically (SnapshotLog.versions/entry resolve
-    checkpoint + tail)."""
+def _head_offset(view: LogView) -> int:
+    """The stream offset past every version the log holds."""
+    return (view.versions[-1] + 1) if view.versions else 0
 
-    def __init__(self, root: str):
-        self.versions: list[int] = []
-        self.entries: dict[int, dict] = {}
-        if os.path.isdir(os.path.join(root, "_log")):
-            log = _log(root)
-            self.versions = log.versions()
-            self.entries = {v: log.entry(v) for v in self.versions}
-        self.published = [
-            v for v in self.versions if self.entries[v].get("kind") != "staged"
-        ]
-        # delta[v] = (added file dicts in manifest order, removed paths)
-        # vs the previous PUBLISHED version — staged entries never reset
-        # the baseline (the r11 WAP rule, now precomputed)
-        self.delta: dict[int, tuple[list[dict], list[str]]] = {}
-        prev: set[str] = set()
-        for v in self.published:
-            files = self.entries[v]["files"]
-            cur_paths = {f["path"] for f in files}
-            added = [f for f in files if f["path"] not in prev]
-            self.delta[v] = (added, sorted(prev - cur_paths))
-            prev = cur_paths
 
-    @property
-    def head_offset(self) -> int:
-        return (self.versions[-1] + 1) if self.versions else 0
-
-    def kind(self, v: int) -> str:
-        return self.entries[v].get("kind", "data")
-
-    def file_projection(self, f: dict, live_cols) -> list | None:
-        """Per-file column-ID projection for EVOLVING logs (the Iceberg id
-        mapping, operators/table_format.EvolvingLog): a file written under
-        an older schema generation resolves to the LIVE schema through the
-        stable ids — ``[(live_name, physical_name | None, live_type)]``,
-        None physical = the column didn't exist yet (surfaces NULL).
-        Returns None when the file already matches the live schema (the
-        fast path — plain logs and post-evolution files)."""
-        sv = f.get("schema_v")
-        if sv is None or live_cols is None:
-            return None
-        written = self.entries[sv].get("columns")
-        if written is None or [list(c) for c in written] == [
-            list(c) for c in live_cols
-        ]:
-            return None
-        by_id = {int(i): (n, t) for i, n, t in written}
-        return [
-            (name, by_id[int(i)][0] if int(i) in by_id else None, typ)
-            for i, name, typ in live_cols
-        ]
+def _resolve(options: dict, view: LogView) -> int:
+    """The version a batch read scans, and so the one whose schema it
+    declares: readChangeFeed's endingVersion, else versionAsOf /
+    timestampAsOf, else the published head."""
+    if _flag(options, "readchangefeed"):
+        return view.resolve(version=options.get("endingversion"))
+    return view.resolve(
+        version=options.get("versionasof"), ts=options.get("timestampasof")
+    )
 
 
 # live-schema type -> Arrow type, for the id-mapped evolved read (NULL
@@ -221,7 +185,7 @@ class _FilePartition(InputPartition):
         self.path = path
         self.version = version
         # id-mapped projection for files written under an older schema
-        # generation (see _LogView.file_projection); None = live schema
+        # generation (see LogView.file_projection); None = live schema
         self.proj = proj
 
 
@@ -259,27 +223,81 @@ class _DiffPartition(InputPartition):
         self.key_cols = key_cols  # None = full-row multiset diff
 
 
-def _parse_common_options(options: dict) -> dict:
+def _flag(options: dict, key: str) -> bool:
+    return str(options.get(key, "false")).lower() == "true"
+
+
+def _path_and_columns(options: dict) -> tuple[str, list | None]:
+    """The log root and the ``columns`` projection (None = all)."""
     root = options.get("path")
     if not root:
         raise ValueError("snaplog source needs .option('path', <log root>)")
     cols = (options.get("columns") or "").strip()
-    return {
-        "root": root,
-        "columns": [c.strip() for c in cols.split(",") if c.strip()] or None,
-        "arrow": str(options.get("arrow", "true")).lower() != "false",
-    }
+    return root, [c.strip() for c in cols.split(",") if c.strip()] or None
+
+
+def _physical_columns(proj, columns) -> list | None:
+    """The file columns to read for the live ``columns`` (None = all)."""
+    if proj is None:
+        return columns
+    return [
+        pn
+        for ln, pn, _t in proj
+        if pn is not None and (columns is None or ln in columns)
+    ] or None
+
+
+def _projected(data, proj, columns):
+    """An Arrow RecordBatch or Table read with ``_physical_columns``, in
+    the LIVE column space: renamed by id, widened by cast, NULL where the
+    column did not exist yet.  ``proj=None`` (a file already in the live
+    schema) returns ``data`` as read."""
+    if proj is None:
+        return data
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arrays, names = [], []
+    for ln, pn, t in proj:
+        if columns is not None and ln not in columns:
+            continue
+        at = _evolved_arrow_type(t)
+        if pn is None:
+            arr = pa.nulls(data.num_rows, type=at)
+        else:
+            arr = data.column(pn)
+            if arr.type != at:
+                arr = pc.cast(arr, at)
+        arrays.append(arr)
+        names.append(ln)
+    return type(data).from_arrays(arrays, names=names)
+
+
+def _stamped(data, change_type: str | None, version: int):
+    """Append the CDF columns to an Arrow batch or table:
+    ``_change_type`` when ``change_type`` is set, then
+    ``_commit_version``."""
+    import pyarrow as pa
+
+    n = data.num_rows
+    if change_type is not None:
+        data = data.append_column(
+            "_change_type", pa.array([change_type] * n, type=pa.string())
+        )
+    return data.append_column(
+        "_commit_version", pa.array([version] * n, type=pa.int64())
+    )
 
 
 class _ArrowFileReadMixin:
     """Shared executor-side read: one parquet file -> Arrow RecordBatches
-    with column pruning at the read and the ``_commit_version`` stamp.
-    Identical for batch and streaming — the manifest decides WHICH files,
-    the read itself is the same partition-per-file scan."""
+    with column pruning at the read, the id projection of an evolved file,
+    and the ``_commit_version`` stamp.  Identical for batch and streaming —
+    the manifest decides WHICH files, the read itself is the same
+    partition-per-file scan."""
 
     columns: list | None
-    arrow: bool
-    change_type: str | None = None  # set by CDF batch reads: adds _change_type
+    change_type: str | None = None  # set by CDF reads: adds _change_type
 
     def read(self, partition: _FilePartition) -> Iterator:
         if partition is None:
@@ -289,103 +307,16 @@ class _ArrowFileReadMixin:
         if isinstance(partition, _DiffPartition):
             yield from self._read_diff(partition)
             return
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        v = partition.version
-        ct = self.change_type
-        proj = getattr(partition, "proj", None)
-        if proj is not None:
-            # id-mapped EVOLVED read: project the file's physical columns
-            # to the live schema — rename by id, widen by cast, NULL where
-            # the column didn't exist yet — executor-side, in Arrow
-            if not self.arrow:
-                raise ValueError(
-                    "snaplog: the legacy arrow=false row path does not "
-                    "support evolved (id-mapped) files"
-                )
-            import pyarrow.compute as pc
-
-            want = [
-                (ln, pn, t)
-                for ln, pn, t in proj
-                if self.columns is None or ln in self.columns
-            ]
-            phys = [pn for _ln, pn, _t in want if pn is not None]
-            pf = pq.ParquetFile(partition.path)
-            for batch in pf.iter_batches(columns=phys or None):
-                arrays, names = [], []
-                for ln, pn, t in want:
-                    at = _evolved_arrow_type(t)
-                    if pn is None:
-                        arr = pa.nulls(batch.num_rows, type=at)
-                    else:
-                        arr = batch.column(batch.schema.get_field_index(pn))
-                        if arr.type != at:
-                            arr = pc.cast(arr, at)
-                    arrays.append(arr)
-                    names.append(ln)
-                out = pa.RecordBatch.from_arrays(arrays, names=names)
-                if ct is not None:
-                    out = out.append_column(
-                        "_change_type",
-                        pa.array([ct] * out.num_rows, type=pa.string()),
-                    )
-                yield out.append_column(
-                    "_commit_version",
-                    pa.array([v] * out.num_rows, type=pa.int64()),
-                )
-            return
-        if self.arrow:
-            pf = pq.ParquetFile(partition.path)
-            for batch in pf.iter_batches(columns=self.columns):
-                if ct is not None:
-                    batch = batch.append_column(
-                        "_change_type",
-                        pa.array([ct] * batch.num_rows, type=pa.string()),
-                    )
-                yield batch.append_column(
-                    "_commit_version",
-                    pa.array([v] * batch.num_rows, type=pa.int64()),
-                )
-            return
-        # legacy row-tuple path — the measured-negative A/B arm only
-        tbl = pq.read_table(partition.path, columns=self.columns)
-        cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-        tail = (v,) if ct is None else (ct, v)
-        for i in range(tbl.num_rows):
-            yield tuple(c[i] for c in cols) + tail
-
-    def _load_projected(self, path: str, proj):
-        """One file -> pyarrow Table in the LIVE column space: id-mapped
-        rename/widen/NULL-backfill when ``proj`` is set (same semantics as
-        the batch path above, applied table-at-once), plain column-pruned
-        read otherwise."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if proj is None:
-            return pq.read_table(path, columns=self.columns)
-        import pyarrow.compute as pc
-
-        want = [
-            (ln, pn, t)
-            for ln, pn, t in proj
-            if self.columns is None or ln in self.columns
-        ]
-        tbl = pq.read_table(path, columns=[pn for _l, pn, _t in want if pn])
-        arrays, names = [], []
-        for ln, pn, t in want:
-            at = _evolved_arrow_type(t)
-            if pn is None:
-                arr = pa.nulls(tbl.num_rows, type=at)
-            else:
-                arr = tbl.column(pn)
-                if arr.type != at:
-                    arr = pc.cast(arr, at)
-            arrays.append(arr)
-            names.append(ln)
-        return pa.Table.from_arrays(arrays, names=names)
+        proj = partition.proj
+        pf = pq.ParquetFile(partition.path)
+        for batch in pf.iter_batches(columns=_physical_columns(proj, self.columns)):
+            yield _stamped(
+                _projected(batch, proj, self.columns),
+                self.change_type,
+                partition.version,
+            )
 
     def _read_diff(self, partition: "_DiffPartition") -> Iterator:
         """Executor-side row-level diff of ONE rewrite version (round 13,
@@ -403,6 +334,7 @@ class _ArrowFileReadMixin:
         Bounded by the planner's ``maxDiffBytes`` refusal, so the
         in-memory Counter here is over the touched slice only."""
         import pyarrow as pa
+        import pyarrow.parquet as pq
 
         def hashable(v):
             # NaN != NaN would make every float-NaN row a spurious
@@ -416,7 +348,14 @@ class _ArrowFileReadMixin:
             return v
 
         def load(pairs, schema_like=None):
-            tabs = [self._load_projected(p, proj) for p, proj in pairs]
+            tabs = [
+                _projected(
+                    pq.read_table(p, columns=_physical_columns(proj, self.columns)),
+                    proj,
+                    self.columns,
+                )
+                for p, proj in pairs
+            ]
             if tabs:
                 return pa.concat_tables(tabs)
             return schema_like.schema.empty_table()
@@ -471,61 +410,40 @@ class _ArrowFileReadMixin:
         else:
             from collections import Counter
 
+            def unmatched(keys, other) -> list[int]:
+                # rows of ``keys`` left over once ``other`` is matched off
+                budget = Counter(other)
+                out = []
+                for i, k in enumerate(keys):
+                    if budget[k] > 0:
+                        budget[k] -= 1
+                    else:
+                        out.append(i)
+                return out
+
             pre_k = keys_of(pre, None)
             post_k = keys_of(post, None)
-            budget = Counter(post_k)
-            dels = []
-            for i, k in enumerate(pre_k):
-                if budget[k] > 0:
-                    budget[k] -= 1
-                else:
-                    dels.append(i)
-            budget = Counter(pre_k)
-            ins = []
-            for j, k in enumerate(post_k):
-                if budget[k] > 0:
-                    budget[k] -= 1
-                else:
-                    ins.append(j)
-            emit = [(pre, dels, "delete"), (post, ins, "insert")]
+            emit = [
+                (pre, unmatched(pre_k, post_k), "delete"),
+                (post, unmatched(post_k, pre_k), "insert"),
+            ]
 
         for tbl, idx, ct in emit:
-            if not idx:
-                continue
-            out = tbl.take(idx)
-            out = out.append_column(
-                "_change_type", pa.array([ct] * out.num_rows, type=pa.string())
-            )
-            out = out.append_column(
-                "_commit_version", pa.array([v] * out.num_rows, type=pa.int64())
-            )
-            for batch in out.to_batches():
-                yield batch
+            if idx:
+                yield from _stamped(tbl.take(idx), ct, v).to_batches()
 
 
 class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
     def __init__(self, options: dict):
-        common = _parse_common_options(options)
-        self.root = common["root"]
-        self.columns = common["columns"]
-        self.arrow = common["arrow"]
-        self.ignore_changes = (
-            str(options.get("ignorechanges", "false")).lower() == "true"
-        )
+        self.root, self.columns = _path_and_columns(options)
+        self.ignore_changes = _flag(options, "ignorechanges")
         # Delta's third knob: admit commits that ONLY remove files (the
         # retention/partition-delete shape — nothing to re-emit), while
         # rewrites (remove AND add) still require ignoreChanges.
         # ignoreChanges implies ignoreDeletes, as in Delta.
-        self.ignore_deletes = self.ignore_changes or (
-            str(options.get("ignoredeletes", "false")).lower() == "true"
-        )
-        self.skip_change_commits = (
-            str(options.get("skipchangecommits", "false")).lower() == "true"
-        )
-        if self.skip_change_commits and (
-            self.ignore_changes
-            or str(options.get("ignoredeletes", "false")).lower() == "true"
-        ):
+        self.ignore_deletes = self.ignore_changes or _flag(options, "ignoredeletes")
+        self.skip_change_commits = _flag(options, "skipchangecommits")
+        if self.skip_change_commits and self.ignore_deletes:
             raise ValueError(
                 "snaplog source: skipChangeCommits is mutually exclusive "
                 "with ignoreChanges/ignoreDeletes — pick one change-commit "
@@ -557,16 +475,11 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # loudly and a restart picks up the new schema — Delta's
         # non-additive-change restart rule, unchanged.  Default (option
         # absent) keeps the loud refusal.
-        self.schema_tracking = (
-            str(options.get("schematracking", "false")).lower() == "true"
-        )
+        self.schema_tracking = _flag(options, "schematracking")
         self._declared_cols = None
         if self.schema_tracking:
-            view0 = _LogView(self.root)
-            if view0.published:
-                self._declared_cols = view0.entries[view0.published[-1]].get(
-                    "columns"
-                )
+            view = _view(self.root)
+            self._declared_cols = view.entries[view.head].get("columns")
             if self._declared_cols is None:
                 raise ValueError(
                     "snaplog stream: schemaTracking=true needs an id-mapped "
@@ -577,7 +490,7 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # of bare rows — for this append-shaped source every admitted file
         # is an 'insert' (the mixin stamps it), which is exactly what the
         # retract/apply IVM consumers take as input without a withColumn
-        if str(options.get("readchangefeed", "false")).lower() == "true":
+        if _flag(options, "readchangefeed"):
             self.change_type = "insert"
 
         def _cap(key: str) -> int | None:
@@ -604,17 +517,16 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self.starting_ts is not None:
-            view = _LogView(self.root)
+            view = _view(self.root)
             ts = float(self.starting_ts)
             # first version committed AT OR AFTER the timestamp; none yet
             # -> subscribe from the head (future commits only)
-            off = view.head_offset
-            for v in view.versions:
-                if view.entries[v].get("ts", float("inf")) >= ts:
-                    off = v
-                    break
+            off = next(
+                (v for v in view.versions if view.entries[v].get("ts", ts) >= ts),
+                _head_offset(view),
+            )
         elif self.starting == "latest":
-            off = _LogView(self.root).head_offset
+            off = _head_offset(_view(self.root))
         else:
             off = int(self.starting)
         if self._cursor is None:
@@ -622,8 +534,8 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         return {"next_version": off}
 
     def latestOffset(self) -> dict:
-        view = _LogView(self.root)
-        head = view.head_offset
+        view = _view(self.root)
+        head = _head_offset(view)
         if self.max_files is None and self.max_bytes is None:
             self._cursor = head
             return {"next_version": head}
@@ -637,21 +549,19 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         n_files = n_bytes = n_data_versions = 0
         v = cur
         while v < head:
-            e = view.entries.get(v)
-            if e is None or e.get("kind") == "staged":
-                v += 1  # invisible to consumers: advancing over it is free
-                continue
-            added, _removed = view.delta[v]
-            nf = len(added)
-            nb = sum(f["size"] for f in added)
-            over = (
-                self.max_files is not None and n_files + nf > self.max_files
-            ) or (self.max_bytes is not None and n_bytes + nb > self.max_bytes)
-            if n_data_versions > 0 and over:
-                break  # the cap trips BETWEEN versions, never inside one
-            n_files += nf
-            n_bytes += nb
-            n_data_versions += 1
+            # a staged version is invisible: advancing over it is free
+            if v in view.delta:
+                added = view.delta[v][0]
+                nf = len(added)
+                nb = sum(f["size"] for f in added)
+                over = (
+                    self.max_files is not None and n_files + nf > self.max_files
+                ) or (self.max_bytes is not None and n_bytes + nb > self.max_bytes)
+                if n_data_versions > 0 and over:
+                    break  # the cap trips BETWEEN versions, never inside one
+                n_files += nf
+                n_bytes += nb
+                n_data_versions += 1
             v += 1
         self._cursor = v
         return {"next_version": v}
@@ -662,24 +572,24 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
         # pacing frontier at least at the end of the batch being planned
         if self._cursor is None or hi > self._cursor:
             self._cursor = hi
-        view = _LogView(self.root)
+        view = _view(self.root)
+        head_cols = (
+            view.entries[view.head].get("columns") if view.published else None
+        )
         out: list[InputPartition] = []
         for v in view.published:
             if not lo <= v < hi:
                 continue
             added, removed = view.delta[v]
-            kind = view.kind(v)
+            kind = view.entries[v].get("kind", "data")
             if kind == "delete-sidecar":
                 # the "added" file is tombstone KEYS, not table rows: no
                 # knob may emit it as data (module docstring)
                 if self.skip_change_commits:
                     continue
-                hint = (
-                    "set .option('skipChangeCommits', 'true') to skip it — "
-                    "ignoreChanges cannot admit tombstone keys as table rows"
-                    if self.ignore_changes
-                    else "set .option('skipChangeCommits', 'true') to skip it"
-                )
+                hint = "set .option('skipChangeCommits', 'true') to skip it"
+                if self.ignore_changes:
+                    hint += " — ignoreChanges cannot admit tombstone keys as table rows"
                 raise ValueError(
                     f"snaplog stream: version {v} is a delete-sidecar "
                     f"(merge-on-read tombstones); {hint}"
@@ -709,7 +619,6 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
                 # schema declared at stream start — but if the table
                 # evolved PAST that schema mid-stream, emitting would
                 # produce wrong columns; fail loudly, restart re-declares
-                head_cols = view.entries[view.published[-1]].get("columns")
                 if head_cols != self._declared_cols:
                     raise ValueError(
                         "snaplog stream: table schema evolved mid-stream "
@@ -717,14 +626,12 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
                         "declared at start) — restart the stream to pick "
                         "up the evolved schema"
                     )
-                for f in added:
-                    out.append(
-                        _FilePartition(
-                            f["path"],
-                            v,
-                            proj=view.file_projection(f, self._declared_cols),
-                        )
+                out += [
+                    _FilePartition(
+                        f["path"], v, view.file_projection(f, self._declared_cols)
                     )
+                    for f in added
+                ]
                 continue
             for f in added:
                 # EVOLVING logs: a file written under an OLDER schema
@@ -733,21 +640,16 @@ class _SnapLogStreamReader(_ArrowFileReadMixin, DataSourceStreamReader):
                 # change).  The id-mapped BATCH reader handles it; the
                 # stream refuses loudly instead of emitting wrong columns
                 # (opt in with .option('schemaTracking', 'true') above).
-                sv = f.get("schema_v")
-                if sv is not None:
-                    written = view.entries.get(sv, {}).get("columns")
-                    head_cols = view.entries[view.published[-1]].get("columns")
-                    if written is not None and written != head_cols:
-                        raise ValueError(
-                            f"snaplog stream: version {v} adds files written "
-                            f"under schema generation v{sv}, which differs "
-                            "from the live schema — evolved history is "
-                            "batch-readable via the id mapping (spark.read."
-                            "format('snaplog')), or opt in to id-mapped "
-                            "streaming with .option('schemaTracking', "
-                            "'true'); restart the stream to pick up the "
-                            "evolved schema"
-                        )
+                if view.file_projection(f, head_cols) is not None:
+                    raise ValueError(
+                        f"snaplog stream: version {v} adds files written "
+                        f"under schema generation v{f['schema_v']}, which "
+                        "differs from the live schema — evolved history is "
+                        "batch-readable via the id mapping (spark.read."
+                        "format('snaplog')), or opt in to id-mapped "
+                        "streaming with .option('schemaTracking', 'true'); "
+                        "restart the stream to pick up the evolved schema"
+                    )
                 out.append(_FilePartition(f["path"], v))
         return out
 
@@ -781,20 +683,11 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
     the right tool."""
 
     def __init__(self, options: dict):
-        common = _parse_common_options(options)
-        self.root = common["root"]
-        self.columns = common["columns"]
-        self.arrow = common["arrow"]
-        self.version_as_of = options.get("versionasof")
-        self.timestamp_as_of = options.get("timestampasof")
-        if self.version_as_of is not None and self.timestamp_as_of is not None:
-            raise ValueError(
-                "snaplog source: versionAsOf and timestampAsOf are mutually "
-                "exclusive"
-            )
-        self.cdf = str(options.get("readchangefeed", "false")).lower() == "true"
+        self.root, self.columns = _path_and_columns(options)
+        self.options = options
+        self.cdf = _flag(options, "readchangefeed")
         if self.cdf:
-            if self.version_as_of is not None or self.timestamp_as_of is not None:
+            if "versionasof" in options or "timestampasof" in options:
                 raise ValueError(
                     "snaplog source: readChangeFeed and versionAsOf/"
                     "timestampAsOf are mutually exclusive (the feed has its "
@@ -807,8 +700,6 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
                     ".option('startingVersion', <first version to emit>)"
                 )
             self.cdf_start = int(start)
-            end = options.get("endingversion")
-            self.cdf_end = int(end) if end is not None else None
             self.change_type = "insert"  # the mixin appends _change_type
             # rewrite-bearing ranges (round 13): optional row key for
             # update_preimage/postimage pairing, and the size ceiling on
@@ -819,28 +710,11 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
                 options.get("maxdiffbytes", 256 * 1024 * 1024)
             )
 
-    def _resolve_version(self, view: _LogView) -> int:
-        if self.version_as_of is not None:
-            v = int(self.version_as_of)
-            if v not in view.entries:
-                raise ValueError(f"snaplog: no version {v} under {self.root}")
-            if view.kind(v) == "staged":
-                raise ValueError(
-                    f"snaplog: version {v} is staged (write-audit-publish) — "
-                    "not consumer-visible; publish it first"
-                )
-            return v
-        if self.timestamp_as_of is not None:
-            return _log(self.root).version_as_of_ts(float(self.timestamp_as_of))
-        if not view.published:
-            raise ValueError(f"no published versions under {self.root}")
-        return view.published[-1]
-
     def partitions(self) -> Sequence[InputPartition]:
-        view = _LogView(self.root)
+        view = _view(self.root)
+        v = _resolve(self.options, view)
         if self.cdf:
-            return self._cdf_partitions(view)
-        v = self._resolve_version(view)
+            return self._cdf_partitions(view, v)
         # first-published version per file, from the one forward pass
         added_in: dict[str, int] = {}
         for pv in view.published:
@@ -850,11 +724,8 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
                 added_in.setdefault(f["path"], pv)
         entry = view.entries[v]
         live_cols = entry.get("columns")  # present on EvolvingLog entries
-        if not entry["files"]:
-            # a delete-only rewrite can legitimately empty the table;
-            # Delta returns an empty DataFrame, not an error (round 13,
-            # ADVICE r12 #5) — and Spark accepts an empty partition list
-            return []
+        # a delete-only rewrite can legitimately empty the table: no
+        # partitions, an empty DataFrame as in Delta (Spark accepts that)
         return [
             _FilePartition(
                 f["path"],
@@ -864,18 +735,7 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
             for f in entry["files"]
         ]
 
-    def _cdf_partitions(self, view: _LogView) -> Sequence[InputPartition]:
-        end = self.cdf_end
-        if end is None:
-            if not view.published:
-                raise ValueError(f"no published versions under {self.root}")
-            end = view.published[-1]
-        if end not in view.entries:
-            raise ValueError(
-                f"snaplog readChangeFeed: endingVersion {end} does not "
-                f"exist (log has versions {view.versions[:1]}..."
-                f"{view.versions[-1:]})"
-            )
+    def _cdf_partitions(self, view: LogView, end: int) -> Sequence[InputPartition]:
         live_cols = view.entries[end].get("columns")
         out: list[InputPartition] = []
         # path -> file dict over the walk so far: removed entries in
@@ -883,9 +743,10 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
         # schema generations — resolved from the manifests that added them
         seen: dict[str, dict] = {}
         for v in view.published:
+            if v > end:
+                break
             added, removed = view.delta[v]
-            in_range = self.cdf_start <= v <= end
-            if removed and in_range:
+            if v >= self.cdf_start and removed:
                 # not append-only: fall back from the manifests-only fast
                 # path to the join-based row diff (round 13, VERDICT r12
                 # missing #3) — ONE bounded task over the touched slice
@@ -909,19 +770,12 @@ class _SnapLogBatchReader(_ArrowFileReadMixin, DataSourceReader):
                         self.cdf_key,
                     )
                 )
-                for f in added:
-                    seen[f["path"]] = f
-                continue
-            for f in added:
-                seen[f["path"]] = f
-            if not in_range:
-                continue
-            for f in added:
-                out.append(
-                    _FilePartition(
-                        f["path"], v, proj=view.file_projection(f, live_cols)
-                    )
-                )
+            elif v >= self.cdf_start:
+                out += [
+                    _FilePartition(f["path"], v, view.file_projection(f, live_cols))
+                    for f in added
+                ]
+            seen.update((f["path"], f) for f in added)
         # an empty range (no published changes) is a legitimate quiet
         # table, not an error — Delta's CDF returns empty too (round 13,
         # ADVICE r12 #5)
@@ -938,6 +792,50 @@ class _TaskFile(WriterCommitMessage):
         self.rows = rows
 
 
+def _task_files(messages) -> list[dict]:
+    """The manifest file dicts of the task files a micro-batch wrote."""
+    return [
+        {"path": m.path, "size": m.size}
+        for m in messages
+        if m is not None and m.path is not None
+    ]
+
+
+def _remove_files(files) -> None:
+    for f in files:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(f["path"])
+
+
+def _commit_sink_batch(root, files, schema, app_id, batch_id, drop_files) -> None:
+    """The commit both snaplog sinks share: ONE put-if-absent append of
+    the batch's written ``files`` carrying the SetTransaction ``(app_id,
+    batch_id)`` (``SnapshotLog.commit_append_files``).  ``drop_files``
+    removes the files when no entry references them: an all-empty batch,
+    or a replay the carried txn map answers."""
+    if not files:
+        drop_files()
+        return  # an all-empty micro-batch commits nothing (Delta too)
+    log = SnapshotLog(root)
+    tip = log.latest_version()
+    if tip >= 0 and "columns" in log.entry(tip):
+        # an EvolvingLog table: sink commits don't stamp column ids /
+        # per-file schema_v, so they would silently break the id-mapped
+        # reader — refuse loudly instead (append through
+        # EvolvingLog.append_columns for id-schema tables)
+        raise ValueError(
+            "snaplog sink: target log carries an id-mapped (evolving) "
+            "schema; the sink only writes plain snapshot logs"
+        )
+    log.commit_append_files(
+        files,
+        schema,
+        note=f"{app_id} batch {batch_id}",
+        txn=(app_id, int(batch_id)),
+        on_replay=drop_files,
+    )
+
+
 class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
     """The snapshot log as a STREAMING SINK (round 12) —
     ``df.writeStream.format("snaplog").option("path", root)`` — the Delta
@@ -950,14 +848,11 @@ class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
         parquet file under a sink-private directory and returns its
         (path, size, rows) as the task's commit message — no data ever
         moves through the driver;
-      * ``commit()`` runs on the DRIVER once all tasks succeed: one
-        put-if-absent append commit referencing the task files, with the
-        micro-batch id recorded as the Delta SetTransaction
-        ``(appId, batchId)`` IN the same entry
-        (``SnapshotLog.commit_append_files``) — so a foreachBatch-style
-        retry of an already-committed batch is a no-op that removes its
-        re-written orphan files: exactly-once AT THE TABLE, the property
-        the atomic txn-map commit exists for;
+      * ``commit()`` runs on the DRIVER once all tasks succeed:
+        ``_commit_sink_batch`` publishes the task files with the batch's
+        Delta SetTransaction ``(appId, batchId)`` in the same entry, so a
+        retried batch is a no-op that removes its orphan files —
+        exactly-once AT THE TABLE;
       * ``abort()`` removes the task files — a failed micro-batch leaves
         no orphans and, because the manifest is the only read path, could
         never have leaked rows anyway.
@@ -1027,51 +922,18 @@ class _SnapLogStreamWriter(DataSourceStreamArrowWriter):
         return _TaskFile(path, os.path.getsize(path), rows)
 
     def commit(self, messages, batchId: int) -> None:
-        import contextlib
-
-        from experiments_datafusion_spark.operators.table_format import (
-            SnapshotLog,
-        )
-
-        files = [
-            {"path": m.path, "size": m.size}
-            for m in messages
-            if m is not None and m.path is not None
-        ]
-        if not files:
-            return  # an all-empty micro-batch commits nothing (Delta too)
-        log = SnapshotLog(self.root)
-        tip = log.latest_version()
-        if tip >= 0 and "columns" in log.entry(tip):
-            # an EvolvingLog table: sink commits don't stamp column ids /
-            # per-file schema_v, so they would silently break the id-mapped
-            # reader — refuse loudly instead (append through
-            # EvolvingLog.append_columns for id-schema tables)
-            raise ValueError(
-                "snaplog sink: target log carries an id-mapped (evolving) "
-                "schema; the sink only writes plain snapshot logs"
-            )
-
-        def drop_orphans() -> None:
-            for f in files:
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(f["path"])
-
-        log.commit_append_files(
+        files = _task_files(messages)
+        _commit_sink_batch(
+            self.root,
             files,
             self.schema_list,
-            note=f"{self.app_id} batch {batchId}",
-            txn=(self.app_id, int(batchId)),
-            on_replay=drop_orphans,
+            self.app_id,
+            batchId,
+            lambda: _remove_files(files),
         )
 
     def abort(self, messages, batchId: int) -> None:
-        import contextlib
-
-        for m in messages:
-            if m is not None and getattr(m, "path", None):
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(m.path)
+        _remove_files(_task_files(messages))
 
 
 def register_snaplog_sql(
@@ -1099,27 +961,8 @@ def register_snaplog_sql(
     HISTORY analog: one row per log version (version, kind, note,
     ts, n_files, is_published) from catalog metadata only, no data read.
     """
-    view = _LogView(root)
-    if version_as_of is not None and timestamp_as_of is not None:
-        raise ValueError(
-            "register_snaplog_sql: version_as_of and timestamp_as_of are "
-            "mutually exclusive"
-        )
-    if timestamp_as_of is not None:
-        v = _log(root).version_as_of_ts(float(timestamp_as_of))
-    elif version_as_of is not None:
-        v = int(version_as_of)
-        if v not in view.entries:
-            raise ValueError(f"snaplog: no version {v} under {root}")
-        if view.kind(v) == "staged":
-            raise ValueError(
-                f"snaplog: version {v} is staged (write-audit-publish) — "
-                "not consumer-visible; publish it first"
-            )
-    else:
-        if not view.published:
-            raise ValueError(f"no published versions under {root}")
-        v = view.published[-1]
+    view = _view(root)
+    v = view.resolve(version=version_as_of, ts=timestamp_as_of)
     (
         spark.read.format("snaplog")
         .option("path", root)
@@ -1131,7 +974,7 @@ def register_snaplog_sql(
         rows = [
             (
                 int(w),
-                view.kind(w),
+                e.get("kind", "data"),
                 str(e.get("note", "")),
                 float(e["ts"]) if e.get("ts") is not None else None,
                 len(e.get("files") or []),
@@ -1165,11 +1008,8 @@ def register_snaplog_changes_sql(
     contents never shift under a later commit); rewrite-bearing ranges
     resolve through the bounded diff fallback, with ``cdf_key`` naming
     the row key for update pre/post image pairing."""
-    view = _LogView(root)
     if ending_version is None:
-        if not view.published:
-            raise ValueError(f"no published versions under {root}")
-        ending_version = view.published[-1]
+        ending_version = _view(root).head
     reader = (
         spark.read.format("snaplog")
         .option("path", root)
@@ -1199,8 +1039,8 @@ def snaplog_fast_sink(root: str, app_id: str):
     pyarrow writes; measured ~1.7x the all-JVM write, BENCH_NOTES r12
     "Sink-API ingest").  This twin keeps the parquet write in the JVM
     (``batch_df.write.parquet`` — whole-stage codegen, zero Python in the
-    data path) and reuses ``SnapshotLog.commit_append_files`` for the
-    commit, so it is exactly-once with the SAME ledger semantics.  Because
+    data path) and commits through the same ``_commit_sink_batch``, so it
+    is exactly-once with the SAME ledger semantics.  Because
     BOTH paths record ``(appId, batchId)`` through the same map, a
     pipeline can switch between them mid-stream (same appId + checkpoint)
     and replays still dedup across the switch — pinned in
@@ -1224,40 +1064,17 @@ def snaplog_fast_sink(root: str, app_id: str):
         import shutil
         import uuid
 
-        from experiments_datafusion_spark.operators.table_format import (
-            SnapshotLog,
-        )
-
-        log = SnapshotLog(root)
-        tip = log.latest_version()
-        if tip >= 0 and "columns" in log.entry(tip):
-            raise ValueError(
-                "snaplog sink: target log carries an id-mapped (evolving) "
-                "schema; the sink only writes plain snapshot logs"
-            )
         task_dir = os.path.join(root, "ws", f"fb-{uuid.uuid4().hex}")
-        batch_df.write.mode("error").parquet(task_dir)  # the JVM write job
-        files = [
-            {"path": p, "size": os.path.getsize(p)}
-            for p in sorted(
-                os.path.join(task_dir, f)
-                for f in os.listdir(task_dir)
-                if f.endswith(".parquet")
+        files = _write_files(batch_df, task_dir)  # the JVM write job
+        with _removed_on_error(task_dir):
+            _commit_sink_batch(
+                root,
+                files,
+                _entry_schema(batch_df),
+                app_id,
+                batch_id,
+                lambda: shutil.rmtree(task_dir, ignore_errors=True),
             )
-        ]
-        if not files:
-            shutil.rmtree(task_dir, ignore_errors=True)
-            return  # an all-empty micro-batch commits nothing (Delta too)
-        log.commit_append_files(
-            files,
-            [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in batch_df.schema.fields
-            ],
-            note=f"{app_id} batch {batch_id}",
-            txn=(app_id, int(batch_id)),
-            on_replay=lambda: shutil.rmtree(task_dir, ignore_errors=True),
-        )
 
     return ingest
 
@@ -1276,29 +1093,13 @@ class SnapshotLogDataSource(DataSource):
         return "snaplog"
 
     def schema(self) -> str:
-        root = self.options.get("path")
-        if not root:
-            raise ValueError("snaplog source needs .option('path', <log root>)")
-        view = _LogView(root)
-        # schema of the version a BATCH read would resolve (streaming
-        # appends never change the schema, so the published head's schema
-        # serves both modes; versionAsOf must surface ITS schema — an
-        # old snapshot may predate an evolution)
-        v_opt = self.options.get("versionasof")
-        cdf = str(self.options.get("readchangefeed", "false")).lower() == "true"
-        end_opt = self.options.get("endingversion") if cdf else None
-        if v_opt is not None and int(v_opt) in view.entries:
-            entry = view.entries[int(v_opt)]
-        elif end_opt is not None and int(end_opt) in view.entries:
-            # CDF reads project files to entries[endingVersion]'s columns
-            # (_cdf_partitions), so the declared DDL must resolve from the
-            # SAME entry — the published head may have evolved past the
-            # range's end (round 13, ADVICE r12 #4)
-            entry = view.entries[int(end_opt)]
-        else:
-            if not view.published:
-                raise ValueError(f"no published versions under {root}")
-            entry = view.entries[view.published[-1]]
+        root, keep = _path_and_columns(self.options)
+        # the schema of the version the read scans (``_resolve``, the
+        # same call the batch reader plans with): an AS OF snapshot or a
+        # CDF range's end may predate an evolution of the head.  Streams
+        # resolve the published head, whose schema appends never change.
+        view = _view(root)
+        entry = view.entries[_resolve(self.options, view)]
         if "columns" in entry:
             # EvolvingLog: the id-carrying live column list IS the schema
             # (an evolve() entry has no physical "schema" — it rewrote no
@@ -1307,9 +1108,7 @@ class SnapshotLogDataSource(DataSource):
             cols = [(name, typ, True) for _i, name, typ in entry["columns"]]
         else:
             cols = entry["schema"]
-        want = (self.options.get("columns") or "").strip()
-        if want:
-            keep = [c.strip() for c in want.split(",") if c.strip()]
+        if keep:
             by_name = {name: (name, typ) for name, typ, _n in cols}
             missing = [c for c in keep if c not in by_name]
             if missing:
@@ -1319,7 +1118,7 @@ class SnapshotLogDataSource(DataSource):
                 )
             cols = [(name, by_name[name][1], True) for name in keep]
         ddl = ", ".join(f"{name} {typ}" for name, typ, _n in cols)
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
+        if _flag(self.options, "readchangefeed"):
             ddl += ", _change_type string"  # the Delta CDF row shape
         return ddl + ", _commit_version bigint"
 

@@ -45,14 +45,7 @@ from experiments_datafusion_spark.operators.table_format import (
     mor_current_view,
     publish_staged,
 )
-
-
-def _register(spark):
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
-
-    register_sources(spark)
+from experiments_datafusion_spark.sources import register_sources
 
 
 def _entry_paths(log: SnapshotLog, v: int) -> set:
@@ -149,7 +142,7 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             pubs = sorted(model)
             if len(pubs) < 3:
                 continue
-            _register(spark)
+            register_sources(spark)
             a, b = sorted(rng.sample(pubs[1:], 2))
             got = (
                 spark.read.format("snaplog")
@@ -180,7 +173,7 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             if vacuumed or drains >= 2:
                 continue
             drains += 1
-            _register(spark)
+            register_sources(spark)
             out = str(tmp_path / f"drain{seed}-{step}")
             q = (
                 spark.readStream.format("snaplog")
@@ -316,7 +309,7 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
     for pv in probe_versions:
         assert _read_ids(log, spark, pv) == model[pv], f"seed={seed} as-of v{pv}"
         # TIMESTAMP AS OF the synthetic clock resolves to the same state
-        assert log.version_as_of_ts(float(pv) + 0.5) >= pv
+        assert log.view().resolve(ts=float(pv) + 0.5) >= pv
 
     # CDF consistency: changes_between two random versions == the model diff
     a, b = sorted(rng.sample(sorted(model), 2))
@@ -395,7 +388,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
         # round 13: a FRESH schema-tracked stream must drain the whole
         # evolved history id-mapped to the CURRENT live schema — same
         # answer as read_evolved, through the streaming path
-        _register(spark)
+        register_sources(spark)
         out = str(tmp_path / f"tdrain{seed}-{step}")
         q = (
             spark.readStream.format("snaplog")

@@ -720,29 +720,28 @@ def test_rebased_append_schema_check_uses_new_latest(spark, tmp_path):
 
 
 def test_staged_snapshots_are_invisible_until_published(spark, tmp_path):
-    """kind='staged' entries never surface through head_published; a
+    """kind='staged' entries never surface as the view's published head; a
     published batch merges into the head; an abandoned staged batch's
     files are vacuumable while the published state survives."""
     from experiments_datafusion_spark.operators.table_format import (
         SnapshotLog,
         commit_staged,
-        head_published,
         publish_staged,
     )
 
     log = SnapshotLog(str(tmp_path / "t"))
     log.commit(spark.range(10))
-    assert head_published(log) == 0
+    assert log.view().head == 0
     sv = commit_staged(log, spark.range(10, 20))
-    assert head_published(log) == 0  # staged: durable but invisible
-    assert log.read(spark, head_published(log)).count() == 10
+    assert log.view().head == 0  # staged: durable but invisible
+    assert log.read(spark, log.view().head).count() == 10
     pv = publish_staged(log, sv)
-    assert head_published(log) == pv
+    assert log.view().head == pv
     assert log.read(spark, pv).count() == 20  # merged into the head
     # an audit-failed batch: staged, never published, vacuumed away
     bad = commit_staged(log, spark.range(99, 120))
     bad_files = {fe.path for fe in log.manifest(bad)}
-    assert head_published(log) == pv
+    assert log.view().head == pv
     removed = set(log.vacuum(keep={pv}))
     assert bad_files <= removed
     assert log.read(spark, pv).count() == 20  # published state intact

@@ -623,26 +623,6 @@ def test_snaplog_source_column_pruning(spark, tmp_path):
         )
 
 
-def test_snaplog_source_arrow_and_row_paths_agree(spark, tmp_path):
-    """The legacy row-tuple arm (arrow=false) is kept only for the A/B
-    measurement; both paths must emit identical data."""
-    root = str(tmp_path / "t")
-    log = SnapshotLog(root)
-    log.commit_append(
-        spark.range(50).select("id", (F.col("id") % 7).alias("g"))
-    )
-    log.commit_append(
-        spark.range(50, 80).select("id", (F.col("id") % 7).alias("g"))
-    )
-    _drain_snaplog(spark, root, str(tmp_path / "a"), str(tmp_path / "chka"))
-    _drain_snaplog(
-        spark, root, str(tmp_path / "b"), str(tmp_path / "chkb"), arrow="false"
-    )
-    a = sorted(map(tuple, spark.read.parquet(str(tmp_path / "a")).collect()))
-    b = sorted(map(tuple, spark.read.parquet(str(tmp_path / "b")).collect()))
-    assert a == b
-
-
 # ---- streaming-dedup band-state compaction (the deferred LSM merge) -----------------
 
 
@@ -774,12 +754,13 @@ def test_timestamp_as_of_resolution(spark, tmp_path):
     for i, n in enumerate((3, 6, 9)):
         v = log.commit(spark.range(n), note=f"v{i}")
         log.stamp_ts(v, 10.0 * (i + 1))
-    assert log.version_as_of_ts(25.0) == 1
-    assert log.version_as_of_ts(20.0) == 1  # inclusive boundary
-    assert log.version_as_of_ts(19.999) == 0
-    assert log.version_as_of_ts(1e9) == 2
+    view = log.view()
+    assert view.resolve(ts=25.0) == 1
+    assert view.resolve(ts=20.0) == 1  # inclusive boundary
+    assert view.resolve(ts=19.999) == 0
+    assert view.resolve(ts=1e9) == 2
     with pytest.raises(ValueError, match="no version committed"):
-        log.version_as_of_ts(5.0)
+        view.resolve(ts=5.0)
     # every publish stamps a real clock by default
     fresh = SnapshotLog(str(tmp_path / "u"))
     fresh.commit(spark.range(2))

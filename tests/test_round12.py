@@ -26,14 +26,7 @@ from experiments_datafusion_spark.operators.table_format import (
     prune,
     publish_staged,
 )
-
-
-def _register(spark):
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
-
-    register_sources(spark)
+from experiments_datafusion_spark.sources import register_sources
 
 
 def _ids(log: SnapshotLog, spark, version=None) -> list[int]:
@@ -226,7 +219,7 @@ def _build_appends(spark, root: str, n_versions: int, files_per_version: int = 2
 def _paced_batches(spark, root: str, chk: str, expected_rows: int, **options):
     """Run a processingTime-paced stream until the sink saw expected_rows;
     returns [(batch_id, sorted [(version, rows)])]."""
-    _register(spark)
+    register_sources(spark)
     batches: list = []
 
     def sink(df, bid):
@@ -306,7 +299,7 @@ def test_snaplog_paced_availablenow_one_bounded_window_per_run(spark, tmp_path):
     """Trigger.AvailableNow captures one offset per run (Spark wraps
     non-admission-control sources), so each run drains exactly one paced
     window and repeated runs walk the log — bounded, live, exactly-once."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _build_appends(spark, root, 6)
     chk = str(tmp_path / "chk")
@@ -341,7 +334,7 @@ def test_snaplog_paced_availablenow_one_bounded_window_per_run(spark, tmp_path):
 
 
 def _drain(spark, root, out, chk, **options):
-    _register(spark)
+    register_sources(spark)
     reader = spark.readStream.format("snaplog").option("path", root)
     for k, v in options.items():
         reader = reader.option(k, v)
@@ -441,7 +434,7 @@ def _batch_log(spark, root: str) -> SnapshotLog:
 
 
 def test_snaplog_batch_read_matches_log_read(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _batch_log(spark, root)
     got = spark.read.format("snaplog").option("path", root).load()
@@ -459,7 +452,7 @@ def test_snaplog_batch_read_matches_log_read(spark, tmp_path):
 
 
 def test_snaplog_batch_version_and_timestamp_as_of(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _batch_log(spark, root)
     for v in log.versions():
@@ -486,10 +479,22 @@ def test_snaplog_batch_version_and_timestamp_as_of(spark, tmp_path):
             .load()
             .collect()
         )
+    # a later FULL commit that adds a column: AS OF the earlier version,
+    # by number or by timestamp, declares that version's schema
+    plain = str(tmp_path / "u")
+    log2 = SnapshotLog(plain)
+    log2.commit(spark.range(3), note="v0")
+    log2.commit(spark.range(5).select("id", (F.col("id") * 10).alias("v")))
+    log2.stamp_ts(0, 10.0)
+    log2.stamp_ts(1, 20.0)
+    for opt, val in (("versionAsOf", "0"), ("timestampAsOf", "15.0")):
+        got = spark.read.format("snaplog").option("path", plain).option(opt, val).load()
+        assert got.columns == ["id", "_commit_version"]
+        assert sorted(r.id for r in got.collect()) == [0, 1, 2]
 
 
 def test_snaplog_batch_column_pruning_and_validation(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _batch_log(spark, root)
     df = (
@@ -661,7 +666,7 @@ def _sink_stream(spark, src: str, root: str, chk: str, app_id: str = "ing"):
 def test_snaplog_sink_commits_per_batch_exactly_once(spark, tmp_path):
     """writeStream.format('snaplog'): one append commit per micro-batch,
     the batch's SetTransaction record in the same entry, restart = no-op."""
-    _register(spark)
+    register_sources(spark)
     src, root, chk = str(tmp_path / "src"), str(tmp_path / "t"), str(tmp_path / "chk")
     spark.range(30).select("id", (F.col("id") * 3).alias("v")).repartition(
         3
@@ -752,7 +757,7 @@ def test_snaplog_sink_abort_and_overwrite_refusal(spark, tmp_path):
 def test_snaplog_sink_schema_drift_fails_commit(spark, tmp_path):
     """A second stream with a drifted schema must fail at the append
     commit (the table-format schema gate), not poison the table."""
-    _register(spark)
+    register_sources(spark)
     src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
     root = str(tmp_path / "t")
     spark.range(6).select("id").repartition(1).write.parquet(src1)
@@ -772,7 +777,7 @@ def test_snaplog_sink_schema_drift_fails_commit(spark, tmp_path):
 
 
 def test_snaplog_batch_cdf_options_and_refusals(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
@@ -842,7 +847,7 @@ def test_snaplog_batch_reads_evolved_log_through_id_mapping(spark, tmp_path):
     files rename by id (price_c -> amount_c), widen (int -> bigint), drop
     (status never surfaces), and back-fill NULL for post-dating columns —
     matching read_evolved exactly, plus the _commit_version stamp."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _evolved_log(spark, root)
     got = spark.read.format("snaplog").option("path", root).load()
@@ -880,7 +885,7 @@ def test_snaplog_stream_refuses_old_generation_files(spark, tmp_path):
     """Streaming a log whose range includes files written under an OLDER
     schema generation must fail loudly (the Delta schema-change rule) —
     the batch reader is the sanctioned path for evolved history."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _evolved_log(spark, root)
     with pytest.raises(Exception, match="schema generation"):
@@ -891,7 +896,7 @@ def test_snaplog_ignoredeletes_admits_delete_only_commits(spark, tmp_path):
     """Delta's third change-commit knob: a commit that ONLY removes files
     (retention/partition delete — nothing to re-emit) is admitted under
     ignoreDeletes and emits nothing; rewrites still need ignoreChanges."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="a0")
@@ -971,7 +976,7 @@ def test_snaplog_stream_readchangefeed_emits_cdf_shape(spark, tmp_path):
     """readStream readChangeFeed=true: the source itself emits the Delta
     CDF row shape (_change_type='insert' + _commit_version) — the input
     the retract/apply IVM consumers take without a manual withColumn."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(3), note="a0")
@@ -1023,7 +1028,7 @@ def test_snaplog_sink_to_source_roundtrip_pipeline(spark, tmp_path):
     into a drain — per-batch commits on the write side surface as
     per-version micro-batches on the read side, end to end, no user
     commit code anywhere."""
-    _register(spark)
+    register_sources(spark)
     src, root = str(tmp_path / "src"), str(tmp_path / "t")
     spark.range(24).select("id").repartition(3).write.parquet(src)
     schema = spark.read.parquet(src).schema
@@ -1050,7 +1055,7 @@ def test_snaplog_sink_to_source_roundtrip_pipeline(spark, tmp_path):
 def test_snaplog_starting_timestamp(spark, tmp_path):
     """startingTimestamp: a NEW subscription begins at the first commit
     stamped at or after the timestamp (Delta's startingVersion twin)."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     for i in range(3):
@@ -1087,7 +1092,7 @@ def test_snaplog_two_sinks_race_one_table(spark, tmp_path):
     """Two sink pipelines (distinct appIds) drain into ONE table
     concurrently: the rebased file-commit path must land every batch of
     both exactly once, with both SetTransaction ledgers at the tip."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     srcs = {}
     for app, lo in (("A", 0), ("B", 100)):
@@ -1132,7 +1137,7 @@ def test_snaplog_paced_stream_with_live_writer(spark, tmp_path):
     the paced stream drains — every batch stays within the cap (one
     2-file version per batch at maxFilesPerTrigger=2) and the union is
     exactly-once over everything committed."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     for i in range(2):
@@ -1183,7 +1188,7 @@ def test_snaplog_stream_reads_identically_across_log_checkpoint(spark, tmp_path)
     committed since the last offset, with the same per-version deltas (a
     raw tail-only listing would make the first post-checkpoint version
     look parentless and re-emit its carried files)."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="a0")
@@ -1204,7 +1209,7 @@ def test_snaplog_batch_evolved_read_survives_log_checkpoint(spark, tmp_path):
     """Checkpointing an EvolvingLog consolidates the entries the id
     mapping resolves schema generations THROUGH — the reader must
     produce identical rows before and after."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _evolved_log(spark, root)
     before = sorted(
@@ -1222,3 +1227,54 @@ def test_snaplog_batch_evolved_read_survives_log_checkpoint(spark, tmp_path):
         (r.k, r.amount_c, r.tag) for r in log.read_evolved(spark).collect()
     )
     assert [(k, a, t) for k, a, t, _v in after] == helper
+
+
+def test_snaplog_stream_drains_from_another_cwd(spark, tmp_path):
+    """A driver started outside the repository drains a snaplog stream:
+    the Python data-source planner process (latestOffset / partitions)
+    imports the package through the PYTHONPATH entry ``session.tune``
+    puts on ``sc.environment`` — ``addPyFile`` alone does not reach it."""
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    root = str(tmp_path / "t")
+    SnapshotLog(root).commit_append(spark.range(5))
+    script = tmp_path / "drain.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {str(repo)!r})
+            from pyspark.sql import SparkSession
+            from experiments_datafusion_spark.session import tune
+            from experiments_datafusion_spark.sources import register_sources
+
+            spark = tune(
+                SparkSession.builder.master("local[2]")
+                .config("spark.ui.enabled", "false")
+                .getOrCreate()
+            )
+            register_sources(spark)
+            q = (
+                spark.readStream.format("snaplog").option("path", {root!r}).load()
+                .writeStream.format("memory").queryName("drained")
+                .trigger(availableNow=True).start()
+            )
+            q.awaitTermination(120)
+            print("ROWS", spark.table("drained").count())
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "ROWS 5" in r.stdout, r.stderr[-3000:]

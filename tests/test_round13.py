@@ -1,8 +1,9 @@
 """Round-13 tests — the five ADVICE r12 fixes, pinned:
 
-1. ``version_as_of_ts`` skips staged (WAP) entries, so a timestamp
-   landing between a stage and its publish resolves to the newest
-   PUBLISHED version (staged snapshots stay invisible on every path);
+1. timestamp resolution (``SnapshotLog.view().resolve(ts=...)``) skips
+   staged (WAP) entries, so a timestamp landing between a stage and its
+   publish resolves to the newest PUBLISHED version (staged snapshots
+   stay invisible on every path);
 2. the snaplog sink's default appId derives from the query's
    checkpointLocation instead of a shared constant — two pipelines on
    one table without explicit appIds no longer collide on batchId
@@ -42,36 +43,30 @@ from experiments_datafusion_spark.operators.table_format import (
     commit_staged,
     publish_staged,
 )
-
-
-def _register(spark):
-    from experiments_datafusion_spark.sources.sortbench_source import (
-        register_sources,
-    )
-
-    register_sources(spark)
+from experiments_datafusion_spark.sources import register_sources
 
 
 # ---- 1. timestampAsOf skips staged entries -------------------------------------------
 
 
-def test_version_as_of_ts_skips_staged(spark, tmp_path):
+def test_timestamp_resolution_skips_staged(spark, tmp_path):
     log = SnapshotLog(str(tmp_path / "t"))
     log.commit_append(spark.range(4), note="v0")
     sv = commit_staged(log, spark.range(100, 104), note="staged v1")
     pv = publish_staged(log, sv)
     for v, ts in ((0, 10.0), (sv, 20.0), (pv, 30.0)):
         log.stamp_ts(v, ts)
+    view = log.view()
     # between stage and publish: the staged snapshot must stay invisible
-    assert log.version_as_of_ts(25.0) == 0
-    assert log.version_as_of_ts(20.0) == 0  # exactly at the stage stamp
-    assert log.version_as_of_ts(30.0) == pv
+    assert view.resolve(ts=25.0) == 0
+    assert view.resolve(ts=20.0) == 0  # exactly at the stage stamp
+    assert view.resolve(ts=30.0) == pv
     with pytest.raises(ValueError, match="no version"):
-        log.version_as_of_ts(5.0)
+        view.resolve(ts=5.0)
 
 
 def test_batch_timestamp_as_of_skips_staged(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
@@ -124,7 +119,7 @@ def test_two_default_appid_sinks_do_not_collide(spark, tmp_path):
     appId, one table.  With the derived default every batch of both
     lands; with the old shared constant the later pipeline's batches
     were silently treated as replays (and their files deleted)."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     srcs = {}
     for app, lo in (("A", 0), ("B", 100)):
@@ -206,7 +201,7 @@ def test_parent_txns_walkback_only_for_legacy_tips(spark, tmp_path):
 def test_cdf_schema_matches_ending_version_after_later_evolve(spark, tmp_path):
     from experiments_datafusion_spark.operators.table_format import EvolvingLog
 
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = EvolvingLog(root)
     log.commit_columns(
@@ -220,6 +215,8 @@ def test_cdf_schema_matches_ending_version_after_later_evolve(spark, tmp_path):
     log.append_columns(
         spark.createDataFrame([(3, 30)], "k bigint, amount_c bigint"), note="v2"
     )
+    for v in log.versions():
+        log.stamp_ts(v, 10.0 * (v + 1))
     got = (
         spark.read.format("snaplog")
         .option("path", root)
@@ -232,13 +229,25 @@ def test_cdf_schema_matches_ending_version_after_later_evolve(spark, tmp_path):
     assert got.columns == ["k", "price_c", "_change_type", "_commit_version"]
     rows = sorted((r.k, r.price_c, r._change_type, r._commit_version) for r in got.collect())
     assert rows == [(1, 10, "insert", 0), (2, 20, "insert", 0)]
+    # timestampAsOf resolves v0, so it must declare v0's schema too
+    as_of = (
+        spark.read.format("snaplog")
+        .option("path", root)
+        .option("timestampAsOf", "15.0")
+        .load()
+    )
+    assert as_of.columns == ["k", "price_c", "_commit_version"]
+    assert sorted((r.k, r.price_c, r._commit_version) for r in as_of.collect()) == [
+        (1, 10, 0),
+        (2, 20, 0),
+    ]
 
 
 # ---- 5. empty results are empty, not errors -------------------------------------------
 
 
 def test_batch_read_of_emptied_table_returns_zero_rows(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
@@ -260,7 +269,7 @@ def test_batch_read_of_emptied_table_returns_zero_rows(spark, tmp_path):
 
 
 def test_cdf_empty_range_returns_zero_rows(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
@@ -294,7 +303,7 @@ def _cdf(spark, root, start=0, **options):
 def test_cdf_compaction_version_emits_no_changes(spark, tmp_path):
     """A compaction rewrites the layout, not the rows — its CDF is empty
     (the old reader refused the whole range here)."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
@@ -306,7 +315,7 @@ def test_cdf_compaction_version_emits_no_changes(spark, tmp_path):
 
 
 def test_cdf_delete_rewrite_emits_delete_rows(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     v0 = log.commit_append(spark.range(8), note="v0")
@@ -322,7 +331,7 @@ def test_cdf_delete_rewrite_emits_delete_rows(spark, tmp_path):
 def test_cdf_update_rewrite_with_cdfkey_emits_image_pairs(spark, tmp_path):
     import pyspark.sql.functions as F
 
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     base = spark.range(5).select(
@@ -348,7 +357,7 @@ def test_cdf_update_rewrite_with_cdfkey_emits_image_pairs(spark, tmp_path):
 
 
 def test_cdf_rewrite_past_maxdiffbytes_refuses(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     v0 = log.commit_append(spark.range(8), note="v0")
@@ -387,7 +396,7 @@ def test_stream_schematracking_drains_evolved_history(spark, tmp_path):
     """Opt-in id-mapped streaming over an EvolvingLog: old-generation
     files surface renamed/widened to the declared (live) schema — the
     batch reader's semantics, now reachable as a backfill stream."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _evolving_fixture(spark, root)
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
@@ -413,7 +422,7 @@ def test_stream_schematracking_drains_evolved_history(spark, tmp_path):
 
 
 def test_stream_default_still_refuses_old_generation(spark, tmp_path):
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _evolving_fixture(spark, root)
     q = (
@@ -536,7 +545,7 @@ def test_fast_sink_and_writer_api_share_one_ledger(spark, tmp_path):
         snaplog_fast_sink,
     )
 
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     src = str(tmp_path / "src")
     spark.range(8).select("id").repartition(2).write.parquet(src)
@@ -630,7 +639,7 @@ def test_evolving_compact_preserves_rows_and_mapping(spark, tmp_path):
     the silent-corruption pair found by the round-13 probe."""
     import pyspark.sql.functions as F
 
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = _evolving_fixture(spark, root)  # v0 old gen, v1 evolve, v2 append
     v = log.compact(spark, target_file_bytes=1 << 30)
@@ -891,7 +900,7 @@ def test_evolved_batch_cdf_over_rewrite_id_maps_preimages(spark, tmp_path):
     old-generation files (written as price_c int) and must surface in
     the END version's column space (amount_c bigint) through the
     id-mapped diff projection."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _evolved_rewrite_log(spark, root)
     got = (
@@ -916,7 +925,7 @@ def test_cdf_stream_with_schema_tracking_drains_evolved_history(spark, tmp_path)
     """readChangeFeed + schemaTracking + skipChangeCommits compose: a
     backfill CDF stream over evolved history emits old-generation rows
     id-mapped with the CDF row shape, and skips the rewrite version."""
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     _evolved_rewrite_log(spark, root)
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
@@ -1017,7 +1026,7 @@ def test_register_snaplog_sql_pins_and_history(spark, tmp_path):
         register_snaplog_sql,
     )
 
-    _register(spark)
+    register_sources(spark)
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     log.commit_append(spark.range(4), note="v0")
