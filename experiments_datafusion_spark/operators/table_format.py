@@ -16,6 +16,12 @@ Design rules, each one a scale decision:
   concurrent commits; partial rewrites always check the files they read
   and rebase only over blind appends; a full commit never rebases.
   Incremental compaction is a partial rewrite.
+* **Every commit carries its parent's state forward in its one entry.**
+  The SetTransaction map (``txns``) and, on an id-mapped log, the live
+  column list (``columns``) ride each commit kind's entry, and each file
+  a commit writes gets its ``schema_v`` there too — published by the one
+  put-if-absent link, never stamped afterwards, so no crash can leave a
+  version published without them.
 * **Reads go through the manifest, not the directory.**  ``read`` hands
   Spark the version's explicit file list, exactly what a manifest-driven
   reader does; a file vacuumed away or an uncommitted stray in the same
@@ -160,9 +166,18 @@ def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None
         return files
 
 
+def _check_names(columns, names, what: str) -> None:
+    """On an id-mapped log (``columns`` not None) a batch must name the
+    live columns in order; a plain log checks nothing here."""
+    if columns is not None and [c[1] for c in columns] != list(names):
+        raise ValueError(
+            f"{what} schema mismatch: live columns {columns}, batch {list(names)}"
+        )
+
+
 def _id_projection(written, live) -> list:
     """Map a file's WRITTEN column list to the LIVE one through the stable
-    column ids (the Iceberg rule, see ``EvolvingLog``): one
+    column ids (the Iceberg rule, see ``SnapshotLog``): one
     ``(live_name, written_name | None, live_type)`` per live column, where
     a None written name means the column did not exist yet (NULL)."""
     by_id = {int(i): n for i, n, _t in written}
@@ -267,6 +282,28 @@ class SnapshotLog:
     NEW table identity, and inheriting the source's txn map would make a
     stream that switches to the clone silently skip batches.
 
+    SCHEMA EVOLUTION via COLUMN IDS — the Iceberg model (public spec:
+    every column carries a stable numeric id; files record the names
+    current when they were written; readers resolve file columns to the
+    live schema THROUGH the id).  What that buys at 100 TB: RENAME,
+    type-WIDEN, and DROP are pure metadata commits (``evolve``) — zero
+    data files rewritten, old files stay readable forever — instead of
+    the O(table) rewrite a name-keyed reader would force.  A log is
+    id-mapped when its entries carry ``"columns": [[id, name, type],
+    ...]`` (``commit_columns`` starts it); each manifest file then
+    carries ``"schema_v"``, the version whose column list the file was
+    WRITTEN under.  The carry rule covers ``columns`` exactly as it
+    covers ``txns``: every commit kind carries the parent's list into
+    its entry (``evolve`` and ``restore`` replace it, ``commit_columns``
+    declares it), a batch must name the live columns, and the files a
+    commit writes get their ``schema_v`` in the same entry — one
+    put-if-absent publish, no second write.  ``read`` groups an
+    id-mapped manifest by schema_v, maps each group's physical names to
+    the live schema by id (casting where the type widened, NULL where
+    the column didn't exist yet), and unions — so one scan spans files
+    written under any number of historical schemas; a plain log's read
+    is one parquet scan.
+
     ``view()`` is the one place where the staged rule is applied: staged
     (write-audit-publish) entries are invisible to consumers, and AS OF
     resolution — by version, by timestamp, or at the published head —
@@ -316,20 +353,20 @@ class SnapshotLog:
                 os.remove(tmp)
 
     def _republish(self, version: int, entry: dict) -> None:
-        """Replace an entry THIS writer already owns (post-publish stamp
-        of extra metadata on the version it just committed) — the only
-        place replacement is legal, because ownership was established by
-        winning the _publish link."""
+        """Replace an entry THIS writer already owns (``stamp_ts`` only)
+        — the one place replacement is legal, because ownership was
+        established by winning the _publish link."""
         tmp = self._tmp_path(version)
         with open(tmp, "w") as fh:
             json.dump(entry, fh)
         os.rename(tmp, os.path.join(self._log_dir, f"{version:05d}.json"))
 
-    def _parent_txns(self, parent: int) -> dict:
+    def _parent_txns(self, parent: int, pe: dict | None = None) -> dict:
         """The SetTransaction map to carry into a child of ``parent`` —
         the parent entry's ``txns`` (every commit kind carries it, class
-        docstring), empty for a fresh table.  Read at the tip, it is the
-        map a replay check consults (``append_once``, ``commit_append``).
+        docstring), empty for a fresh table; ``pe`` is the parent entry
+        when the caller already read it.  Read at the tip, it is the map
+        a replay check consults (``append_once``, ``commit_append``).
 
         LEGACY-LOG PROMOTION (round 13, ADVICE r12 #3): on a log written
         before the carry-forward rule, the tip may LACK ``txns`` while an
@@ -343,24 +380,32 @@ class SnapshotLog:
         descendant carries it and the walk-back is O(1) again."""
         if parent < 0:
             return {}
-        pe = self.entry(parent)
+        pe = self.entry(parent) if pe is None else pe
         if "txns" in pe:
             return dict(pe["txns"])
-        for v in reversed(self.versions()):
-            if v >= parent:
-                continue
-            e = self.entry(v)
-            if "txns" in e:
-                return dict(e["txns"])
+        entries = self.view().entries
+        for v in sorted(entries, reverse=True):
+            if v < parent and "txns" in entries[v]:
+                return dict(entries[v]["txns"])
         return {}
 
     @staticmethod
-    def _set_txns(entry: dict, txns: dict) -> None:
-        """Attach a non-empty txn map (empty maps are omitted to keep
-        txn-less tables' entries lean; carry-forward still converges
-        because once any entry holds ``txns`` every descendant does)."""
+    def _carry(entry: dict, txns: dict, columns, written=(), written_at=None) -> None:
+        """The carry rule (class docstring), applied to an entry before
+        its one publish: a non-empty txn map (empty maps are omitted to
+        keep txn-less tables' entries lean; carry-forward still converges
+        because once any entry holds ``txns`` every descendant does), and
+        on an id-mapped log the live ``columns`` plus a ``schema_v`` on
+        each file dict in ``written`` — ``written_at``, the version whose
+        columns the batch was checked against, defaulting to the entry's
+        own version."""
         if txns:
             entry["txns"] = txns
+        if columns is None:
+            return
+        entry["columns"] = [[int(i), n, t] for i, n, t in columns]
+        for f in written:
+            f["schema_v"] = entry["version"] if written_at is None else written_at
 
     # ---- write side ---------------------------------------------------------
     #
@@ -398,9 +443,30 @@ class SnapshotLog:
         ``cluster_tag`` (round 13) marks each written file as a member of
         a clustering CUBE on those columns — the liquid-clustering ZCube
         idea: ``compact_incremental`` later rewrites only files NOT in a
-        cube of the requested spec, leaving settled cubes untouched."""
+        cube of the requested spec, leaving settled cubes untouched.
+
+        On an id-mapped log ``df`` must name the live columns, which the
+        entry carries forward (class docstring)."""
+        return self._commit(df, None, note, kind, stats_cols, cluster_tag)
+
+    def commit_columns(self, df: DataFrame, columns, note: str = "") -> int:
+        """Full commit under an id-carrying schema: ``columns`` is
+        ``[(id, name, type), ...]`` and must name ``df``'s columns in
+        order — ids are the caller's stable identity for each column.
+        Every later commit carries the list forward (class docstring)."""
+        return self._commit(df, columns, note)
+
+    def _commit(
+        self, df, columns, note, kind="data", stats_cols=None, cluster_tag=None
+    ) -> int:
+        """The full-commit body of ``commit`` / ``commit_columns``;
+        ``columns`` None carries the parent's."""
         parent = self.latest_version()
         version = parent + 1
+        pe = self.entry(parent) if parent >= 0 else {}
+        if columns is None:
+            columns = pe.get("columns")
+        _check_names(columns, df.columns, "commit")
         data_dir = os.path.join(self.root, f"v{version}")
         try:
             files = _write_files(df, data_dir, stats_cols, cluster_tag)
@@ -424,7 +490,7 @@ class SnapshotLog:
             "schema": _entry_schema(df),
             "files": files,
         }
-        self._set_txns(entry, self._parent_txns(parent))
+        self._carry(entry, self._parent_txns(parent, pe), columns, files)
         # a failed publish (CommitConflict included) must not leave an
         # orphaned v{N} directory — the next commit at this version
         # writes mode("error") and would wedge on the leftovers
@@ -462,9 +528,10 @@ class SnapshotLog:
         SCHEMA ENFORCEMENT (what a table format's append does that a bare
         directory write doesn't): the batch's schema must match the
         table's committed schema — a drifted producer fails loudly instead
-        of poisoning the table with files a later scan can't union.
-        Schema EVOLUTION stays an explicit full commit (see
-        table_time_travel_multi's ADD COLUMN dataflow).
+        of poisoning the table with files a later scan can't union.  On
+        an id-mapped log the batch must name the live columns instead.
+        Schema EVOLUTION stays an explicit commit (``evolve``, or a full
+        commit as in table_time_travel_multi's ADD COLUMN dataflow).
 
         ``txn=(app_id, txn_version)`` records the Delta SetTransaction
         action ATOMICALLY with the commit (round 12): the dedup record is
@@ -516,12 +583,20 @@ class SnapshotLog:
         Because the txn map is re-read from the NEW parent on every rebase
         attempt, two racing apps' records never clobber each other: the
         loser's retry carries the winner's record forward and merges its
-        own in."""
+        own in.
+
+        On an id-mapped log the batch is checked against the live columns
+        once; a rebase over a concurrent ``evolve`` carries the evolved
+        columns, and the batch's files resolve through the generation
+        they were checked against (stamping the pre-evolve columns would
+        silently revert the evolve)."""
+        checked = None  # (columns, version) the batch was checked against
         for _ in range(attempts):
             parent = self.latest_version()
             entry_schema = schema
             parent_files: list[dict] = []
             txns: dict = {}
+            columns = None
             if parent >= 0:
                 pe = self.entry(parent)
                 if pe.get("kind") == "staged":
@@ -532,13 +607,19 @@ class SnapshotLog:
                         f"cannot append onto staged version {parent}; "
                         "publish_staged or vacuum it first"
                     )
+                columns = pe.get("columns")
                 want = pe.get("schema")
-                if want is not None and not _append_schema_ok(want, schema):
-                    raise ValueError(
-                        f"append schema mismatch: table has {want}, "
-                        f"batch has {schema}"
-                    )
-                if want is not None:
+                if columns is not None:
+                    # the live columns ARE the schema of an id-mapped log
+                    if checked is None:
+                        _check_names(columns, [c[0] for c in schema], "append")
+                        checked = (columns, parent)
+                elif want is not None:
+                    if not _append_schema_ok(want, schema):
+                        raise ValueError(
+                            f"append schema mismatch: table has {want}, "
+                            f"batch has {schema}"
+                        )
                     # the entry records the TABLE's schema: carried-forward
                     # files may hold NULLs a non-nullable batch doesn't
                     entry_schema = want
@@ -546,13 +627,9 @@ class SnapshotLog:
                 # append must not strip carried files' write-time stats /
                 # cluster tags / schema_v
                 parent_files = [dict(f) for f in pe["files"]]
-                # _parent_txns, not pe["txns"]: a legacy tip without the
-                # carry rule must promote older apps' records (ADVICE r12 #3)
-                txns = (
-                    dict(pe["txns"])
-                    if "txns" in pe
-                    else self._parent_txns(parent)
-                )
+                # a legacy tip without the carry rule must promote older
+                # apps' records (ADVICE r12 #3)
+                txns = self._parent_txns(parent, pe)
             if txn is not None:
                 rec = txns.get(txn[0])
                 if rec is not None and int(rec[0]) >= int(txn[1]):
@@ -569,7 +646,12 @@ class SnapshotLog:
                 "schema": entry_schema,
                 "files": parent_files + new_files,
             }
-            self._set_txns(entry, txns)
+            # the batch's files sit at the generation they were checked
+            # against — this entry's own unless an evolve interposed
+            moved = checked is not None and checked[0] != columns
+            self._carry(
+                entry, txns, columns, new_files, checked[1] if moved else None
+            )
             try:
                 self._publish(parent + 1, entry)
                 return parent + 1
@@ -623,6 +705,12 @@ class SnapshotLog:
         staged tip.  ``stats_cols`` / ``cluster_tag`` as in ``commit``
         (compaction records them on the files it writes).
 
+        On an id-mapped log ``df_new`` must name the live columns, and
+        the rewritten files land at the live generation.  A concurrent
+        EVOLVE does not commute with a rewrite — its files were written
+        under the pre-evolve names — so a moved column list aborts
+        loudly (``ConcurrentModification``).
+
         ``on_publish_attempt`` (round 12): an observability hook called
         with the 0-based attempt index just before each publish attempt —
         the supported way for tests and race-demonstration keys to
@@ -630,6 +718,9 @@ class SnapshotLog:
         keep = {_plain_path(p) for p in keep_files}
         removed = {_plain_path(p) for p in removed_files}
         read_set = keep | removed
+        tip = self.latest_version()
+        columns = self.entry(tip).get("columns") if tip >= 0 else None
+        _check_names(columns, df_new.columns, "rewrite")
         data_dir = os.path.join(self.root, f"rw-{uuid.uuid4().hex[:12]}")
         new_files = _write_files(df_new, data_dir, stats_cols, cluster_tag)
         schema = _entry_schema(df_new)
@@ -653,6 +744,12 @@ class SnapshotLog:
                         "concurrent commit removed files this rewrite read "
                         f"(same-data race, cannot rebase): {gone[:3]}"
                     )
+                if pe.get("columns") != columns:
+                    raise ConcurrentModification(
+                        "concurrent schema change: live columns moved from "
+                        f"{columns} to {pe.get('columns')} while this rewrite "
+                        "was derived — re-derive against the new schema"
+                    )
                 entry = {
                     "version": parent + 1,
                     "note": note,
@@ -665,7 +762,7 @@ class SnapshotLog:
                     ]
                     + new_files,
                 }
-                self._set_txns(entry, self._parent_txns(parent))
+                self._carry(entry, self._parent_txns(parent, pe), columns, new_files)
                 if on_publish_attempt is not None:
                     on_publish_attempt(attempt)
                 try:
@@ -676,6 +773,83 @@ class SnapshotLog:
             raise CommitConflict(
                 f"rewrite did not land after {attempts} rebase attempts"
             )
+
+    def evolve(self, new_columns, note: str = "", attempts: int = 10) -> int:
+        """METADATA-ONLY schema evolution of an id-mapped log: the new
+        version references the parent's files untouched (same paths, same
+        schema_v) and changes only the live column list.  Same id + new
+        name = RENAME; same id + wider type = WIDEN; id absent = DROP;
+        fresh id = ADD (surfaces NULL for files that predate it).  Cost:
+        one O(live files) log entry — never a data write.
+
+        CONCURRENCY (round 11, completing the per-kind contract): an
+        evolve COMMUTES with concurrent appends — the rebase re-reads the
+        new latest and re-derives its file list (appended files keep
+        their own schema_v and resolve through the ids like any other
+        generation).  A CONCURRENT SCHEMA CHANGE does not commute: if the
+        latest's column list is no longer the one this evolve was derived
+        against, the two DDLs raced and the loser aborts loudly
+        (ConcurrentModification) — last-writer-wins on schema is how
+        silent column resurrection happens."""
+        base_parent = self.latest_version()
+        base_cols = self.entry(base_parent).get("columns") if base_parent >= 0 else None
+        if base_cols is None:
+            raise ValueError(
+                "evolve needs a log that carries column ids — start it "
+                "with commit_columns"
+            )
+        for _ in range(attempts):
+            parent = self.latest_version()
+            pe = self.entry(parent)
+            if pe.get("kind") == "staged":
+                raise ValueError(
+                    f"cannot evolve on staged version {parent}; "
+                    "publish_staged or vacuum it first"
+                )
+            if parent != base_parent and pe.get("columns") != base_cols:
+                raise ConcurrentModification(
+                    "concurrent schema change: live columns moved from "
+                    f"{base_cols} to {pe.get('columns')} while this evolve "
+                    "was derived — re-derive against the new schema"
+                )
+            entry = {
+                "version": parent + 1,
+                "note": note,
+                "kind": "schema-evolution",
+                "files": [dict(f) for f in pe["files"]],
+            }
+            self._carry(entry, self._parent_txns(parent, pe), new_columns)
+            try:
+                self._publish(parent + 1, entry)
+                return parent + 1
+            except CommitConflict:
+                continue  # rebase: somebody else won this version
+        raise CommitConflict(f"evolve did not land after {attempts} attempts")
+
+    def restore(self, version: int, note: str = "") -> int:
+        """Delta RESTORE semantics: roll the table back to ``version`` by
+        committing a NEW entry that references the old version's files
+        and column list — metadata-only, history preserved (the bad
+        commits stay readable for forensics until vacuumed), and the
+        rollback is itself a forward commit, so time travel and CDF over
+        the restore behave like any other version transition.  Carried
+        files keep their own generations.  The SetTransaction map carries
+        through from the CURRENT tip (not the restored version): a
+        rollback of table DATA must not also roll back streaming writers'
+        dedup state, or their next retry would re-append batches the
+        table already ingested."""
+        e = self.entry(version)
+        parent = self.latest_version()
+        entry = {
+            "version": parent + 1,
+            "note": note or f"restore v{version}",
+            "kind": "data",
+            "schema": e.get("schema"),
+            "files": [dict(f) for f in e["files"]],
+        }
+        self._carry(entry, self._parent_txns(parent), e.get("columns"))
+        self._publish(parent + 1, entry)
+        return parent + 1
 
     # ---- log side -----------------------------------------------------------
     #
@@ -727,7 +901,7 @@ class SnapshotLog:
         version the checkpoint covers up to.  Pure O(versions) driver-side
         metadata — data files are untouched, every version stays
         readable."""
-        ents = {str(v): self.entry(v) for v in self.versions()}
+        ents = {str(v): e for v, e in self.view().entries.items()}
         upto = max(int(v) for v in ents)
         tmp = os.path.join(self._log_dir, f".checkpoint-{upto:05d}.json.tmp")
         with open(tmp, "w") as fh:
@@ -764,18 +938,22 @@ class SnapshotLog:
         return [FileEntry(f["path"], f["size"]) for f in self.entry(version)["files"]]
 
     def live_files(self, versions=None) -> set[str]:
-        vs = self.versions() if versions is None else versions
-        return {fe.path for v in vs for fe in self.manifest(v)}
+        """Every path the given versions' manifests (all versions by
+        default) reference."""
+        entries = self.view().entries
+        vs = entries if versions is None else versions
+        return {f["path"] for v in vs for f in entries[v]["files"]}
 
     # ---- read side ----------------------------------------------------------
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """AS OF read: scan exactly the version's manifest file list."""
-        v = self.latest_version() if version is None else version
-        files = [fe.path for fe in self.manifest(v)]
-        if not files:  # a committed empty snapshot still has a schema? no files
-            raise ValueError(f"version {v} has no data files")
-        return spark.read.parquet(*files)
+        """AS OF read: scan exactly the version's manifest file list —
+        through the column ids when the entry carries ``columns`` (every
+        operation that reads through here, compaction included, sees the
+        live schema; a by-NAME union across generations would silently
+        NULL renamed columns)."""
+        entry = self.entry(self.latest_version() if version is None else version)
+        return self._read_manifest_files(spark, entry, entry["files"])
 
     def read_as_of(
         self,
@@ -837,12 +1015,9 @@ class SnapshotLog:
         the whole window expired), remove data files referenced by
         nothing kept.  Pure metadata diff + O(dead files) unlinks, like
         vacuum()."""
-        keep = {
-            v
-            for v in self.versions()
-            if self.entry(v).get("ts", 0.0) >= since_ts
-        }
-        keep.add(self.latest_version())
+        view = self.view()
+        keep = {v for v, e in view.entries.items() if e.get("ts", 0.0) >= since_ts}
+        keep.add(view.versions[-1])
         return self.vacuum(keep)
 
     def compact(
@@ -881,7 +1056,11 @@ class SnapshotLog:
         perfectly and the others not at all; Z-order trades a little
         per-column tightness for skippability on each — the right layout
         when two predicates share a table.  Mutually exclusive with
-        ``sort_cols``."""
+        ``sort_cols``.
+
+        On an id-mapped log the rewrite reads through the ids (``read``)
+        and the full commit carries the live columns, so every rewritten
+        file lands at the compact version's own generation."""
         import math
 
         if sort_cols and zorder_cols:
@@ -978,11 +1157,30 @@ class SnapshotLog:
         return file_stats(self.read(spark, version), cols)
 
     def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
-        """Read a subset of an entry's manifest files as TABLE rows.  A
-        plain parquet scan here; EvolvingLog overrides with the id-mapped
-        projection (mixed-generation files union by COLUMN ID, never by
-        name — see the round-13 compaction fix)."""
-        return self.read_files(spark, [f["path"] for f in files])
+        """Read a subset of an entry's manifest files as TABLE rows: one
+        parquet scan on a plain log; on an id-mapped one, one sub-scan
+        per schema generation in play (a handful, not one per file),
+        each projected to the entry's live columns through the ids,
+        unioned by COLUMN ID, never by name."""
+        if not files:
+            raise ValueError(f"version {entry['version']} has no data files")
+        live = entry.get("columns")
+        if live is None:
+            return self.read_files(spark, [f["path"] for f in files])
+        by_schema: dict[int, list[str]] = {}
+        for f in files:
+            by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
+        out = None
+        for sv, paths in sorted(by_schema.items()):
+            proj = [
+                F.col(pn).cast(t).alias(ln)
+                if pn is not None
+                else F.lit(None).cast(t).alias(ln)
+                for ln, pn, t in _id_projection(self.entry(sv)["columns"], live)
+            ]
+            part = spark.read.parquet(*sorted(paths)).select(*proj)
+            out = part if out is None else out.unionByName(part)
+        return out
 
     def read_files(self, spark: SparkSession, files) -> DataFrame:
         """Scan an explicit (pruned) file list."""
@@ -1014,270 +1212,6 @@ class SnapshotLog:
             min(f["stats"][col][0] for f in nonempty),
             max(f["stats"][col][1] for f in nonempty),
         )
-
-
-class EvolvingLog(SnapshotLog):
-    """Schema evolution over the snapshot log via COLUMN IDS — the Iceberg
-    model (public spec: every column carries a stable numeric id; files
-    record the names current when they were written; readers resolve file
-    columns to the live schema THROUGH the id).  What that buys at 100 TB:
-    RENAME, type-WIDEN, and DROP are pure metadata commits — zero data
-    files rewritten, old files stay readable forever — instead of the
-    O(table) rewrite a name-keyed reader would force.
-
-    Entries gain ``"columns": [[id, name, type], ...]`` (the live schema)
-    and each manifest file gains ``"schema_v"``: the version whose column
-    list the file was WRITTEN under.  ``read_evolved`` groups the manifest
-    by schema_v, maps each group's physical names to the live schema by
-    id (casting where the type widened, NULL where the column didn't
-    exist yet), and unions — so one scan spans files written under any
-    number of historical schemas."""
-
-    def _stamp(self, version: int, columns, schema_v_of: dict | None = None) -> None:
-        """Re-stamp the entry THIS writer just published with columns +
-        per-file schema_v (ownership established by the _publish link, so
-        replacement is legal here — see _republish)."""
-        entry = self.entry(version)
-        entry["columns"] = [[int(i), n, t] for i, n, t in columns]
-        for f in entry["files"]:
-            f["schema_v"] = (schema_v_of or {}).get(f["path"], version)
-        self._republish(version, entry)
-
-    def commit_columns(self, df: DataFrame, columns, note: str = "") -> int:
-        """Full commit under an id-carrying schema.  ``columns`` is
-        ``[(id, name, type), ...]`` and must name ``df``'s columns in
-        order — ids are the caller's stable identity for each column."""
-        if [n for _i, n, _t in columns] != list(df.columns):
-            raise ValueError(f"columns {columns} do not match df {df.columns}")
-        v = self.commit(df, note=note)
-        self._stamp(v, columns)
-        return v
-
-    def append_columns(self, df: DataFrame, note: str = "", txn=None) -> int:
-        """Append commit: new files are written under the CURRENT live
-        schema; carried-forward files keep their original schema_v (they
-        are referenced, never rewritten — the verbatim dict carry keeps
-        the stamp, also for files a rebase carried in).  ``txn`` as in
-        ``commit_append`` (the SetTransaction record lands in the commit
-        entry; the _stamp below only re-stamps column metadata on the
-        version this writer just won).
-
-        The append rebases like any other, so an EVOLVE may land between
-        the schema check and the publish.  The entry then keeps the
-        evolved live columns, and the batch's files resolve through the
-        parent's generation, the one they were written under — stamping
-        the pre-evolve columns would silently revert the evolve."""
-        parent = self.latest_version()
-        columns = [tuple(c) for c in self.entry(parent)["columns"]]
-        if [c[1] for c in columns] != list(df.columns):
-            raise ValueError(
-                f"append schema mismatch: live columns {columns}, df {df.columns}"
-            )
-        v = self.commit_append(df, note=note, txn=txn)
-        if txn is not None and v <= parent:
-            return v  # replayed batch: nothing committed, nothing to stamp
-        live = self._live_cols_at(v - 1)
-        written_at = v if live == columns else parent
-        sv_of = {f["path"]: f.get("schema_v", written_at) for f in self.entry(v)["files"]}
-        self._stamp(v, live, schema_v_of=sv_of)
-        return v
-
-    def evolve(self, new_columns, note: str = "", attempts: int = 10) -> int:
-        """METADATA-ONLY schema evolution: the new version references the
-        parent's files untouched (same paths, same schema_v) and changes
-        only the live column list.  Same id + new name = RENAME; same id
-        + wider type = WIDEN; id absent = DROP; fresh id = ADD (surfaces
-        NULL for files that predate it).  Cost: one O(live files) log
-        entry — never a data write.
-
-        CONCURRENCY (round 11, completing the per-kind contract): an
-        evolve COMMUTES with concurrent appends — the rebase re-reads the
-        new latest and re-derives its file list (appended files keep
-        their own schema_v and resolve through the ids like any other
-        generation).  A CONCURRENT SCHEMA CHANGE does not commute: if the
-        latest's column list is no longer the one this evolve was derived
-        against, the two DDLs raced and the loser aborts loudly
-        (ConcurrentModification) — last-writer-wins on schema is how
-        silent column resurrection happens."""
-        base_parent = self.latest_version()
-        base_cols = self.entry(base_parent)["columns"]
-        for _ in range(attempts):
-            parent = self.latest_version()
-            pe = self.entry(parent)
-            if pe.get("kind") == "staged":
-                raise ValueError(
-                    f"cannot evolve on staged version {parent}; "
-                    "publish_staged or vacuum it first"
-                )
-            if parent != base_parent and pe.get("columns") != base_cols:
-                raise ConcurrentModification(
-                    "concurrent schema change: live columns moved from "
-                    f"{base_cols} to {pe.get('columns')} while this evolve "
-                    "was derived — re-derive against the new schema"
-                )
-            version = parent + 1
-            entry = {
-                "version": version,
-                "note": note,
-                "kind": "schema-evolution",
-                "columns": [[int(i), n, t] for i, n, t in new_columns],
-                "files": [dict(f) for f in pe["files"]],
-            }
-            self._set_txns(entry, self._parent_txns(parent))
-            try:
-                self._publish(version, entry)
-                return version
-            except CommitConflict:
-                continue  # rebase: somebody else won this version
-        raise CommitConflict(f"evolve did not land after {attempts} attempts")
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """On an EvolvingLog the id-mapped scan IS the table view: a plain
-        mixed-generation parquet read unions files by NAME, silently
-        NULLing renamed/widened columns (found by the round-13 compaction
-        probe — a compact() of an evolved table corrupted the renamed
-        column through exactly this path).  ``read_evolved`` is the
-        implementation; every inherited operation that reads through
-        ``self.read`` (compaction included) now sees correct rows."""
-        return self.read_evolved(spark, version)
-
-    def _live_cols_at(self, version: int) -> list:
-        """The live column list governing ``version``: its own stamp, or
-        the nearest ancestor's (a staged parent may interpose)."""
-        for v in range(version, -1, -1):
-            e = self.entry(v)
-            if "columns" in e:
-                return [tuple(c) for c in e["columns"]]
-        raise ValueError(f"no column stamp at or below version {version}")
-
-    def _stamp_keep(self, version: int, cols) -> None:
-        """Stamp ``columns`` on an entry this writer just published,
-        PRESERVING every carried file's existing schema_v (the verbatim
-        dict carry keeps them); files without one — the files this commit
-        wrote — land at the new generation."""
-        entry = self.entry(version)
-        sv_of = {
-            f["path"]: f["schema_v"] for f in entry["files"] if "schema_v" in f
-        }
-        self._stamp(version, cols, schema_v_of=sv_of)
-
-    def commit_rewrite(
-        self,
-        df_new: DataFrame,
-        keep_files,
-        removed_files,
-        note: str = "",
-        kind: str = "data",
-        attempts: int = 10,
-        on_publish_attempt=None,
-        stats_cols=None,
-        cluster_tag=None,
-    ) -> int:
-        """Partial rewrite under the id mapping (round 13): the rewritten
-        files land at the LIVE generation, kept files and files a rebase
-        carried in keep their schema_v (verbatim dict carry), and the
-        entry is re-stamped with the live columns — an unstamped entry
-        breaks every subsequent evolved read (KeyError).  The incremental
-        compaction publishes through here too, so its new cube lands at
-        the live generation while settled cube files keep theirs."""
-        cols = self._live_cols_at(self.latest_version())
-        if [c[1] for c in cols] != list(df_new.columns):
-            raise ValueError(
-                f"rewrite schema mismatch: live columns {cols}, "
-                f"df {df_new.columns}"
-            )
-
-        def guard(attempt: int) -> None:
-            # a concurrent EVOLVE does not commute with this rewrite: the
-            # new files were written under the pre-evolve names, so the
-            # stamp would regress the schema — abort loudly (the put-if-
-            # absent publish makes check-then-publish race-free: a commit
-            # landing in between forces a retry back through here)
-            live_now = self._live_cols_at(self.latest_version())
-            if live_now != cols:
-                raise ConcurrentModification(
-                    "concurrent schema change: live columns moved from "
-                    f"{cols} to {live_now} while this rewrite was derived "
-                    "— re-derive against the new schema"
-                )
-            if on_publish_attempt is not None:
-                on_publish_attempt(attempt)
-
-        v = super().commit_rewrite(
-            df_new,
-            keep_files,
-            removed_files,
-            note=note,
-            kind=kind,
-            attempts=attempts,
-            on_publish_attempt=guard,
-            stats_cols=stats_cols,
-            cluster_tag=cluster_tag,
-        )
-        self._stamp_keep(v, cols)
-        return v
-
-    def compact(
-        self,
-        spark: SparkSession,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        version: int | None = None,
-        sort_cols=None,
-        zorder_cols=None,
-    ) -> int:
-        """Compaction under the id mapping (round 13): the rewrite reads
-        through ``read_evolved`` (the ``read`` override above), and the
-        new entry is re-stamped with the live column list and
-        ``schema_v`` = the compact version itself — every rewritten file
-        is at the LIVE generation, so ``read_evolved`` and the snaplog
-        reader keep resolving the table after OPTIMIZE.  Without the
-        stamp the compacted entry lost ``columns`` entirely (KeyError on
-        the next evolved read) while the plain-read rewrite NULLed
-        renamed columns — the silent-corruption pair this override
-        closes."""
-        parent = self.latest_version() if version is None else version
-        cols = [tuple(c) for c in self.entry(parent)["columns"]]
-        v = super().compact(
-            spark,
-            target_file_bytes=target_file_bytes,
-            version=version,
-            sort_cols=sort_cols,
-            zorder_cols=zorder_cols,
-        )
-        self._stamp(v, cols)
-        return v
-
-    def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
-        """Id-mapped read of manifest files: group by schema generation,
-        project each group to the live schema through the column ids,
-        union."""
-        by_schema: dict[int, list[str]] = {}
-        for f in files:
-            by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
-        out = None
-        for sv, paths in sorted(by_schema.items()):
-            proj = [
-                F.col(pn).cast(t).alias(ln)
-                if pn is not None
-                else F.lit(None).cast(t).alias(ln)
-                for ln, pn, t in _id_projection(
-                    self.entry(sv)["columns"], entry["columns"]
-                )
-            ]
-            part = spark.read.parquet(*sorted(paths)).select(*proj)
-            out = part if out is None else out.unionByName(part)
-        if out is None:
-            raise ValueError(f"version {entry['version']} has no data files")
-        return out
-
-    def read_evolved(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Scan a version through the id mapping (class docstring): one
-        sub-scan per historical schema the live files were written under,
-        each projected to the live schema, unioned.  The number of
-        sub-scans is the number of SCHEMAS in play (a handful), not the
-        number of files."""
-        entry = self.entry(self.latest_version() if version is None else version)
-        return self._read_manifest_files(spark, entry, entry["files"])
 
 
 def _clustered(df: DataFrame, n: int, sort_cols=None, zorder_cols=None) -> DataFrame:
@@ -1372,19 +1306,6 @@ def append_once(log: SnapshotLog, df: DataFrame, app_id: str, txn_version: int) 
     ``_republish`` had exactly that window), and racing writers for
     OTHER app_ids rebase over each other, merging maps instead of
     clobbering them."""
-    rec = log._parent_txns(log.latest_version()).get(app_id)
-    if rec is not None and int(rec[0]) >= int(txn_version):
-        return int(rec[1])  # replay fast-path: nothing written at all
-    if isinstance(log, EvolvingLog):
-        # id-mapped target (round 13): route through append_columns so
-        # the new entry re-stamps the live columns and the new files'
-        # generation — the plain append published neither, breaking the
-        # next evolved read (the compaction-probe bug class)
-        return log.append_columns(
-            df,
-            note=f"{app_id} txn {txn_version}",
-            txn=(app_id, int(txn_version)),
-        )
     return log.commit_append(
         df, note=f"{app_id} txn {txn_version}", txn=(app_id, int(txn_version))
     )
@@ -1398,15 +1319,14 @@ def mor_current_view(log: SnapshotLog, spark: SparkSession, key: str) -> DataFra
     the anti-join is dropped entirely, which tests/test_round10.py pins at
     the plan level (a real MoR table walks exactly this state machine;
     keeping the join after compaction would pay the probe forever)."""
-    base_v = None
-    for v in log.versions():
-        if log.entry(v).get("kind") in ("base", "compacted"):
-            base_v = v
-    if base_v is None:
+    entries = log.view().entries
+    kinds = {v: entries[v].get("kind") for v in sorted(entries)}
+    base = [v for v, k in kinds.items() if k in ("base", "compacted")]
+    if not base:
         raise ValueError("no base/compacted snapshot in the log")
-    view = log.read(spark, base_v)
-    for v in log.versions():
-        if v > base_v and log.entry(v).get("kind") == "delete-sidecar":
+    view = log.read(spark, base[-1])
+    for v, k in kinds.items():
+        if v > base[-1] and k == "delete-sidecar":
             view = mor_read(view, log.read(spark, v), key)
     return view
 
@@ -1570,20 +1490,10 @@ def commit_staged(log: SnapshotLog, df: DataFrame, note: str = "") -> int:
     written exactly once, at full parallelism, BEFORE anyone can read
     it.
 
-    On an EvolvingLog (round 13) the staged entry is stamped with the
-    live columns and its files with the current generation — the batch
-    must match the live schema, and the audit read (AS OF the staged
-    version) resolves through the id mapping like any other."""
-    if isinstance(log, EvolvingLog):
-        cols = log._live_cols_at(log.latest_version())
-        if [c[1] for c in cols] != list(df.columns):
-            raise ValueError(
-                f"staged batch schema mismatch: live columns {cols}, "
-                f"df {df.columns}"
-            )
-        v = log.commit(df, note=note, kind="staged")
-        log._stamp(v, cols)
-        return v
+    On an id-mapped log the batch must name the live columns; the staged
+    entry carries them and its files land at its own generation, so the
+    audit read (AS OF the staged version) resolves through the ids like
+    any other."""
     return log.commit(df, note=note, kind="staged")
 
 
@@ -1602,7 +1512,10 @@ def publish_staged(
     so it commutes with any concurrent commit — on CommitConflict the
     rebase re-resolves the (possibly moved) published head and retries,
     exactly like commit_append; the staged files are added onto
-    whatever head won."""
+    whatever head won.  On an id-mapped log the entry carries the
+    parent's columns and every file (head AND staged) keeps its own
+    schema_v, so a stage -> evolve -> publish interleaving still resolves
+    each file through its own generation."""
     e = log.entry(staged_version)
     if e.get("kind") != "staged":
         raise ValueError(f"version {staged_version} is not a staged snapshot")
@@ -1618,15 +1531,10 @@ def publish_staged(
             "schema": e.get("schema"),
             "files": head_files + [dict(f) for f in e["files"]],
         }
-        log._set_txns(entry, log._parent_txns(parent))
+        pe = view.entries[parent]
+        log._carry(entry, log._parent_txns(parent, pe), pe.get("columns"))
         try:
             log._publish(version, entry)
-            if isinstance(log, EvolvingLog):
-                # stamp the live columns; every carried file (head AND
-                # staged — both stamped at their own commits) keeps its
-                # schema_v, so a stage -> evolve -> publish interleaving
-                # still resolves each file through its own generation
-                log._stamp_keep(version, log._live_cols_at(version))
             return version
         except CommitConflict:
             continue  # rebase: re-resolve the head, retry
@@ -1643,31 +1551,27 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
     clone still references, exactly as documented for real shallow
     clones.
 
-    EvolvingLog sources (round 13): the squashed single-entry clone is a
+    Id-mapped sources (round 13): the squashed single-entry clone is a
     NEW identity with no access to the source's historical column lists,
     so a manifest whose files still span schema GENERATIONS cannot be
     cloned shallow — the clone's reader could never resolve them; the
     refusal is loud and actionable (``compact()`` lands every file at
-    the live generation, after which the clone is self-contained and
-    comes back as an EvolvingLog with its own v0 stamp).  Without this
-    the inherited path silently returned a PLAIN log whose name-keyed
-    read corrupted renamed columns — the compaction-probe bug class."""
+    the live generation, after which the clone is self-contained: its v0
+    entry carries the live columns and every file ``schema_v`` 0).
+    Without this a name-keyed read of the clone would corrupt renamed
+    columns — the compaction-probe bug class."""
     e = src.entry(src.latest_version())
-    evolving = isinstance(src, EvolvingLog)
-    if evolving:
-        live = src._live_cols_at(src.latest_version())
-        live_lists = [list(c) for c in live]
-        for f in e["files"]:
-            written = src.entry(int(f["schema_v"])).get("columns")
-            if [list(c) for c in (written or [])] != live_lists:
+    live = e.get("columns")
+    if live is not None:
+        for sv in {int(f["schema_v"]) for f in e["files"]}:
+            if src.entry(sv).get("columns") != live:
                 raise ValueError(
                     "shallow clone of an id-mapped log with mixed schema "
                     "generations: the squashed clone entry cannot resolve "
                     "historical column lists — compact() first (all files "
-                    "land at the live generation) or materialize with "
-                    "read_evolved"
+                    "land at the live generation) or materialize with read"
                 )
-    dst = (EvolvingLog if evolving else SnapshotLog)(dst_root)
+    dst = SnapshotLog(dst_root)
     if dst.latest_version() >= 0:
         raise ValueError("clone target already has a log")
     entry = {
@@ -1677,9 +1581,8 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
         "schema": e.get("schema"),
         "files": [dict(f) for f in e["files"]],
     }
+    dst._carry(entry, {}, live, entry["files"])
     dst._publish(0, entry)
-    if evolving:
-        dst._stamp(0, live)  # self-contained: every file at the clone's v0
     return dst
 
 

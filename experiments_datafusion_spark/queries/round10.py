@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from experiments_datafusion_spark.io import materialize_then_rmtree, table
 from experiments_datafusion_spark.operators.table_format import (
-    EvolvingLog,
     SnapshotLog,
     bloom_probe_positions,
     bloom_prune,
@@ -534,13 +533,13 @@ def scan_pruning_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # table_time_travel_multi covers ADD COLUMN (the one evolution a name-keyed
 # reader can survive).  This key covers the other three — RENAME, type-WIDEN,
-# DROP — which REQUIRE the column-id mapping (operators/table_format.
-# EvolvingLog, the public Iceberg model): they are METADATA-ONLY commits
-# (zero data files rewritten; tests/test_round10.py pins the evolve entry's
-# file list is byte-identical to its parent's), and the reader resolves every
-# file's physical columns to the live schema through stable ids — so one scan
-# spans files written under the old schema (price_c int, status present) and
-# the new one (amount_c bigint, status gone).
+# DROP — which REQUIRE the column-id mapping (an id-mapped operators/
+# table_format.SnapshotLog, the public Iceberg model): they are METADATA-ONLY
+# commits (zero data files rewritten; tests/test_round10.py pins the evolve
+# entry's file list is byte-identical to its parent's), and the reader
+# resolves every file's physical columns to the live schema through stable
+# ids — so one scan spans files written under the old schema (price_c int,
+# status present) and the new one (amount_c bigint, status gone).
 
 _EVO_CUT = "1997-07-01"
 
@@ -574,7 +573,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     root = tempfile.mkdtemp(prefix="schevo_")
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders")
 
     def slice_of(pred):
@@ -593,7 +592,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(1, "k", "bigint"), (3, "amount_c", "bigint")],
         note="rename price_c->amount_c, widen int->bigint, drop status",
     )
-    log.append_columns(
+    log.commit_append(
         orders.where(F.col("o_orderdate") >= _EVO_CUT).select(
             F.col("o_orderkey").alias("k"),
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("amount_c"),
@@ -601,7 +600,7 @@ def table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         note="v2: post-cut rows under the evolved schema",
     )
     out = (
-        log.read_evolved(spark)
+        log.read(spark)
         .groupBy((F.col("k") % 9).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1360,38 +1359,6 @@ _RST_CUT = "1995-12-01"
 _RST_BAD_MOD = 4
 
 
-def restore_version(log: SnapshotLog, version: int, note: str = "") -> int:
-    """Delta RESTORE semantics: roll the table back to ``version`` by
-    committing a NEW entry that references the old version's files —
-    metadata-only, history preserved (the bad commits stay readable for
-    forensics until vacuumed), and the rollback is itself a forward
-    commit, so time travel and CDF over the restore behave like any other
-    version transition.  The SetTransaction map carries through from the
-    CURRENT tip (not the restored version): a rollback of table DATA must
-    not also roll back streaming writers' dedup state, or their next
-    retry would re-append batches the table already ingested."""
-    e = log.entry(version)
-    parent = log.latest_version()
-    new_v = parent + 1
-    entry = {
-        "version": new_v,
-        "note": note or f"restore v{version}",
-        "kind": "data",
-        "schema": e.get("schema"),
-        "files": [dict(f) for f in e["files"]],
-    }
-    log._set_txns(entry, log._parent_txns(parent))
-    log._publish(new_v, entry)
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    if isinstance(log, EvolvingLog):
-        # RESTORE of an id-mapped table restores its SCHEMA too (Delta
-        # RESTORE semantics): stamp the TARGET version's column list;
-        # carried files keep their own generations (round 13)
-        log._stamp_keep(new_v, log._live_cols_at(version))
-    return new_v
-
-
 @register(
     "table_restore",
     tags=("io", "maintenance", "aggregation"),
@@ -1406,10 +1373,10 @@ GROUP BY o_orderstatus
 def table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTORE after a bad write (module comment above): v0 commits the
     pre-cut orders state, v1 is an erroneous commit that dropped the
-    custkey%{m} cohort, and restore_version rolls back by committing v2
-    with v0's exact file list — zero data rewritten, v1 still readable.
-    The consumer read of LATEST must equal the v0 recompute from raw
-    orders, so a restore that referenced the wrong files, leaked v1's
+    custkey%{m} cohort, and ``SnapshotLog.restore`` rolls back by
+    committing v2 with v0's exact file list — zero data rewritten, v1
+    still readable.  The consumer read of LATEST must equal the v0
+    recompute from raw orders, so a restore that referenced the wrong files, leaked v1's
     deletion, or re-wrote data with drift all hash-mismatch.  Tests pin
     the forensics property (v1 readable post-restore, missing exactly the
     cohort) and file-identity (v2's manifest == v0's paths).""".replace(
@@ -1430,7 +1397,7 @@ def table_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.read(spark, 0).where(F.col("ck") % _RST_BAD_MOD != 0),
         note="v1 BAD: erroneous cohort delete",
     )
-    v2 = restore_version(log, 0, note="restore v0")
+    v2 = log.restore(0, note="restore v0")
     out = log.read(spark, v2).groupBy("status").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("k").cast("bigint").alias("key_sum"),

@@ -606,15 +606,15 @@ GROUP BY o_orderkey % 7
 """,
 )
 def table_log_batch_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evolved history through the reader API (round 12): an EvolvingLog
+    """Evolved history through the reader API (round 12): an id-mapped log
     walks v0 (k, status, price_c int) → metadata-only evolve (rename
     price_c→amount_c, widen int→bigint, drop status) → v2 appends under
     the new schema — and ``spark.read.format("snaplog")`` resolves BOTH
     file generations to the live schema through the column-ID mapping,
     executor-side in Arrow (rename by id, widening cast, dropped column
     never read): the composition table_schema_evolution (the
-    ``read_evolved`` helper) and table_log_batch_source (the reader API)
-    could each only show half of.  ``n_old_generation`` pins that
+    ``SnapshotLog.read`` id mapping) and table_log_batch_source (the
+    reader API) could each only show half of.  ``n_old_generation`` pins that
     pre-evolution files really flow through the id mapping (their rows
     are identifiable by the date cut AND stamp ``_commit_version`` 0),
     and the cross-generation totals are oracled against raw orders —
@@ -622,11 +622,9 @@ def table_log_batch_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
     register_sources(spark)
     root = tempfile.mkdtemp(prefix="tbe_")
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders")
     log.commit_columns(
         orders.where(F.col("o_orderdate") < _BE_CUT).select(
@@ -641,7 +639,7 @@ def table_log_batch_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(1, "k", "bigint"), (3, "amount_c", "bigint")],
         note="rename price_c->amount_c, widen int->bigint, drop status",
     )
-    log.append_columns(
+    log.commit_append(
         orders.where(F.col("o_orderdate") >= _BE_CUT).select(
             F.col("o_orderkey").alias("k"),
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("amount_c"),

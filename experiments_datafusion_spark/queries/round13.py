@@ -504,11 +504,9 @@ def table_stream_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cross-generation totals are oracled against raw orders."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
     register_sources(spark)
     root = tempfile.mkdtemp(prefix="tst_")
-    log = EvolvingLog(f"{root}/t")
+    log = SnapshotLog(f"{root}/t")
     orders = table(spark, sf_dir, "orders")
     log.commit_columns(
         orders.where(F.col("o_orderdate") < _ST_CUT).select(
@@ -523,7 +521,7 @@ def table_stream_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(1, "k", "bigint"), (3, "amount_c", "bigint")],
         note="rename price_c->amount_c, widen int->bigint, drop status",
     )
-    log.append_columns(
+    log.commit_append(
         orders.where(F.col("o_orderdate") >= _ST_CUT).select(
             F.col("o_orderkey").alias("k"),
             F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("amount_c"),

@@ -60,22 +60,6 @@ def _df(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "id bigint")
 
 
-def _restore(log: SnapshotLog, version: int) -> int:
-    """RESTORE as a forward metadata commit (queries/round10.restore_version
-    without the module import cycle)."""
-    e = log.entry(version)
-    new_v = log.latest_version() + 1
-    entry = {
-        "version": new_v,
-        "note": f"restore v{version}",
-        "kind": "data",
-        "schema": e.get("schema"),
-        "files": [dict(f) for f in e["files"]],
-    }
-    log._publish(new_v, entry)
-    return new_v
-
-
 @pytest.mark.parametrize("seed", [20261101, 20261102, 20261103])
 def test_log_random_walk_matches_model(spark, tmp_path, seed):
     rng = random.Random(seed)
@@ -250,7 +234,7 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             # path: audit failed, never published)
             with pytest.raises(ValueError, match="staged"):
                 log.commit_append(_df(spark, [999_999]), note="must refuse")
-            v = _restore(log, max(model))
+            v = log.restore(max(model))
             log.stamp_ts(v, float(v))
             model[v] = sorted(cur)
             clean_adds[v] = []  # re-publishes the head manifest: empty delta
@@ -294,7 +278,7 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
         else:  # restore
             target = rng.choice(sorted(model))
             prev_paths = _entry_paths(log, log.latest_version())
-            v = _restore(log, target)
+            v = log.restore(target)
             if not (prev_paths - _entry_paths(log, v)):
                 # removal-free restore: a skipChangeCommits stream ADMITS
                 # it and emits the re-added files = the model's set gain
@@ -331,10 +315,8 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
     generation resolves to the live schema (added columns NULL for
     pre-evolution rows, widened columns cast, dropped columns invisible,
     renames free)."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
     rng = random.Random(seed)
-    log = EvolvingLog(str(tmp_path / f"e{seed}"))
+    log = SnapshotLog(str(tmp_path / f"e{seed}"))
     next_val = 0
     next_id = 3
     next_name = 0
@@ -357,7 +339,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
         rows = rows + new
         ddl = ", ".join(f"{name} {t}" for _i, name, t in live)
         data = [tuple(r[cid] for cid, _n, _t in live) for r in new]
-        return log.append_columns(spark.createDataFrame(data, ddl))
+        return log.commit_append(spark.createDataFrame(data, ddl))
 
     # v0: full commit under the id-carrying schema
     first = [dict() for _ in range(rng.randint(3, 8))]
@@ -372,7 +354,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
     )
 
     def check(step, op):
-        got = log.read_evolved(spark)
+        got = log.read(spark)
         names = [name for _i, name, _t in live]
         assert sorted(got.columns) == sorted(names), (step, op)
         got_rows = sorted(
@@ -387,7 +369,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
     def tracked_drain(step):
         # round 13: a FRESH schema-tracked stream must drain the whole
         # evolved history id-mapped to the CURRENT live schema — same
-        # answer as read_evolved, through the streaming path
+        # answer as SnapshotLog.read, through the streaming path
         register_sources(spark)
         out = str(tmp_path / f"tdrain{seed}-{step}")
         q = (
@@ -433,7 +415,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             continue
         if op == "compact":
             # round 13: OPTIMIZE under the id mapping — reads through
-            # read_evolved, re-stamps the live columns, all files land
+            # read, carries the live columns, all files land
             # at the new generation; the model must be unchanged
             log.compact(spark, target_file_bytes=16 * 1024)
             rewrote = True
@@ -446,7 +428,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             if not rows:
                 continue
             cid, name, _t = live[0]
-            df_new = log.read_evolved(spark).where(
+            df_new = log.read(spark).where(
                 F.col(name).isNull() | (F.col(name) % 3 != 0)
             )
             log.commit_rewrite(
@@ -463,7 +445,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             continue
         if op == "wap":
             # round 13: stage + publish under the id mapping — the staged
-            # entry stamps the live columns, the audit read resolves, the
+            # entry carries the live columns, the audit read resolves, the
             # publish carries every generation's files forward
             from experiments_datafusion_spark.operators.table_format import (
                 commit_staged,
@@ -482,7 +464,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             # batch through the id mapping before anything publishes
             audit = sorted(
                 tuple(r[name] for name in sorted(n for _i, n, _t in live))
-                for r in log.read_evolved(spark, sv).collect()
+                for r in log.read(spark, sv).collect()
             )
             want_audit = sorted(
                 tuple(r[cid] for cid, _n, _t in sorted(live, key=lambda c: c[1]))
@@ -495,7 +477,7 @@ def test_evolving_log_random_walk_matches_model(spark, tmp_path, seed):
             continue
         if op == "checkpoint":
             # consolidating the log must be invisible to the id mapping:
-            # read_evolved resolves schema generations through entries the
+            # read resolves schema generations through entries the
             # checkpoint now serves from one file
             log.checkpoint()
         elif op == "append":

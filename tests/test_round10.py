@@ -450,11 +450,9 @@ def test_table_changes_all_classes_nonvacuous(spark, sf_dir):
 
 def test_evolve_is_metadata_only_and_reads_through_ids(spark, tmp_path):
     """RENAME/WIDEN/DROP rewrite ZERO data files (the evolve entry carries
-    the parent's exact file list), and read_evolved resolves old files'
+    the parent's exact file list), and read resolves old files'
     physical names through the id mapping with the widening cast."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     df0 = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20)], "k bigint, status string, price_c int"
     )
@@ -470,7 +468,7 @@ def test_evolve_is_metadata_only_and_reads_through_ids(spark, tmp_path):
         (f["path"], f["size"], os.path.getmtime(f["path"]))
         for f in log.entry(v1)["files"]
     ] == files_v0  # metadata-only: same paths, sizes, mtimes
-    out = log.read_evolved(spark, v1)
+    out = log.read(spark, v1)
     assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
         ("k", "bigint"),
         ("amount_c", "bigint"),
@@ -482,9 +480,7 @@ def test_evolved_append_unions_both_file_generations(spark, tmp_path):
     """Files written under the OLD schema and files written under the NEW
     one are read through one id-mapped scan; an ADDED column (fresh id)
     surfaces NULL for pre-evolution files."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     log.commit_columns(
         spark.createDataFrame([(1, 10)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (3, "price_c", "int")],
@@ -492,11 +488,11 @@ def test_evolved_append_unions_both_file_generations(spark, tmp_path):
     log.evolve(
         [(1, "k", "bigint"), (3, "amount_c", "bigint"), (4, "tag", "string")]
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(2, 20, "new")], "k bigint, amount_c bigint, tag string")
     )
     got = sorted(
-        (r.k, r.amount_c, r.tag) for r in log.read_evolved(spark).collect()
+        (r.k, r.amount_c, r.tag) for r in log.read(spark).collect()
     )
     assert got == [(1, 10, None), (2, 20, "new")]
 
@@ -895,12 +891,10 @@ def test_restore_is_metadata_only_and_preserves_history(spark, tmp_path):
     rewritten); the bad intermediate version stays readable for forensics
     until vacuumed; vacuum keeping the restored tip removes only the bad
     version's own files."""
-    from experiments_datafusion_spark.queries.round10 import restore_version
-
     log = SnapshotLog(str(tmp_path / "t"))
     log.commit(spark.range(100))
     log.commit(spark.range(100).where(F.col("id") % 4 != 0))  # bad write
-    v2 = restore_version(log, 0)
+    v2 = log.restore(0)
     assert [(f.path, f.size) for f in log.manifest(v2)] == [
         (f.path, f.size) for f in log.manifest(0)
     ]

@@ -265,9 +265,7 @@ def test_evolve_rebases_over_concurrent_append(spark, tmp_path):
     publish, rebases over the appended files (appends commute with
     evolve — appended files resolve through their own schema_v), and the
     evolved read sees both the new schema and the appended rows."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     log.commit_columns(spark.range(5).select(F.col("id").alias("a")), [(1, "a", "bigint")])
 
     real_publish = log._publish
@@ -276,15 +274,15 @@ def test_evolve_rebases_over_concurrent_append(spark, tmp_path):
     def losing_first(version: int, entry: dict) -> None:
         if not state["done"]:
             state["done"] = True
-            other = EvolvingLog(log.root)
-            other.append_columns(spark.range(5, 8).select(F.col("id").alias("a")))
+            other = SnapshotLog(log.root)
+            other.commit_append(spark.range(5, 8).select(F.col("id").alias("a")))
         real_publish(version, entry)
 
     log._publish = losing_first
     v = log.evolve([(1, "a_renamed", "bigint")], note="rename a")
     log._publish = real_publish
     assert state["done"] and v == 2
-    got = log.read_evolved(spark)
+    got = log.read(spark)
     assert got.columns == ["a_renamed"]
     assert sorted(r.a_renamed for r in got.collect()) == list(range(8))
 
@@ -294,9 +292,7 @@ def test_append_rebases_over_concurrent_evolve(spark, tmp_path):
     The rebased append keeps the evolved columns (no silent revert) and
     its batch, written under the old name, resolves through the parent's
     generation."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     log.commit_columns(spark.range(5).select(F.col("id").alias("a")), [(1, "a", "bigint")])
 
     real_publish = log._publish
@@ -305,15 +301,15 @@ def test_append_rebases_over_concurrent_evolve(spark, tmp_path):
     def losing_first(version: int, entry: dict) -> None:
         if not state["done"]:
             state["done"] = True
-            EvolvingLog(log.root).evolve([(1, "a_renamed", "bigint")], note="rename a")
+            SnapshotLog(log.root).evolve([(1, "a_renamed", "bigint")], note="rename a")
         real_publish(version, entry)
 
     log._publish = losing_first
-    v = log.append_columns(spark.range(5, 8).select(F.col("id").alias("a")))
+    v = log.commit_append(spark.range(5, 8).select(F.col("id").alias("a")))
     log._publish = real_publish
     assert state["done"] and v == 2
     assert log.entry(v)["columns"] == [[1, "a_renamed", "bigint"]]
-    got = log.read_evolved(spark)
+    got = log.read(spark)
     assert got.columns == ["a_renamed"]
     assert sorted(r.a_renamed for r in got.collect()) == list(range(8))
 
@@ -321,9 +317,7 @@ def test_append_rebases_over_concurrent_evolve(spark, tmp_path):
 def test_concurrent_schema_changes_abort(spark, tmp_path):
     """Two evolves racing: the loser must NOT last-writer-win (silent
     schema resurrection) — it aborts with ConcurrentModification."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     log.commit_columns(spark.range(5).select(F.col("id").alias("a")), [(1, "a", "bigint")])
 
     real_publish = log._publish
@@ -332,14 +326,14 @@ def test_concurrent_schema_changes_abort(spark, tmp_path):
     def losing_first(version: int, entry: dict) -> None:
         if not state["done"]:
             state["done"] = True
-            EvolvingLog(log.root).evolve([(1, "b", "bigint")], note="winner")
+            SnapshotLog(log.root).evolve([(1, "b", "bigint")], note="winner")
         real_publish(version, entry)
 
     log._publish = losing_first
     with pytest.raises(ConcurrentModification, match="schema change"):
         log.evolve([(1, "c", "bigint")], note="loser")
     log._publish = real_publish
-    assert log.read_evolved(spark).columns == ["b"]  # the winner's DDL holds
+    assert log.read(spark).columns == ["b"]  # the winner's DDL holds
 
 
 def test_publish_staged_rebases_over_concurrent_publish(spark, tmp_path):

@@ -20,6 +20,7 @@ from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
     append_once,
     changes_incremental,
+    clone_shallow,
     commit_staged,
     file_stats,
     merge_into,
@@ -52,6 +53,68 @@ def test_append_once_txn_published_atomically_no_republish(spark, tmp_path, monk
     # replay: no-op, still no republish
     assert append_once(log, spark.range(4), app_id="a", txn_version=0) == 0
     assert log.versions() == [0]
+
+
+def _commit_kind(kind: str, spark, log: SnapshotLog, tmp_path) -> SnapshotLog:
+    """Run one commit of ``kind`` on ``log``; returns the log it wrote."""
+    batch = spark.range(4, 6).toDF("a")
+    if kind == "commit_columns":
+        log.commit_columns(spark.range(2).toDF("b"), [(2, "b", "bigint")])
+    elif kind == "commit_append":
+        log.commit_append(batch)
+    elif kind == "append_once":
+        append_once(log, batch, app_id="x", txn_version=0)
+    elif kind == "commit_rewrite":
+        log.commit_rewrite(
+            log.read(spark).where("a != 1"),
+            keep_files=[],
+            removed_files=log.live_files([log.latest_version()]),
+        )
+    elif kind == "compact":
+        log.compact(spark)
+    elif kind == "compact_incremental":
+        log.compact_incremental(spark, sort_cols=["a"])
+    elif kind == "evolve":
+        log.evolve([(1, "renamed", "bigint")])
+    elif kind == "commit_staged+publish_staged":
+        publish_staged(log, commit_staged(log, batch))
+    elif kind == "restore":
+        log.evolve([(1, "renamed", "bigint")])
+        log.restore(0)
+    else:
+        return clone_shallow(log, str(tmp_path / "clone"))
+    return log
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "commit_columns", "commit_append", "append_once", "commit_rewrite",
+        "compact", "compact_incremental", "evolve",
+        "commit_staged+publish_staged", "restore", "clone_shallow",
+    ],
+)
+def test_every_commit_kind_publishes_columns_in_one_entry(
+    spark, tmp_path, monkeypatch, kind
+):
+    """The column list and each written file's schema_v ride the commit
+    entry itself, like the txn map: no commit kind stamps them with a
+    second write after the publish, so a failure between the two can
+    never leave a version published without them (a log in that state
+    fails every later read and append)."""
+
+    def forbidden(self, version, entry):
+        raise AssertionError(f"{kind} re-stamped a published entry")
+
+    monkeypatch.setattr(SnapshotLog, "_republish", forbidden)
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.commit_columns(spark.range(4).toDF("a"), [(1, "a", "bigint")], note="v0")
+    out = _commit_kind(kind, spark, log, tmp_path)
+    assert out.latest_version() >= (0 if kind == "clone_shallow" else 1)
+    for v in out.versions():
+        e = out.entry(v)
+        assert "columns" in e, (kind, v)
+        assert all("schema_v" in f for f in e["files"]), (kind, v)
 
 
 def test_append_once_two_app_interposition_loses_no_record(spark, tmp_path, monkeypatch):
@@ -89,8 +152,6 @@ def test_txns_carried_through_every_commit_kind(spark, tmp_path, monkeypatch):
     """One interposed compaction / checked rewrite / restore / WAP publish
     must not degrade the O(1) dedup check (VERDICT r11 missing #3): the
     tip entry always holds the map."""
-    from experiments_datafusion_spark.queries.round10 import restore_version
-
     root = str(tmp_path / "t")
     log = SnapshotLog(root)
     append_once(log, spark.range(8), app_id="ing", txn_version=0)
@@ -108,7 +169,7 @@ def test_txns_carried_through_every_commit_kind(spark, tmp_path, monkeypatch):
         note="delete id=3",
     )
     assert log.entry(log.latest_version())["txns"] == {"ing": [0, 0]}
-    restore_version(log, 0, note="rollback")
+    log.restore(0, note="rollback")
     assert log.entry(log.latest_version())["txns"] == {"ing": [0, 0]}
     sv = commit_staged(log, spark.range(100, 104), note="staged")
     publish_staged(log, sv)
@@ -132,16 +193,14 @@ def test_txns_carried_through_every_commit_kind(spark, tmp_path, monkeypatch):
 
 
 def test_evolve_carries_txns(spark, tmp_path):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(str(tmp_path / "t"))
+    log = SnapshotLog(str(tmp_path / "t"))
     cols = [(1, "id", "bigint")]
     log.commit_columns(spark.range(4), cols, note="v0")
-    log.append_columns(spark.range(4, 6), note="a1", txn=("app", 3))
+    log.commit_append(spark.range(4, 6), note="a1", txn=("app", 3))
     v = log.evolve([(1, "renamed", "bigint")], note="rename")
     assert log.entry(v)["txns"] == {"app": [3, v - 1]}
     # replayed batch through the evolved schema: a no-op
-    assert log.append_columns(spark.range(99).toDF("renamed"), txn=("app", 3)) == v - 1
+    assert log.commit_append(spark.range(99).toDF("renamed"), txn=("app", 3)) == v - 1
     assert log.latest_version() == v
 
 
@@ -819,9 +878,7 @@ def test_snaplog_batch_cdf_options_and_refusals(spark, tmp_path):
 
 
 def _evolved_log(spark, root: str):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame(
             [(1, "A", 10), (2, "B", 20)], "k bigint, status string, price_c int"
@@ -833,7 +890,7 @@ def _evolved_log(spark, root: str):
         [(1, "k", "bigint"), (3, "amount_c", "bigint"), (4, "tag", "string")],
         note="rename+widen+drop+add",
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame(
             [(3, 30, "x"), (4, 40, "y")], "k bigint, amount_c bigint, tag string"
         ),
@@ -843,10 +900,10 @@ def _evolved_log(spark, root: str):
 
 
 def test_snaplog_batch_reads_evolved_log_through_id_mapping(spark, tmp_path):
-    """spark.read.format('snaplog') over an EvolvingLog: old-generation
+    """spark.read.format('snaplog') over an id-mapped log: old-generation
     files rename by id (price_c -> amount_c), widen (int -> bigint), drop
     (status never surfaces), and back-fill NULL for post-dating columns —
-    matching read_evolved exactly, plus the _commit_version stamp."""
+    matching SnapshotLog.read exactly, plus the _commit_version stamp."""
     register_sources(spark)
     root = str(tmp_path / "t")
     log = _evolved_log(spark, root)
@@ -855,7 +912,7 @@ def test_snaplog_batch_reads_evolved_log_through_id_mapping(spark, tmp_path):
     rows = sorted((r.k, r.amount_c, r.tag, r._commit_version) for r in got.collect())
     assert rows == [(1, 10, None, 0), (2, 20, None, 0), (3, 30, "x", 2), (4, 40, "y", 2)]
     want = sorted(
-        (r.k, r.amount_c, r.tag) for r in log.read_evolved(spark).collect()
+        (r.k, r.amount_c, r.tag) for r in log.read(spark).collect()
     )
     assert [(k, a, t) for k, a, t, _v in rows] == want
     # column pruning against the LIVE names, spanning both generations
@@ -994,22 +1051,26 @@ def test_snaplog_stream_readchangefeed_emits_cdf_shape(spark, tmp_path):
     ]
 
 
-def test_snaplog_sink_refuses_evolving_target(spark, tmp_path):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
+def test_snaplog_sink_commits_onto_renamed_log(spark, tmp_path):
+    """The sink appends to an id-mapped log like any append: the batch
+    names the live (renamed) column, the entry carries the columns and
+    the task file's schema_v, and both generations read back through the
+    ids."""
     from experiments_datafusion_spark.sources.snaplog_source import (
         _SnapLogStreamWriter,
         _TaskFile,
     )
 
     root = str(tmp_path / "t")
-    EvolvingLog(root).commit_columns(spark.range(3), [(1, "id", "bigint")])
-    w = _SnapLogStreamWriter(
-        {"path": root, "appid": "probe"}, spark.range(1).schema
-    )
+    log = SnapshotLog(root)
+    log.commit_columns(spark.range(3).toDF("a"), [(1, "a", "bigint")])
+    v1 = log.evolve([(1, "renamed", "bigint")], note="rename a")
+    batch = spark.range(10, 12).toDF("renamed")
+    w = _SnapLogStreamWriter({"path": root, "appid": "probe"}, batch.schema)
+    batch.coalesce(1).write.parquet(str(tmp_path / "w"))
     p = os.path.join(root, "ws")
-    os.makedirs(p, exist_ok=True)
+    os.makedirs(p)
     f = os.path.join(p, "part-x.parquet")
-    spark.range(1).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "w"))
     shutil.copy(
         next(
             os.path.join(str(tmp_path / "w"), x)
@@ -1018,8 +1079,15 @@ def test_snaplog_sink_refuses_evolving_target(spark, tmp_path):
         ),
         f,
     )
-    with pytest.raises(ValueError, match="id-mapped"):
-        w.commit([_TaskFile(f, os.path.getsize(f), 1)], batchId=0)
+    w.commit([_TaskFile(f, os.path.getsize(f), 2)], batchId=0)
+    e = log.entry(v1 + 1)
+    assert e["columns"] == [[1, "renamed", "bigint"]]
+    assert {x["path"]: x["schema_v"] for x in e["files"]}[f] == v1 + 1
+    assert all("schema_v" in x for x in e["files"])
+    assert sorted(r.renamed for r in log.read(spark).collect()) == [0, 1, 2, 10, 11]
+    register_sources(spark)
+    got = spark.read.format("snaplog").option("path", root).load()
+    assert sorted(r.renamed for r in got.collect()) == [0, 1, 2, 10, 11]
 
 
 def test_snaplog_sink_to_source_roundtrip_pipeline(spark, tmp_path):
@@ -1206,7 +1274,7 @@ def test_snaplog_stream_reads_identically_across_log_checkpoint(spark, tmp_path)
 
 
 def test_snaplog_batch_evolved_read_survives_log_checkpoint(spark, tmp_path):
-    """Checkpointing an EvolvingLog consolidates the entries the id
+    """Checkpointing an id-mapped log consolidates the entries the id
     mapping resolves schema generations THROUGH — the reader must
     produce identical rows before and after."""
     register_sources(spark)
@@ -1222,9 +1290,9 @@ def test_snaplog_batch_evolved_read_survives_log_checkpoint(spark, tmp_path):
         for r in spark.read.format("snaplog").option("path", root).load().collect()
     )
     assert before == after
-    # read_evolved agrees too (the helper and the reader share the ids)
+    # SnapshotLog.read agrees too (the log and the reader share the ids)
     helper = sorted(
-        (r.k, r.amount_c, r.tag) for r in log.read_evolved(spark).collect()
+        (r.k, r.amount_c, r.tag) for r in log.read(spark).collect()
     )
     assert [(k, a, t) for k, a, t, _v in after] == helper
 

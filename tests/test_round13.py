@@ -26,9 +26,10 @@ Plus the two r12-verdict API-parity closures:
    compaction diffs empty, deletes emit ``delete`` rows, updates emit
    ``update_preimage``/``update_postimage`` pairs under ``cdfKey`` —
    refusing only past ``maxDiffBytes``;
-7. ``schemaTracking=true`` streams id-mapped OLD-generation files of an
-   EvolvingLog (rename/widen/NULL-backfill executor-side); a mid-stream
-   evolve still fails loudly and a restart re-declares.
+7. ``schemaTracking=true`` streams id-mapped OLD-generation files of a
+   log that carries column ids (rename/widen/NULL-backfill
+   executor-side); a mid-stream evolve still fails loudly and a restart
+   re-declares.
 """
 
 from __future__ import annotations
@@ -195,15 +196,47 @@ def test_parent_txns_walkback_only_for_legacy_tips(spark, tmp_path):
     assert log._parent_txns(log.latest_version()) == {"A": [0, 0]}
 
 
+def test_log_walks_parse_the_checkpoint_once(tmp_path, monkeypatch):
+    """Per-version walks over a checkpointed log read the checkpoint
+    through one ``view()``, not once per version it holds — each walk
+    stays O(versions + checkpoint), not O(versions x checkpoint)."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    for v in range(30):
+        log._publish(
+            v,
+            {
+                "version": v,
+                "note": "",
+                "files": [{"path": f"/nowhere/{v}.parquet", "size": 1}],
+                **({"txns": {"A": [0, 0]}} if v == 0 else {}),
+            },
+        )
+    log.checkpoint()
+    calls = {"n": 0}
+    real = SnapshotLog._checkpoint
+
+    def counting(self):
+        calls["n"] += 1
+        return real(self)
+
+    monkeypatch.setattr(SnapshotLog, "_checkpoint", counting)
+    assert log.live_files() == {f"/nowhere/{v}.parquet" for v in range(30)}
+    assert calls["n"] == 1
+    calls["n"] = 0
+    assert log._parent_txns(29) == {"A": [0, 0]}  # legacy walk-back
+    assert calls["n"] <= 2
+    calls["n"] = 0
+    log.checkpoint()
+    assert calls["n"] == 1
+
+
 # ---- 4. CDF schema resolves from endingVersion ----------------------------------------
 
 
 def test_cdf_schema_matches_ending_version_after_later_evolve(spark, tmp_path):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
     register_sources(spark)
     root = str(tmp_path / "t")
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame([(1, 10), (2, 20)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (2, "price_c", "int")],
@@ -212,7 +245,7 @@ def test_cdf_schema_matches_ending_version_after_later_evolve(spark, tmp_path):
     log.evolve(
         [(1, "k", "bigint"), (2, "amount_c", "bigint")], note="v1 rename+widen"
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(3, 30)], "k bigint, amount_c bigint"), note="v2"
     )
     for v in log.versions():
@@ -375,9 +408,7 @@ def test_cdf_rewrite_past_maxdiffbytes_refuses(spark, tmp_path):
 
 
 def _evolving_fixture(spark, root):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame([(1, 10), (2, 20)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (2, "price_c", "int")],
@@ -386,14 +417,14 @@ def _evolving_fixture(spark, root):
     log.evolve(
         [(1, "k", "bigint"), (2, "amount_c", "bigint")], note="v1 rename+widen"
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(3, 30)], "k bigint, amount_c bigint"), note="v2"
     )
     return log
 
 
 def test_stream_schematracking_drains_evolved_history(spark, tmp_path):
-    """Opt-in id-mapped streaming over an EvolvingLog: old-generation
+    """Opt-in id-mapped streaming over a log with column ids: older
     files surface renamed/widened to the declared (live) schema — the
     batch reader's semantics, now reachable as a backfill stream."""
     register_sources(spark)
@@ -462,7 +493,7 @@ def test_stream_schematracking_mid_stream_evolve_fails_loudly(spark, tmp_path):
         [(1, "k", "bigint"), (2, "amount_c", "bigint"), (3, "note_c", "string")],
         note="mid-stream evolve",
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame(
             [(9, 90, "x")], "k bigint, amount_c bigint, note_c string"
         ),
@@ -632,11 +663,11 @@ def test_avi_interframe_codecs_still_gated():
 
 
 def test_evolving_compact_preserves_rows_and_mapping(spark, tmp_path):
-    """compact() on an EvolvingLog must read THROUGH the id mapping and
-    re-stamp the live columns: the inherited plain-read path silently
-    NULLed renamed columns (union by NAME across generations) and
-    dropped the 'columns' stamp (KeyError on the next evolved read) —
-    the silent-corruption pair found by the round-13 probe."""
+    """compact() on an id-mapped log must read THROUGH the id mapping
+    and carry the live columns: a plain read silently NULLs renamed
+    columns (union by NAME across generations) and an entry without
+    'columns' fails the next read (KeyError) — the silent-corruption
+    pair found by the round-13 probe."""
     import pyspark.sql.functions as F
 
     register_sources(spark)
@@ -645,7 +676,7 @@ def test_evolving_compact_preserves_rows_and_mapping(spark, tmp_path):
     v = log.compact(spark, target_file_bytes=1 << 30)
     assert "columns" in log.entry(v)
     assert all(f["schema_v"] == v for f in log.entry(v)["files"])
-    rows = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    rows = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     assert rows == [(1, 10), (2, 20), (3, 30)]  # rename+widen survived
     # the reader API agrees post-OPTIMIZE
     got = spark.read.format("snaplog").option("path", root).load()
@@ -655,30 +686,30 @@ def test_evolving_compact_preserves_rows_and_mapping(spark, tmp_path):
         [(1, "k", "bigint"), (2, "amount_c", "bigint"), (3, "tag_c", "string")],
         note="add tag_c",
     )
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(4, 40, "x")], "k bigint, amount_c bigint, tag_c string"),
         note="post-evolve append",
     )
     v2 = log.compact(spark, target_file_bytes=1 << 30, sort_cols=["k"])
     rows2 = sorted(
-        (r.k, r.amount_c, r.tag_c) for r in log.read_evolved(spark).collect()
+        (r.k, r.amount_c, r.tag_c) for r in log.read(spark).collect()
     )
     assert rows2 == [(1, 10, None), (2, 20, None), (3, 30, None), (4, 40, "x")]
     assert all(f.get("cluster") == ["k"] for f in log.entry(v2)["files"])
 
 
 def test_evolving_incremental_compact_keeps_generations(spark, tmp_path):
-    """compact_incremental on an EvolvingLog: carried cube files KEEP
+    """compact_incremental on an id-mapped log: carried cube files KEEP
     their original schema_v; the new cube lands at the live generation;
     rows resolve identically before and after."""
     import pyspark.sql.functions as F
 
     root = str(tmp_path / "t")
     # v0 cube on the old schema -> evolve -> append -> incremental
-    log = EvolvingLogFactory(spark, root)
-    want = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    log = _id_mapped_log(spark, root)
+    want = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     vi = log.compact_incremental(spark, sort_cols=["k"], target_file_bytes=1 << 30)
-    got = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    got = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     assert got == want
     entry = log.entry(vi)
     assert "columns" in entry
@@ -686,10 +717,8 @@ def test_evolving_incremental_compact_keeps_generations(spark, tmp_path):
     assert vi in gens  # the new cube is at the live generation
 
 
-def EvolvingLogFactory(spark, root):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(root)
+def _id_mapped_log(spark, root):
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame([(2, 20), (1, 10)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (2, "price_c", "int")],
@@ -697,32 +726,32 @@ def EvolvingLogFactory(spark, root):
     )
     log.compact(spark, target_file_bytes=1 << 30, sort_cols=["k"])
     log.evolve([(1, "k", "bigint"), (2, "amount_c", "bigint")], note="evolve")
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(3, 30)], "k bigint, amount_c bigint"), note="append"
     )
     return log
 
 
-# ---- 9d. the rest of the EvolvingLog composition surface -----------------------------------
+# ---- 9d. the rest of the id-mapped composition surface --------------------------------
 
 
 def test_evolving_rewrite_stamps_and_resolves(spark, tmp_path):
-    """commit_rewrite on an EvolvingLog: the
+    """commit_rewrite on an id-mapped log: the
     rewritten files land at the live generation, kept files keep their
-    schema_v, the entry carries the live columns — the inherited path
-    published neither (KeyError on the next evolved read)."""
+    schema_v, the entry carries the live columns — an entry without
+    them fails the next read (KeyError)."""
     import pyspark.sql.functions as F
 
     root = str(tmp_path / "t")
-    log = EvolvingLogFactory(spark, root)  # cube at old gen + evolved append
-    post = log.read_evolved(spark).where("k != 2")
+    log = _id_mapped_log(spark, root)  # cube at old gen + evolved append
+    post = log.read(spark).where("k != 2")
     all_files = log.live_files([log.latest_version()])
     v = log.commit_rewrite(
         post, keep_files=[], removed_files=all_files, note="delete k=2"
     )
     assert "columns" in log.entry(v)
     assert all(f["schema_v"] == v for f in log.entry(v)["files"])
-    rows = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    rows = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     assert rows == [(1, 10), (3, 30)]
     # schema-mismatched rewrite refused before any write
     with pytest.raises(ValueError, match="mismatch"):
@@ -734,20 +763,18 @@ def test_evolving_rewrite_stamps_and_resolves(spark, tmp_path):
 
 
 def test_evolving_wap_stage_publish_resolves(spark, tmp_path):
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
     root = str(tmp_path / "t")
-    log = EvolvingLogFactory(spark, root)
+    log = _id_mapped_log(spark, root)
     sv = commit_staged(
         log, spark.createDataFrame([(9, 90)], "k bigint, amount_c bigint")
     )
     # the staged snapshot resolves through the id mapping on the audit read
-    assert sorted((r.k, r.amount_c) for r in log.read_evolved(spark, sv).collect()) == [
+    assert sorted((r.k, r.amount_c) for r in log.read(spark, sv).collect()) == [
         (9, 90)
     ]
     pv = publish_staged(log, sv)
     assert "columns" in log.entry(pv)
-    rows = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    rows = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     assert rows == [(1, 10), (2, 20), (3, 30), (9, 90)]
     # published head must never surface the staged version's bare files
     with pytest.raises(ValueError, match="mismatch"):
@@ -757,18 +784,16 @@ def test_evolving_wap_stage_publish_resolves(spark, tmp_path):
 
 
 def test_evolving_clone_refuses_mixed_then_clones_compacted(spark, tmp_path):
-    from experiments_datafusion_spark.operators.table_format import (
-        EvolvingLog,
-        clone_shallow,
-    )
+    from experiments_datafusion_spark.operators.table_format import clone_shallow
 
     root = str(tmp_path / "t")
-    log = EvolvingLogFactory(spark, root)
+    log = _id_mapped_log(spark, root)
     with pytest.raises(ValueError, match="mixed schema generations"):
         clone_shallow(log, str(tmp_path / "c1"))
     log.compact(spark, target_file_bytes=1 << 30)
     dst = clone_shallow(log, str(tmp_path / "c2"))
-    assert isinstance(dst, EvolvingLog)
+    assert dst.entry(0)["columns"] == log.entry(log.latest_version())["columns"]
+    assert {f["schema_v"] for f in dst.entry(0)["files"]} == {0}
     rows = sorted((r.k, r.amount_c) for r in dst.read(spark).collect())
     assert rows == [(1, 10), (2, 20), (3, 30)]
     # the clone is self-contained: it can evolve + append independently
@@ -776,7 +801,7 @@ def test_evolving_clone_refuses_mixed_then_clones_compacted(spark, tmp_path):
         [(1, "k", "bigint"), (2, "amount_c", "bigint"), (3, "n_c", "int")],
         note="clone diverges",
     )
-    dst.append_columns(
+    dst.commit_append(
         spark.createDataFrame([(7, 70, 1)], "k bigint, amount_c bigint, n_c int")
     )
     got = sorted((r.k, r.amount_c, r.n_c) for r in dst.read(spark).collect())
@@ -787,17 +812,17 @@ def test_evolving_clone_refuses_mixed_then_clones_compacted(spark, tmp_path):
 
 def test_evolving_checked_rewrite_aborts_on_concurrent_evolve(spark, tmp_path):
     """A checked rewrite racing an EVOLVE must abort loudly: its files
-    were written under the pre-evolve names, so stamping would regress
+    were written under the pre-evolve names, so publishing would regress
     the schema (the DDL/data race Delta also refuses)."""
     from experiments_datafusion_spark.operators.table_format import (
         ConcurrentModification,
     )
 
     root = str(tmp_path / "t")
-    log = EvolvingLogFactory(spark, root)
+    log = _id_mapped_log(spark, root)
     e = log.entry(log.latest_version())
     all_paths = [f["path"] for f in e["files"]]
-    df_new = log.read_evolved(spark).where("k != 1")
+    df_new = log.read(spark).where("k != 1")
 
     def interpose(attempt):
         if attempt == 0:
@@ -816,11 +841,10 @@ def test_evolving_checked_rewrite_aborts_on_concurrent_evolve(spark, tmp_path):
 
 
 def test_evolving_append_once_stamps_and_dedupes(spark, tmp_path):
-    """append_once on an EvolvingLog routes through append_columns: the
-    entry re-stamps live columns + generations, and the txn ledger still
-    dedupes replays."""
+    """append_once on an id-mapped log: the entry carries the live
+    columns + generations, and the txn ledger still dedupes replays."""
     root = str(tmp_path / "t")
-    log = EvolvingLogFactory(spark, root)
+    log = _id_mapped_log(spark, root)
     v = append_once(
         log,
         spark.createDataFrame([(8, 80)], "k bigint, amount_c bigint"),
@@ -828,7 +852,7 @@ def test_evolving_append_once_stamps_and_dedupes(spark, tmp_path):
         txn_version=0,
     )
     assert "columns" in log.entry(v)
-    rows = sorted((r.k, r.amount_c) for r in log.read_evolved(spark).collect())
+    rows = sorted((r.k, r.amount_c) for r in log.read(spark).collect())
     assert rows == [(1, 10), (2, 20), (3, 30), (8, 80)]
     # replay: no-op, same rows
     assert append_once(
@@ -839,49 +863,45 @@ def test_evolving_append_once_stamps_and_dedupes(spark, tmp_path):
     ) == v
     assert log.latest_version() == v
     assert sorted(
-        (r.k, r.amount_c) for r in log.read_evolved(spark).collect()
+        (r.k, r.amount_c) for r in log.read(spark).collect()
     ) == rows
 
 
 def test_evolving_restore_restores_schema_too(spark, tmp_path):
-    """restore_version of an EvolvingLog restores the target's COLUMN
-    LIST along with its files (Delta RESTORE semantics) — a restore to a
+    """SnapshotLog.restore of an id-mapped log restores the target's
+    COLUMN LIST along with its files (Delta RESTORE semantics) — a restore to a
     pre-rename version surfaces the old name again."""
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-    from experiments_datafusion_spark.queries.round10 import restore_version
 
     root = str(tmp_path / "t")
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame([(1, 10)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (2, "price_c", "int")],
         note="v0",
     )
     log.evolve([(1, "k", "bigint"), (2, "amount_c", "bigint")], note="v1")
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(2, 20)], "k bigint, amount_c bigint"), note="v2"
     )
-    v = restore_version(log, 0)
-    got = log.read_evolved(spark)
+    v = log.restore(0)
+    got = log.read(spark)
     assert got.columns == ["k", "price_c"]  # the pre-evolve schema is back
     assert sorted((r.k, r.price_c) for r in got.collect()) == [(1, 10)]
 
 
 def _evolved_rewrite_log(spark, root):
     import pyspark.sql.functions as F
-    from experiments_datafusion_spark.operators.table_format import EvolvingLog
-
-    log = EvolvingLog(root)
+    log = SnapshotLog(root)
     log.commit_columns(
         spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k bigint, price_c int"),
         [(1, "k", "bigint"), (2, "price_c", "int")],
         note="v0 old generation",
     )
     log.evolve([(1, "k", "bigint"), (2, "amount_c", "bigint")], note="v1")
-    log.append_columns(
+    log.commit_append(
         spark.createDataFrame([(4, 40)], "k bigint, amount_c bigint"), note="v2"
     )
-    post = log.read_evolved(spark).withColumn(
+    post = log.read(spark).withColumn(
         "amount_c",
         F.when(F.col("k") == 2, F.lit(999)).otherwise(F.col("amount_c")),
     )
