@@ -166,12 +166,20 @@ def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None
         return files
 
 
-def _check_names(columns, names, what: str) -> None:
-    """On an id-mapped log (``columns`` not None) a batch must name the
-    live columns in order; a plain log checks nothing here."""
-    if columns is not None and [c[1] for c in columns] != list(names):
+def _check_columns(columns, schema, what: str) -> None:
+    """On an id-mapped log (``columns`` not None) a batch must carry the
+    live columns' names AND types, in order — a drifted producer (say
+    ``k string`` sent to a ``bigint`` column) fails loudly here instead
+    of publishing files that every later id-mapped scan casts to NULL or
+    fails on.  ``schema`` is the batch's entry-schema list
+    (``_entry_schema``); a plain log checks nothing here."""
+    if columns is None:
+        return
+    live = [[n, t] for _i, n, t in columns]
+    batch = [[n, t] for n, t, _null in schema]
+    if live != batch:
         raise ValueError(
-            f"{what} schema mismatch: live columns {columns}, batch {list(names)}"
+            f"{what} schema mismatch: live columns {live}, batch {batch}"
         )
 
 
@@ -295,8 +303,8 @@ class SnapshotLog:
     WRITTEN under.  The carry rule covers ``columns`` exactly as it
     covers ``txns``: every commit kind carries the parent's list into
     its entry (``evolve`` and ``restore`` replace it, ``commit_columns``
-    declares it), a batch must name the live columns, and the files a
-    commit writes get their ``schema_v`` in the same entry — one
+    declares it), a batch must match the live names and types, and the
+    files a commit writes get their ``schema_v`` in the same entry — one
     put-if-absent publish, no second write.  ``read`` groups an
     id-mapped manifest by schema_v, maps each group's physical names to
     the live schema by id (casting where the type widened, NULL where
@@ -383,7 +391,7 @@ class SnapshotLog:
         pe = self.entry(parent) if pe is None else pe
         if "txns" in pe:
             return dict(pe["txns"])
-        entries = self.view().entries
+        entries = self._entries()
         for v in sorted(entries, reverse=True):
             if v < parent and "txns" in entries[v]:
                 return dict(entries[v]["txns"])
@@ -445,15 +453,16 @@ class SnapshotLog:
         idea: ``compact_incremental`` later rewrites only files NOT in a
         cube of the requested spec, leaving settled cubes untouched.
 
-        On an id-mapped log ``df`` must name the live columns, which the
-        entry carries forward (class docstring)."""
+        On an id-mapped log ``df`` must match the live names and types,
+        which the entry carries forward (class docstring)."""
         return self._commit(df, None, note, kind, stats_cols, cluster_tag)
 
     def commit_columns(self, df: DataFrame, columns, note: str = "") -> int:
         """Full commit under an id-carrying schema: ``columns`` is
-        ``[(id, name, type), ...]`` and must name ``df``'s columns in
-        order — ids are the caller's stable identity for each column.
-        Every later commit carries the list forward (class docstring)."""
+        ``[(id, name, type), ...]`` and must match ``df``'s column names
+        and types in order — ids are the caller's stable identity for each
+        column.  Every later commit carries the list forward (class
+        docstring)."""
         return self._commit(df, columns, note)
 
     def _commit(
@@ -466,7 +475,8 @@ class SnapshotLog:
         pe = self.entry(parent) if parent >= 0 else {}
         if columns is None:
             columns = pe.get("columns")
-        _check_names(columns, df.columns, "commit")
+        schema = _entry_schema(df)
+        _check_columns(columns, schema, "commit")
         data_dir = os.path.join(self.root, f"v{version}")
         try:
             files = _write_files(df, data_dir, stats_cols, cluster_tag)
@@ -487,7 +497,7 @@ class SnapshotLog:
             "version": version,
             "note": note,
             "kind": kind,
-            "schema": _entry_schema(df),
+            "schema": schema,
             "files": files,
         }
         self._carry(entry, self._parent_txns(parent, pe), columns, files)
@@ -529,7 +539,7 @@ class SnapshotLog:
         directory write doesn't): the batch's schema must match the
         table's committed schema — a drifted producer fails loudly instead
         of poisoning the table with files a later scan can't union.  On
-        an id-mapped log the batch must name the live columns instead.
+        an id-mapped log the live columns' names and types are the schema.
         Schema EVOLUTION stays an explicit commit (``evolve``, or a full
         commit as in table_time_travel_multi's ADD COLUMN dataflow).
 
@@ -612,7 +622,7 @@ class SnapshotLog:
                 if columns is not None:
                     # the live columns ARE the schema of an id-mapped log
                     if checked is None:
-                        _check_names(columns, [c[0] for c in schema], "append")
+                        _check_columns(columns, schema, "append")
                         checked = (columns, parent)
                 elif want is not None:
                     if not _append_schema_ok(want, schema):
@@ -705,11 +715,11 @@ class SnapshotLog:
         staged tip.  ``stats_cols`` / ``cluster_tag`` as in ``commit``
         (compaction records them on the files it writes).
 
-        On an id-mapped log ``df_new`` must name the live columns, and
-        the rewritten files land at the live generation.  A concurrent
-        EVOLVE does not commute with a rewrite — its files were written
-        under the pre-evolve names — so a moved column list aborts
-        loudly (``ConcurrentModification``).
+        On an id-mapped log ``df_new`` must match the live names and
+        types, and the rewritten files land at the live generation.  A
+        concurrent EVOLVE does not commute with a rewrite — its files were
+        written under the pre-evolve names — so a moved column list
+        aborts loudly (``ConcurrentModification``).
 
         ``on_publish_attempt`` (round 12): an observability hook called
         with the 0-based attempt index just before each publish attempt —
@@ -720,10 +730,10 @@ class SnapshotLog:
         read_set = keep | removed
         tip = self.latest_version()
         columns = self.entry(tip).get("columns") if tip >= 0 else None
-        _check_names(columns, df_new.columns, "rewrite")
+        schema = _entry_schema(df_new)
+        _check_columns(columns, schema, "rewrite")
         data_dir = os.path.join(self.root, f"rw-{uuid.uuid4().hex[:12]}")
         new_files = _write_files(df_new, data_dir, stats_cols, cluster_tag)
-        schema = _entry_schema(df_new)
         # abort paths (ConcurrentModification, staged parent, attempts
         # exhausted) must not leave the rw-* data directory behind
         with _removed_on_error(data_dir):
@@ -901,7 +911,7 @@ class SnapshotLog:
         version the checkpoint covers up to.  Pure O(versions) driver-side
         metadata — data files are untouched, every version stays
         readable."""
-        ents = {str(v): e for v, e in self.view().entries.items()}
+        ents = {str(v): e for v, e in self._entries().items()}
         upto = max(int(v) for v in ents)
         tmp = os.path.join(self._log_dir, f".checkpoint-{upto:05d}.json.tmp")
         with open(tmp, "w") as fh:
@@ -916,15 +926,29 @@ class SnapshotLog:
                 os.remove(p)
         return upto
 
+    def _entries(self, versions=None) -> dict[int, dict]:
+        """Log entries by version — every one, or only ``versions`` —
+        with the checkpoint parsed at most once, where ``entry`` would
+        parse it again per version it holds; asking only for tail
+        versions reads just their files."""
+        tail = set(self._tail_versions())
+        want = None if versions is None else {int(v) for v in versions}
+        cp = None if want is not None and want <= tail else self._checkpoint()
+        held = {int(v): e for v, e in cp["entries"].items()} if cp else {}
+        out = {}
+        for v in sorted(tail | set(held) if want is None else want):
+            if v in tail:
+                out[v] = self.entry(v)
+            elif v in held:
+                out[v] = held[v]
+            else:
+                raise FileNotFoundError(f"no log entry for version {v}")
+        return out
+
     def view(self) -> LogView:
         """The consumer-visible view of the log as it stands now (one
-        read of every entry; see ``LogView``).  The checkpoint is parsed
-        once here, where ``entry`` would parse it again per version."""
-        cp = self._checkpoint()
-        entries = {int(v): e for v, e in cp["entries"].items()} if cp else {}
-        for v in self._tail_versions():
-            entries[v] = self.entry(v)
-        return LogView(entries)
+        read of every entry; see ``LogView``)."""
+        return LogView(self._entries())
 
     def stamp_ts(self, version: int, ts: float) -> None:
         """Re-stamp a version's commit timestamp (ownership rule as in
@@ -940,9 +964,9 @@ class SnapshotLog:
     def live_files(self, versions=None) -> set[str]:
         """Every path the given versions' manifests (all versions by
         default) reference."""
-        entries = self.view().entries
-        vs = entries if versions is None else versions
-        return {f["path"] for v in vs for f in entries[v]["files"]}
+        return {
+            f["path"] for e in self._entries(versions).values() for f in e["files"]
+        }
 
     # ---- read side ----------------------------------------------------------
 
@@ -1015,9 +1039,9 @@ class SnapshotLog:
         the whole window expired), remove data files referenced by
         nothing kept.  Pure metadata diff + O(dead files) unlinks, like
         vacuum()."""
-        view = self.view()
-        keep = {v for v, e in view.entries.items() if e.get("ts", 0.0) >= since_ts}
-        keep.add(view.versions[-1])
+        entries = self._entries()
+        keep = {v for v, e in entries.items() if e.get("ts", 0.0) >= since_ts}
+        keep.add(max(entries))
         return self.vacuum(keep)
 
     def compact(
@@ -1319,7 +1343,7 @@ def mor_current_view(log: SnapshotLog, spark: SparkSession, key: str) -> DataFra
     the anti-join is dropped entirely, which tests/test_round10.py pins at
     the plan level (a real MoR table walks exactly this state machine;
     keeping the join after compaction would pay the probe forever)."""
-    entries = log.view().entries
+    entries = log._entries()
     kinds = {v: entries[v].get("kind") for v in sorted(entries)}
     base = [v for v, k in kinds.items() if k in ("base", "compacted")]
     if not base:
@@ -1490,10 +1514,10 @@ def commit_staged(log: SnapshotLog, df: DataFrame, note: str = "") -> int:
     written exactly once, at full parallelism, BEFORE anyone can read
     it.
 
-    On an id-mapped log the batch must name the live columns; the staged
-    entry carries them and its files land at its own generation, so the
-    audit read (AS OF the staged version) resolves through the ids like
-    any other."""
+    On an id-mapped log the batch must match the live names and types;
+    the staged entry carries the columns and its files land at its own
+    generation, so the audit read (AS OF the staged version) resolves
+    through the ids like any other."""
     return log.commit(df, note=note, kind="staged")
 
 

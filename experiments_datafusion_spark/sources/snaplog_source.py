@@ -813,8 +813,8 @@ def _commit_sink_batch(root, files, schema, app_id, batch_id, drop_files) -> Non
     batch_id)`` (``SnapshotLog.commit_append_files``).  ``drop_files``
     removes the files when no entry references them: an all-empty batch,
     or a replay the carried txn map answers.  An id-mapped target takes
-    the batch like any append: it must name the live columns, and the
-    entry carries them plus each file's ``schema_v``."""
+    the batch like any append: it must match the live columns' names and
+    types, and the entry carries them plus each file's ``schema_v``."""
     if not files:
         drop_files()
         return  # an all-empty micro-batch commits nothing (Delta too)

@@ -117,6 +117,35 @@ def test_every_commit_kind_publishes_columns_in_one_entry(
         assert all("schema_v" in f for f in e["files"]), (kind, v)
 
 
+def test_id_mapped_commits_refuse_a_wrongly_typed_batch(spark, tmp_path):
+    """On a log that carries column ids the live columns' names AND types
+    are the schema: a batch with the right names and a wrong type is
+    refused by every commit kind that writes or publishes a batch, the
+    sink's commit included, and leaves no version and no data behind."""
+    root = str(tmp_path / "t")
+    log = SnapshotLog(root)
+    log.commit_columns(spark.range(4).toDF("a"), [(1, "a", "bigint")], note="v0")
+    bad = spark.range(2).select(F.col("id").cast("string").alias("a"))
+    commits = {
+        "commit_append": lambda: log.commit_append(bad),
+        "sink": lambda: log.commit_append_files(
+            [{"path": os.path.join(root, "ws", "x.parquet"), "size": 1}],
+            [["a", "string", True]],
+        ),
+        "commit_rewrite": lambda: log.commit_rewrite(
+            bad, keep_files=[], removed_files=log.live_files([0])
+        ),
+        "commit_staged": lambda: commit_staged(log, bad),
+        "commit": lambda: log.commit(bad),
+        "commit_columns": lambda: log.commit_columns(bad, [(1, "a", "bigint")]),
+    }
+    for kind, commit in commits.items():
+        with pytest.raises(ValueError, match="schema mismatch"):
+            commit()
+        assert log.versions() == [0], kind
+        assert sorted(os.listdir(root)) == ["_log", "v0"], kind
+
+
 def test_append_once_two_app_interposition_loses_no_record(spark, tmp_path, monkeypatch):
     """Two apps racing one table (the ADVICE r11 #1 scenario): app B's
     append_once lands INSIDE app A's first publish attempt.  A's rebase

@@ -197,11 +197,15 @@ def test_parent_txns_walkback_only_for_legacy_tips(spark, tmp_path):
 
 
 def test_log_walks_parse_the_checkpoint_once(tmp_path, monkeypatch):
-    """Per-version walks over a checkpointed log read the checkpoint
-    through one ``view()``, not once per version it holds — each walk
-    stays O(versions + checkpoint), not O(versions x checkpoint)."""
+    """Per-version walks over a checkpointed log parse the checkpoint
+    once per walk, not once per version it holds — each walk stays
+    O(versions + checkpoint), not O(versions x checkpoint) — and
+    ``live_files(versions)``, what ``vacuum(keep)`` resolves, reads only
+    the kept entries: keeping the tip of a long log costs one entry read,
+    and the checkpoint is parsed only when it holds a kept version."""
     log = SnapshotLog(str(tmp_path / "t"))
-    for v in range(30):
+
+    def publish(v):
         log._publish(
             v,
             {
@@ -211,23 +215,43 @@ def test_log_walks_parse_the_checkpoint_once(tmp_path, monkeypatch):
                 **({"txns": {"A": [0, 0]}} if v == 0 else {}),
             },
         )
+
+    for v in range(30):
+        publish(v)
+    calls = {"entry": 0, "checkpoint": 0}
+    real_entry, real_cp = SnapshotLog.entry, SnapshotLog._checkpoint
+
+    def counting_entry(self, version):
+        calls["entry"] += 1
+        return real_entry(self, version)
+
+    def counting_cp(self):
+        calls["checkpoint"] += 1
+        return real_cp(self)
+
+    monkeypatch.setattr(SnapshotLog, "entry", counting_entry)
+    monkeypatch.setattr(SnapshotLog, "_checkpoint", counting_cp)
+    assert log.live_files([29]) == {"/nowhere/29.parquet"}
+    assert calls == {"entry": 1, "checkpoint": 0}
     log.checkpoint()
-    calls = {"n": 0}
-    real = SnapshotLog._checkpoint
-
-    def counting(self):
-        calls["n"] += 1
-        return real(self)
-
-    monkeypatch.setattr(SnapshotLog, "_checkpoint", counting)
+    calls.update(entry=0, checkpoint=0)
     assert log.live_files() == {f"/nowhere/{v}.parquet" for v in range(30)}
-    assert calls["n"] == 1
-    calls["n"] = 0
+    assert calls["checkpoint"] == 1
+    calls["checkpoint"] = 0
     assert log._parent_txns(29) == {"A": [0, 0]}  # legacy walk-back
-    assert calls["n"] <= 2
-    calls["n"] = 0
+    assert calls["checkpoint"] <= 2
+    publish(30)
+    calls.update(entry=0, checkpoint=0)
+    assert log.live_files([30]) == {"/nowhere/30.parquet"}
+    assert calls == {"entry": 1, "checkpoint": 0}
+    calls.update(entry=0, checkpoint=0)
+    assert log.live_files([3, 30]) == {"/nowhere/3.parquet", "/nowhere/30.parquet"}
+    assert calls == {"entry": 1, "checkpoint": 1}
+    with pytest.raises(FileNotFoundError):
+        log.live_files([31])
+    calls["checkpoint"] = 0
     log.checkpoint()
-    assert calls["n"] == 1
+    assert calls["checkpoint"] == 1
 
 
 # ---- 4. CDF schema resolves from endingVersion ----------------------------------------
