@@ -27,9 +27,10 @@ Design rules, each one a scale decision:
   reader does; a file vacuumed away or an uncommitted stray in the same
   directory can never leak into a read.
 * **The log is O(files) driver-side catalog state.**  Manifest JSON holds
-  (path, size, rows) per file — what a table format's log IS.  Per-file
-  column stats (``stats_manifest``) are collected with ONE distributed
-  aggregate over ``_metadata.file_path``, never a driver-side footer walk.
+  (path, size) per file, plus ``n_rows`` and ``stats: {col: [lo, hi]}``
+  when a commit asks (``stats_cols``: ONE distributed aggregate over the
+  files just written, ``file_stats``); file skipping (``LogView.prune``,
+  the one rule) reads only those blocks.
 * **No data ever moves through the driver** — commits are distributed
   writes, reads are distributed scans; the driver only touches the file
   LIST.
@@ -50,6 +51,7 @@ import shutil
 import threading
 import uuid
 from dataclasses import dataclass
+from datetime import date, datetime
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -122,10 +124,10 @@ def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None
     its manifest file dicts ``{"path", "size"}``, sorted by path.
 
     ``stats_cols`` adds each file's write-time ``n_rows`` and per-column
-    ``stats`` {col: [lo, hi]} (ONE distributed aggregate over the files just
-    written); ``cluster_tag`` marks every file as a member of that
-    clustering cube (see ``SnapshotLog.commit``).  A failure after the
-    write removes ``data_dir``; a failed write leaves it alone, because
+    ``stats`` {col: [lo, hi]} (``file_stats``); ``cluster_tag`` marks every
+    file as a member of that clustering cube (see ``SnapshotLog.commit``).
+    A failure after the write (a stats value with no JSON encoding, say)
+    removes ``data_dir``; a failed write leaves it alone, because
     mode("error") on a name another writer took must not delete theirs."""
     df.write.mode("error").parquet(data_dir)
     with _removed_on_error(data_dir):
@@ -138,32 +140,31 @@ def _write_files(df: DataFrame, data_dir: str, stats_cols=None, cluster_tag=None
             )
         ]
         if stats_cols:
-            stats = file_stats(
+            blocks = file_stats(
                 df.sparkSession.read.parquet(*[f["path"] for f in files]), stats_cols
             )
-            by_path = {_plain_path(r.file_path): r for r in stats}
             for f in files:
-                r = by_path.get(f["path"])
-                if r is None:
-                    # an EMPTY part-file contributes no group to the stats
-                    # aggregate — record it as such
-                    f["n_rows"] = 0
-                    f["stats"] = {}
-                    continue
-                f["n_rows"] = r.n_rows
-                # a file whose stats column is all-NULL has no [lo, hi];
-                # omit that column's block (stats_only_agg/prune raise
-                # loudly on a missing block instead of min()-ing None)
-                f["stats"] = {
-                    c: [getattr(r, f"{c}_lo"), getattr(r, f"{c}_hi")]
-                    for c in stats_cols
-                    if getattr(r, f"{c}_lo") is not None
-                    and getattr(r, f"{c}_hi") is not None
-                }
+                # an EMPTY part-file contributes no group to the aggregate
+                f.update(blocks.get(f["path"], {"n_rows": 0, "stats": {}}))
         if cluster_tag:
             for f in files:
                 f["cluster"] = list(cluster_tag)
         return files
+
+
+def _stat_json(v, col: str):
+    """The one JSON encoding of a stats value — a recorded [lo, hi] and a
+    ``LogView.prune`` band bound alike, so the two always compare like
+    with like.  Dates and timestamps become fixed-width ISO strings (a
+    date is its midnight, as when SQL compares it with a timestamp), so
+    their string order is their time order; any other non-JSON type is
+    refused, naming the column."""
+    if isinstance(v, date):
+        v = v if isinstance(v, datetime) else datetime(v.year, v.month, v.day)
+        return v.isoformat(sep=" ", timespec="microseconds")
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    raise ValueError(f"stats column {col!r}: {type(v).__name__} has no JSON stats encoding")
 
 
 def _check_columns(columns, schema, what: str) -> None:
@@ -183,6 +184,16 @@ def _check_columns(columns, schema, what: str) -> None:
         )
 
 
+def _refuse_staged(e: dict, what: str) -> None:
+    """A commit that builds on the tip refuses a staged (write-audit-publish)
+    tip: it would carry the un-audited batch into a published entry."""
+    if e.get("kind") == "staged":
+        raise ValueError(
+            f"cannot {what} onto staged version {e['version']}; "
+            "publish_staged or vacuum it first"
+        )
+
+
 def _id_projection(written, live) -> list:
     """Map a file's WRITTEN column list to the LIVE one through the stable
     column ids (the Iceberg rule, see ``SnapshotLog``): one
@@ -199,7 +210,8 @@ class LogView:
     removed paths)`` delta against the previous published version — all
     from one O(versions + manifest entries) forward pass.  Every reader
     resolves versions here (``head``, ``resolve``), so the staged rule is
-    applied in this one place."""
+    applied in this one place, and every file-skipping read plans here
+    (``prune``), so the interval rule is written once."""
 
     def __init__(self, entries: dict[int, dict]):
         self.entries = entries
@@ -265,6 +277,49 @@ class LogView:
         if written is None or list(map(list, written)) == list(map(list, live_cols)):
             return None
         return _id_projection(written, live_cols)
+
+    def prune(self, version, bands: dict) -> list[dict]:
+        """The manifest-pruning rule: the file dicts of ``version`` (as in
+        ``resolve``) that may hold rows inside EVERY inclusive band of
+        ``{col: (lo, hi)}``, judged from the write-time stats alone.  A
+        file with ``n_rows == 0`` is skipped; a file is kept when its
+        [lo, hi] meets every band, or when it has no stats block for a
+        band's column — skipping is advisory, so the caller's scan
+        re-applies the predicate.  ``{}`` keeps every non-empty file.
+        Bounds take the stats encoding (``_stat_json``): date/timestamp
+        columns take date/datetime bounds.  A column the version lacks
+        raises ``ValueError``.  A stat is keyed by the name its file was
+        WRITTEN under, so on an id-mapped log each band column is mapped
+        through the file's id projection — a rename (or an a<->b swap)
+        never prunes by a stale name."""
+        e = self.entries[self.resolve(version=version)]
+        live = e.get("columns")
+        if live is not None:
+            types = {n: t for _i, n, t in live}
+        else:
+            types = {n: t for n, t, _null in e.get("schema") or []}
+        want = {}
+        for c, (lo, hi) in bands.items():
+            if c not in types:
+                raise ValueError(f"prune: version {e['version']} has no column {c!r}")
+            temporal = types[c].startswith(("date", "timestamp"))
+            if temporal != all(isinstance(b, date) for b in (lo, hi)):
+                raise ValueError(
+                    f"prune: bounds {(lo, hi)!r} do not fit {types[c]} column {c!r}"
+                    " (date/datetime bounds go with date/timestamp columns only)"
+                )
+            want[c] = (_stat_json(lo, c), _stat_json(hi, c))
+
+        def meets(f: dict) -> bool:
+            proj = self.file_projection(f, live)
+            written = {ln: pn for ln, pn, _t in proj} if proj else {}
+            stats = f.get("stats", {})
+            return all(
+                (s := stats.get(written.get(c, c))) is None or (s[1] >= lo and s[0] <= hi)
+                for c, (lo, hi) in want.items()
+            )
+
+        return [f for f in e["files"] if f.get("n_rows") != 0 and meets(f)]
 
 
 class SnapshotLog:
@@ -382,10 +437,11 @@ class SnapshotLog:
         after the last ``append_once``).  Seeding the child from the bare
         parent would publish a map that SHADOWS those older records — a
         replayed batch from another app would then re-commit (duplicate
-        rows).  So
-        when the parent carries no map, walk back to the newest entry
-        that does and PROMOTE it into the child; once promoted, every
-        descendant carries it and the walk-back is O(1) again."""
+        rows).  So when the parent carries no map, walk back to the newest
+        entry that does and PROMOTE it into the child.  Every entry
+        written under the carry rule records ``txns``, even an empty map,
+        so the walk-back runs only on a legacy parent, and once promoted
+        every descendant carries the map."""
         if parent < 0:
             return {}
         pe = self.entry(parent) if pe is None else pe
@@ -400,15 +456,14 @@ class SnapshotLog:
     @staticmethod
     def _carry(entry: dict, txns: dict, columns, written=(), written_at=None) -> None:
         """The carry rule (class docstring), applied to an entry before
-        its one publish: a non-empty txn map (empty maps are omitted to
-        keep txn-less tables' entries lean; carry-forward still converges
-        because once any entry holds ``txns`` every descendant does), and
-        on an id-mapped log the live ``columns`` plus a ``schema_v`` on
-        each file dict in ``written`` — ``written_at``, the version whose
+        its one publish: the txn map, recorded even when empty so that
+        the next commit reads it from this one entry instead of walking
+        the log for a legacy record (``_parent_txns``), and on an
+        id-mapped log the live ``columns`` plus a ``schema_v`` on each
+        file dict in ``written`` — ``written_at``, the version whose
         columns the batch was checked against, defaulting to the entry's
         own version."""
-        if txns:
-            entry["txns"] = txns
+        entry["txns"] = txns
         if columns is None:
             return
         entry["columns"] = [[int(i), n, t] for i, n, t in columns]
@@ -442,11 +497,12 @@ class SnapshotLog:
         ``base`` / ``delete-sidecar`` / ``compacted``; plain snapshots
         keep the default ``data``.
 
-        ``stats_cols`` records per-file [lo, hi] + row counts for those
-        columns IN the manifest entry at WRITE time (one distributed
-        aggregate over the files just written) — the add-file stats block
-        of a real format, paid once per commit so later scans can prune
-        (and stats-only aggregates can answer) without touching data.
+        ``stats_cols`` records each file's ``n_rows`` and ``stats: {col:
+        [lo, hi]}`` IN the manifest entry at WRITE time (``file_stats``) —
+        the add-file stats block of a real format, paid once per commit so
+        later scans can prune (``LogView.prune``) and stats-only aggregates
+        can answer without touching data; a value with no JSON encoding
+        raises ``ValueError`` before anything is published.
 
         ``cluster_tag`` (round 13) marks each written file as a member of
         a clustering CUBE on those columns — the liquid-clustering ZCube
@@ -515,6 +571,7 @@ class SnapshotLog:
         kind: str = "data",
         attempts: int = 10,
         txn: tuple[str, int] | None = None,
+        stats_cols=None,
     ) -> int:
         """APPEND commit: write only the NEW rows' files; the manifest entry
         lists the latest version's files PLUS the new ones — the add-file
@@ -522,8 +579,9 @@ class SnapshotLog:
         commit would copy the whole table per micro-batch; this one's write
         cost is O(batch) and its log cost O(live files)).  Reads need no
         special casing: the entry IS the live file list, so AS OF any
-        version, vacuum, stats manifests, and the MoR reader all work
-        unchanged.
+        version, vacuum, pruning, and the MoR reader all work unchanged.
+        ``stats_cols`` records the batch files' write-time stats exactly as
+        in ``commit``; carried files keep their own.
 
         CONCURRENT-SAFE: the batch is written ONCE to a batch-unique
         ``b-*`` directory (readers never list directories — the manifest
@@ -556,7 +614,7 @@ class SnapshotLog:
             if rec is not None and int(rec[0]) >= int(txn[1]):
                 return int(rec[1])  # replay: nothing written at all
         data_dir = os.path.join(self.root, f"b-{uuid.uuid4().hex[:12]}")
-        new_files = _write_files(df, data_dir)
+        new_files = _write_files(df, data_dir, stats_cols)
         # attempts exhausted / schema drift / staged parent: the batch
         # never became referenced — remove the orphan data directory
         with _removed_on_error(data_dir):
@@ -609,14 +667,7 @@ class SnapshotLog:
             columns = None
             if parent >= 0:
                 pe = self.entry(parent)
-                if pe.get("kind") == "staged":
-                    # appends extend the PUBLISHED lineage; an append on
-                    # top of a staged (unpublished) snapshot would carry its
-                    # files into a data entry and leak the un-audited batch
-                    raise ValueError(
-                        f"cannot append onto staged version {parent}; "
-                        "publish_staged or vacuum it first"
-                    )
+                _refuse_staged(pe, "append")  # appends extend the PUBLISHED lineage
                 columns = pe.get("columns")
                 want = pe.get("schema")
                 if columns is not None:
@@ -691,11 +742,10 @@ class SnapshotLog:
 
         The caller derived ``keep_files`` (carried forward untouched, by
         reference) and ``removed_files`` (the files it rewrote into
-        ``df_new``) from some snapshot it READ; either list may hold
-        ``file:`` URIs (the ``_metadata.file_path`` form stats manifests
-        carry).  The new data is written ONCE to a rewrite-unique ``rw-*``
-        directory; then the publish loop re-reads the CURRENT latest
-        version and applies the compatibility check before every attempt:
+        ``df_new``), as manifest paths, from some snapshot it READ.  The
+        new data is written ONCE to a rewrite-unique ``rw-*`` directory;
+        then the publish loop re-reads the CURRENT latest version and
+        applies the compatibility check before every attempt:
 
         * every file this transaction read (keep + removed) must still be
           live — a concurrent commit that removed/rewrote any of them
@@ -725,9 +775,8 @@ class SnapshotLog:
         with the 0-based attempt index just before each publish attempt —
         the supported way for tests and race-demonstration keys to
         interpose a concurrent commit deterministically."""
-        keep = {_plain_path(p) for p in keep_files}
-        removed = {_plain_path(p) for p in removed_files}
-        read_set = keep | removed
+        removed = set(removed_files)
+        read_set = set(keep_files) | removed
         tip = self.latest_version()
         columns = self.entry(tip).get("columns") if tip >= 0 else None
         schema = _entry_schema(df_new)
@@ -742,11 +791,7 @@ class SnapshotLog:
                 if parent < 0:
                     raise ValueError("rewrite needs an existing table version")
                 pe = self.entry(parent)
-                if pe.get("kind") == "staged":
-                    raise ValueError(
-                        f"cannot rewrite onto staged version {parent}; "
-                        "publish_staged or vacuum it first"
-                    )
+                _refuse_staged(pe, "rewrite")
                 live = {f["path"]: f for f in pe["files"]}
                 gone = sorted(read_set - set(live))
                 if gone:
@@ -811,11 +856,7 @@ class SnapshotLog:
         for _ in range(attempts):
             parent = self.latest_version()
             pe = self.entry(parent)
-            if pe.get("kind") == "staged":
-                raise ValueError(
-                    f"cannot evolve on staged version {parent}; "
-                    "publish_staged or vacuum it first"
-                )
+            _refuse_staged(pe, "evolve")
             if parent != base_parent and pe.get("columns") != base_cols:
                 raise ConcurrentModification(
                     "concurrent schema change: live columns moved from "
@@ -970,14 +1011,21 @@ class SnapshotLog:
 
     # ---- read side ----------------------------------------------------------
 
+    def _head_entry(self) -> dict:
+        """The published head's entry: the tip, walked back over staged
+        (write-audit-publish) entries — one entry read when the tip is
+        published, where ``view().head`` reads every entry."""
+        for v in reversed(self.versions()):
+            e = self.entry(v)
+            if e.get("kind") != "staged":
+                return e
+        raise ValueError("no published version in the log")
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """AS OF read: scan exactly the version's manifest file list —
-        through the column ids when the entry carries ``columns`` (every
-        operation that reads through here, compaction included, sees the
-        live schema; a by-NAME union across generations would silently
-        NULL renamed columns)."""
-        entry = self.entry(self.latest_version() if version is None else version)
-        return self._read_manifest_files(spark, entry, entry["files"])
+        """AS OF read of ``version`` (default: the published head): scan
+        exactly the version's manifest file list (``read_files``)."""
+        e = self._head_entry() if version is None else self.entry(version)
+        return self.read_files(spark, e["version"], e["files"])
 
     def read_as_of(
         self,
@@ -1035,14 +1083,14 @@ class SnapshotLog:
     def vacuum_retain(self, since_ts: float) -> list[str]:
         """Retention-policy vacuum (the Delta ``VACUUM ... RETAIN`` shape
         over commit timestamps): keep every version committed at or after
-        ``since_ts`` PLUS the latest (the table must stay readable even if
-        the whole window expired), remove data files referenced by
-        nothing kept.  Pure metadata diff + O(dead files) unlinks, like
-        vacuum()."""
-        entries = self._entries()
-        keep = {v for v, e in entries.items() if e.get("ts", 0.0) >= since_ts}
-        keep.add(max(entries))
-        return self.vacuum(keep)
+        ``since_ts`` PLUS the published head and the pending staged
+        versions above it (the table stays readable, and publishable, even
+        if the whole window expired), remove data files referenced by
+        nothing kept.  Pure metadata diff + O(dead files) unlinks."""
+        view = self.view()
+        head = view.published[-1] if view.published else -1
+        entries = view.entries.items()
+        return self.vacuum({v for v, e in entries if v >= head or e.get("ts", 0.0) >= since_ts})
 
     def compact(
         self,
@@ -1084,15 +1132,19 @@ class SnapshotLog:
 
         On an id-mapped log the rewrite reads through the ids (``read``)
         and the full commit carries the live columns, so every rewritten
-        file lands at the compact version's own generation."""
+        file lands at the compact version's own generation.  A staged tip
+        is refused (``_refuse_staged``)."""
         import math
 
         if sort_cols and zorder_cols:
             raise ValueError("compact: sort_cols and zorder_cols are exclusive")
-        v = self.latest_version() if version is None else version
-        total = sum(fe.size for fe in self.manifest(v))
+        tip = self.entry(self.latest_version())
+        _refuse_staged(tip, "compact")
+        e = tip if version is None else self.entry(version)
+        v = e["version"]
+        total = sum(f["size"] for f in e["files"])
         n = max(1, math.ceil(total / target_file_bytes))
-        df = self.read(spark, v)
+        df = self.read_files(spark, v, e["files"])
         if sort_cols:
             return self.commit(
                 _clustered(df, n, sort_cols=sort_cols),
@@ -1161,7 +1213,7 @@ class SnapshotLog:
             return v
         total = sum(f["size"] for f in todo)
         n = max(1, math.ceil(total / target_file_bytes))
-        df = self._read_manifest_files(spark, entry, todo)
+        df = self.read_files(spark, v, todo)
         return self.commit_rewrite(
             _clustered(df, n, sort_cols, zorder_cols),
             keep_files=[f["path"] for f in keep],
@@ -1175,22 +1227,19 @@ class SnapshotLog:
             cluster_tag=spec,
         )
 
-    def stats_manifest(self, spark: SparkSession, version: int, cols):
-        """Per-file add-file stats for ``cols`` over a version (see
-        ``file_stats``) — O(files) driver rows."""
-        return file_stats(self.read(spark, version), cols)
-
-    def _read_manifest_files(self, spark: SparkSession, entry: dict, files) -> DataFrame:
-        """Read a subset of an entry's manifest files as TABLE rows: one
-        parquet scan on a plain log; on an id-mapped one, one sub-scan
-        per schema generation in play (a handful, not one per file),
-        each projected to the entry's live columns through the ids,
-        unioned by COLUMN ID, never by name."""
+    def read_files(self, spark: SparkSession, version: int, files) -> DataFrame:
+        """Read ``files``, a subset of ``version``'s manifest file dicts (a
+        pruned file list, say), as TABLE rows: one parquet scan on a plain
+        log; on an id-mapped one — where every file carries ``schema_v`` —
+        one sub-scan per schema generation in play (a handful, not one per
+        file), each projected to the version's live columns through the
+        ids, unioned by COLUMN ID, never by name (a by-NAME union across
+        generations would silently NULL renamed columns)."""
         if not files:
-            raise ValueError(f"version {entry['version']} has no data files")
-        live = entry.get("columns")
-        if live is None:
-            return self.read_files(spark, [f["path"] for f in files])
+            raise ValueError(f"version {version} has no data files")
+        if all("schema_v" not in f for f in files):
+            return spark.read.parquet(*[f["path"] for f in files])
+        live = self.entry(version)["columns"]
         by_schema: dict[int, list[str]] = {}
         for f in files:
             by_schema.setdefault(int(f["schema_v"]), []).append(f["path"])
@@ -1206,10 +1255,6 @@ class SnapshotLog:
             out = part if out is None else out.unionByName(part)
         return out
 
-    def read_files(self, spark: SparkSession, files) -> DataFrame:
-        """Scan an explicit (pruned) file list."""
-        return spark.read.parquet(*list(files))
-
     def stats_only_agg(self, version: int, col: str) -> tuple:
         """Answer ``count(*) / min(col) / max(col)`` PURELY from the
         manifest's write-time stats (``commit(stats_cols=...)``) — zero
@@ -1222,7 +1267,9 @@ class SnapshotLog:
         so ``col`` must be non-nullable for min/max to equal the scan
         answer — the caller picks the column, the stats block stays
         honest either way for count(*).  Empty part-files (n_rows == 0)
-        carry no [lo, hi] and are vacuous for min/max."""
+        carry no [lo, hi] and are vacuous for min/max.  min/max come back
+        in the stats encoding (``_stat_json``: a timestamp column's are
+        ISO strings)."""
         files = self.entry(version)["files"]
         if any("n_rows" not in f for f in files):
             raise ValueError(f"version {version} has no write-time stats for {col!r}")
@@ -1278,37 +1325,29 @@ def zorder_col(cols, bits_per_dim: int = 16):
 # ---- shared dataflows over snapshots ---------------------------------------------
 
 
-def file_stats(df: DataFrame, cols):
-    """Per-file add-file stats: ``n_rows`` and [``c``_lo, ``c``_hi] for every
-    column in ``cols`` — ONE distributed aggregate keyed on the
-    file-metadata column, never a driver-side footer walk; returns O(files)
-    driver rows (the manifest is catalog state, not data).  This is what a
-    table format's per-file stats block holds (Delta's minValues /
-    maxValues maps) and what makes MULTI-dimensional file skipping work
-    when the layout clusters several dimensions (Z-order)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
+def file_stats(df: DataFrame, cols) -> dict[str, dict]:
+    """Per-file add-file stats of ``df``'s files: ``{path: {"n_rows",
+    "stats": {col: [lo, hi]}}}``, the block ``commit(stats_cols=...)``
+    attaches to a manifest file dict (Delta's minValues / maxValues), from
+    ONE distributed aggregate keyed on the file-metadata column — never a
+    driver-side footer walk.  Values are JSON-encoded (``_stat_json``).  A
+    column that is all-NULL in a file has no [lo, hi], so its block is
+    omitted (prune keeps the file; ``stats_only_agg`` raises); a file with
+    no rows has no group, so it is absent."""
+    aggs = [F.count(F.lit(1))]
     for c in cols:
-        aggs += [F.min(c).alias(f"{c}_lo"), F.max(c).alias(f"{c}_hi")]
-    return (
-        df.groupBy(F.col("_metadata.file_path").alias("file_path"))
-        .agg(*aggs)
-        .collect()
-    )
-
-
-def prune(stats, bands: dict) -> list[str]:
-    """Conjunctive planning-time skip: keep files whose per-column [lo, hi]
-    interval intersects EVERY predicate band (``{col: (lo, hi)}``) — the
-    manifest-pruning rule.  Conservative as always: the residual filter
-    stays on the scan."""
-    keep = []
-    for r in stats:
-        if all(
-            getattr(r, f"{c}_hi") >= lo and getattr(r, f"{c}_lo") <= hi
-            for c, (lo, hi) in bands.items()
-        ):
-            keep.append(r.file_path)
-    return keep
+        aggs += [F.min(c), F.max(c)]
+    out = {}
+    for r in df.groupBy(F.col("_metadata.file_path")).agg(*aggs).collect():
+        out[_plain_path(r[0])] = {
+            "n_rows": r[1],
+            "stats": {
+                c: [_stat_json(lo, c), _stat_json(hi, c)]
+                for c, lo, hi in zip(cols, r[2::2], r[3::2])
+                if lo is not None and hi is not None
+            },
+        }
+    return out
 
 
 def append_once(log: SnapshotLog, df: DataFrame, app_id: str, txn_version: int) -> int:
@@ -1567,13 +1606,13 @@ def publish_staged(
 
 def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLog:
     """SHALLOW CLONE (the Delta ``CREATE TABLE ... SHALLOW CLONE`` shape):
-    the clone is a NEW log whose v0 entry references the source's latest
-    files BY PATH — zero data copied, O(live files) metadata.  Writes to
-    the clone diverge freely (its commits reference/add its own files and
-    never touch the source); the standard caveat applies and is the
-    test's business to pin: vacuuming the SOURCE can remove files the
-    clone still references, exactly as documented for real shallow
-    clones.
+    the clone is a NEW log whose v0 entry references the source's
+    published head's files BY PATH — zero data copied, O(live files)
+    metadata.  Writes to the clone diverge freely (its commits
+    reference/add its own files and never touch the source); the standard
+    caveat applies and is the test's business to pin: vacuuming the
+    SOURCE can remove files the clone still references, exactly as
+    documented for real shallow clones.
 
     Id-mapped sources (round 13): the squashed single-entry clone is a
     NEW identity with no access to the source's historical column lists,
@@ -1584,7 +1623,7 @@ def clone_shallow(src: SnapshotLog, dst_root: str, note: str = "") -> SnapshotLo
     entry carries the live columns and every file ``schema_v`` 0).
     Without this a name-keyed read of the clone would corrupt renamed
     columns — the compaction-probe bug class."""
-    e = src.entry(src.latest_version())
+    e = src._head_entry()
     live = e.get("columns")
     if live is not None:
         for sv in {int(f["schema_v"]) for f in e["files"]}:
@@ -1644,7 +1683,7 @@ def file_bloom_packed(df: DataFrame, col: str, m: int = 8192, k: int = 3):
     file vs file_bloom's O(distinct positions) python ints (measured at
     10M rows/32 files: the positions-set collect is the build-cost
     lever; see BENCH_NOTES.md, "Table-format layer at 10M rows").  Returns
-    {file_path: {word: bits}}."""
+    {manifest path: {word: bits}}."""
     pos = F.explode(
         F.array(
             *[
@@ -1668,13 +1707,13 @@ def file_bloom_packed(df: DataFrame, col: str, m: int = 8192, k: int = 3):
     )
     out: dict = {}
     for r in words:
-        out.setdefault(r.file_path, {})[r.w] = r.bits
+        out.setdefault(_plain_path(r.file_path), {})[r.w] = r.bits
     return out
 
 
 def bloom_prune_packed(file_blooms: dict, probe_positions: dict) -> list[str]:
     """bloom_prune over the packed representation: a probe key is admitted
-    by a file iff every one of its k positions' bits is set."""
+    by a file iff all k of its positions' bits are set (manifest paths)."""
 
     def has(bm: dict, p: int) -> bool:
         w = bm.get(p // 64)
@@ -1699,14 +1738,15 @@ def bloom_probe_positions(spark: SparkSession, keys, m: int = 8192, k: int = 3) 
 
 
 def bloom_prune(file_blooms, probe_positions: dict) -> list[str]:
-    """Keep files whose bloom admits AT LEAST ONE probe key (all k of the
-    key's positions present).  False positives keep a file (harmless —
-    residual filter drops the rows); false negatives are impossible."""
+    """Keep files (manifest paths) whose bloom admits AT LEAST ONE probe key
+    (all k of the key's positions present).  False positives keep a file
+    (harmless — residual filter drops the rows); false negatives are
+    impossible."""
     keep = []
     for r in file_blooms:
         s = set(r.positions)
         if any(ps <= s for ps in probe_positions.values()):
-            keep.append(r.file_path)
+            keep.append(_plain_path(r.file_path))
     return sorted(keep)
 
 

@@ -18,12 +18,9 @@ from experiments_datafusion_spark.io import materialize_then_rmtree, table
 from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
     bloom_probe_positions,
-    bloom_prune,
     changes_between,
-    file_bloom,
     merge_into,
     merge_upsert,
-    prune,
 )
 from experiments_datafusion_spark.queries import register
 
@@ -296,7 +293,7 @@ def table_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table_delete_compliance rewrites the WHOLE table (correct, but its
 # docstring's "partition-pruned rewrite of affected files" was a claim,
 # not a demonstration).  This key demonstrates it: on a custkey-clustered
-# table, a band DELETE consults the stats manifest to find the AFFECTED
+# table, a band DELETE consults the manifest's stats to find the AFFECTED
 # files, rewrites only those (minus the cohort), and the new version's
 # manifest carries every untouched file forward by reference
 # (SnapshotLog.commit_rewrite) — O(affected) data written, the rest of
@@ -321,9 +318,9 @@ WHERE o_custkey NOT BETWEEN {_DEL_LO} AND {_DEL_HI}
 )
 def table_delete_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned copy-on-write DELETE (module comment above): commit
-    the clustered base, prune the stats manifest to the files whose
-    [min, max] intersects the delete band, rewrite ONLY those with the
-    cohort filtered out, and commit_rewrite carries every untouched file
+    the clustered base with write-time stats, prune the manifest to the
+    files whose [min, max] intersects the delete band, rewrite ONLY those
+    with the cohort filtered out, and commit_rewrite carries every untouched file
     forward by reference.  The audit reads v1 back through its manifest;
     the oracle recomputes the surviving rows from raw orders — so losing
     an untouched file, leaking a cohort row, or dropping a non-cohort row
@@ -336,17 +333,19 @@ def table_delete_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     log.commit(
-        orders.repartitionByRange(_DEL_FILES, "o_custkey"), note="clustered base"
+        orders.repartitionByRange(_DEL_FILES, "o_custkey"),
+        note="clustered base",
+        stats_cols=["o_custkey"],
     )
-    stats = log.stats_manifest(spark, 0, ["o_custkey"])
-    affected = set(prune(stats, {"o_custkey": (_DEL_LO, _DEL_HI)}))
-    keep = [r.file_path for r in stats if r.file_path not in affected]
+    affected = log.view().prune(0, {"o_custkey": (_DEL_LO, _DEL_HI)})
+    hit = {f["path"] for f in affected}
+    keep = sorted(log.live_files([0]) - hit)
     # rewrite just the affected slice, minus the cohort (the residual NOT
     # BETWEEN stays because manifest pruning is conservative)
-    rewritten = log.read_files(spark, sorted(affected)).where(
+    rewritten = log.read_files(spark, 0, affected).where(
         ~F.col("o_custkey").between(_DEL_LO, _DEL_HI)
     )
-    v1 = log.commit_rewrite(rewritten, keep, sorted(affected), note="band delete")
+    v1 = log.commit_rewrite(rewritten, keep, sorted(hit), note="band delete")
     out = log.read(spark, v1).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_custkey").cast("bigint").alias("cust_sum"),
@@ -449,9 +448,9 @@ def table_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # layout; this key proves the MULTI-dimensional case — a layout clustered
 # by the Z-VALUE of two scan dimensions (queries/packing.zorder_value, the
 # OPTIMIZE ZORDER BY idiom) gives every file a tight bounding RECTANGLE,
-# so a conjunctive 2-D predicate skips files on BOTH dimensions from one
-# multi-column stats manifest (operators/table_format.file_stats — the
-# minValues/maxValues map a real format stores per file).  A 1-D
+# so a conjunctive 2-D predicate skips files on BOTH dimensions from the
+# write-time stats of both columns (operators/table_format.file_stats —
+# the minValues/maxValues map a real format stores per file).  A 1-D
 # range-clustered layout can only ever prune on its cluster column; the
 # z-layout's y-band pruning power is pinned against exactly that
 # counterfactual in tests/test_round10.py, along with numFiles ==
@@ -466,8 +465,9 @@ _ZY_LO, _ZY_HI = 300, 600
 
 def zorder_layout_log(spark: SparkSession, sf_dir: str, root: str) -> SnapshotLog:
     """Commit the events (x=user_id, y=minute-of-day) rewritten in Z-order
-    as a snapshot: z = bit-interleave(x, y), range-partition on z, write.
-    Each file then covers one z-range = one tight (x, y) rectangle."""
+    as a snapshot with write-time stats on x and y: z = bit-interleave(x,
+    y), range-partition on z, write.  Each file then covers one z-range =
+    one tight (x, y) rectangle."""
     from experiments_datafusion_spark.queries.packing import zorder_value
 
     ev = table(spark, sf_dir, "events")
@@ -481,6 +481,7 @@ def zorder_layout_log(spark: SparkSession, sf_dir: str, root: str) -> SnapshotLo
         .repartitionByRange(_Z_FILES, "_z")
         .drop("_z"),
         note="z-ordered rewrite",
+        stats_cols=["x", "y"],
     )
     return log
 
@@ -503,9 +504,9 @@ WHERE x BETWEEN {_ZX_LO} AND {_ZX_HI} AND y BETWEEN {_ZY_LO} AND {_ZY_HI}
 )
 def scan_pruning_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D manifest-pruned band read over the Z-ordered rewrite (module
-    comment above): write z-clustered, collect the TWO-column stats
-    manifest with one distributed aggregate, prune the file list
-    driver-side under the conjunctive (x-band AND y-band) predicate, scan
+    comment above): write z-clustered with TWO-column write-time stats,
+    prune the file list driver-side under the conjunctive (x-band AND
+    y-band) predicate, scan
     only the survivors with the residual filter re-applied.  The oracle
     replays the band query on raw events, so rewrite + manifest + pruned
     read are all value-verified; the skipping evidence lives in
@@ -514,11 +515,8 @@ def scan_pruning_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="zprune_")
     log = zorder_layout_log(spark, sf_dir, root)
-    stats = log.stats_manifest(spark, 0, ["x", "y"])
-    survivors = prune(
-        stats, {"x": (_ZX_LO, _ZX_HI), "y": (_ZY_LO, _ZY_HI)}
-    )
-    band = log.read_files(spark, survivors).where(
+    survivors = log.view().prune(0, {"x": (_ZX_LO, _ZX_HI), "y": (_ZY_LO, _ZY_HI)})
+    band = log.read_files(spark, 0, survivors).where(
         F.col("x").between(_ZX_LO, _ZX_HI) & F.col("y").between(_ZY_LO, _ZY_HI)
     )
     out = band.agg(
@@ -632,7 +630,7 @@ _PE_C_LO, _PE_C_HI = 50, 90  # non-empty at sf0.001 (custkey 0..149)
 def partition_evolution_log(spark: SparkSession, sf_dir: str, root: str) -> SnapshotLog:
     """Commit spec-A (date-clustered pre-cut rows), then APPEND spec-B
     (custkey-clustered post-cut rows) — two layout generations, one
-    manifest, zero rewrites."""
+    manifest, zero rewrites; both with write-time stats on both columns."""
     log = SnapshotLog(root)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
@@ -642,12 +640,14 @@ def partition_evolution_log(spark: SparkSession, sf_dir: str, root: str) -> Snap
             _PE_FILES, "o_orderdate"
         ),
         note="spec A: clustered by o_orderdate",
+        stats_cols=["o_orderdate", "o_custkey"],
     )
     log.commit_append(
         orders.where(F.col("o_orderdate") >= _PE_CUT).repartitionByRange(
             _PE_FILES, "o_custkey"
         ),
         note="spec B: clustered by o_custkey",
+        stats_cols=["o_orderdate", "o_custkey"],
     )
     return log
 
@@ -666,22 +666,21 @@ WHERE o_orderdate BETWEEN TIMESTAMP '{_PE_D_LO}' AND TIMESTAMP '{_PE_D_HI}'
 )
 def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-spec evolution read (module comment above): the manifest
-    holds date-clustered spec-A files AND custkey-clustered spec-B files;
-    a (date-band AND custkey-band) query collects ONE multi-column stats
-    manifest over the mixed layout, prunes conjunctively (each generation
-    shrinks on its own tight dimension), and scans the survivors with the
-    residual filter re-applied.  The oracle replays the band query on raw
-    orders, so both layout generations, the append commit, and the pruned
-    read are value-verified together."""
+    holds date-clustered spec-A files AND custkey-clustered spec-B files,
+    each with write-time stats on both columns; a (date-band AND
+    custkey-band) query prunes the mixed layout conjunctively (each
+    generation shrinks on its own tight dimension) and scans the
+    survivors with the residual filter re-applied.  The oracle replays
+    the band query on raw orders, so both layout generations, the append
+    commit, and the pruned read are value-verified together."""
     import tempfile
 
     root = tempfile.mkdtemp(prefix="pevo_")
     log = partition_evolution_log(spark, sf_dir, root)
     from datetime import datetime
 
-    stats = log.stats_manifest(spark, 1, ["o_orderdate", "o_custkey"])
-    survivors = prune(
-        stats,
+    survivors = log.view().prune(
+        1,
         {
             "o_orderdate": (
                 datetime.fromisoformat(_PE_D_LO),
@@ -690,7 +689,7 @@ def table_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey": (_PE_C_LO, _PE_C_HI),
         },
     )
-    band = log.read_files(spark, survivors).where(
+    band = log.read_files(spark, 1, survivors).where(
         F.col("o_orderdate").between(_PE_D_LO, _PE_D_HI)
         & F.col("o_custkey").between(_PE_C_LO, _PE_C_HI)
     )
@@ -764,9 +763,10 @@ def scan_pruning_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blooms = file_bloom_packed(log.read(spark, 0), "o_orderkey", m=m)
     probes = bloom_probe_positions(spark, _BLOOM_PROBES, m=m)
-    survivors = bloom_prune_packed(blooms, probes)
+    admitted = set(bloom_prune_packed(blooms, probes))
+    survivors = [f for f in log.entry(0)["files"] if f["path"] in admitted]
     out = (
-        log.read_files(spark, survivors)
+        log.read_files(spark, 0, survivors)
         .where(F.col("o_orderkey").isin(*_BLOOM_PROBES))
         .select("o_orderkey", "o_custkey", "price_c")
     )
@@ -994,7 +994,7 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         except ConstraintViolation:
             pass  # audit failed: staged snapshot abandoned, head untouched
     out = (
-        log.read(spark, log.view().head)
+        log.read(spark)  # the published head
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -341,13 +341,10 @@ def table_compact_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     v0 = log.commit(
         ev.repartition(16), note="unclustered landing", stats_cols=["user_id"]
     )
-    # counterfactual: the unclustered layout prunes NOTHING
-    f0 = [f for f in log.entry(v0)["files"] if f["n_rows"] > 0]
-    keep0 = [
-        f
-        for f in f0
-        if f["stats"]["user_id"][1] >= _CC_LO and f["stats"]["user_id"][0] <= _CC_HI
-    ]
+    band_pred = {"user_id": (_CC_LO, _CC_HI)}
+    # counterfactual: the unclustered layout prunes NOTHING ({}: every file)
+    view = log.view()
+    keep0, f0 = view.prune(v0, band_pred), view.prune(v0, {})
     assert len(keep0) == len(f0), "unclustered layout unexpectedly prunable"
 
     # target ~8 clustered files at EVERY scale (sizing from the manifest,
@@ -356,14 +353,10 @@ def table_compact_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = log.compact(
         spark, target_file_bytes=max(8 * 1024, total // 8), sort_cols=["user_id"]
     )
-    f1 = [f for f in log.entry(v1)["files"] if f["n_rows"] > 0]
-    survivors = [
-        f["path"]
-        for f in f1
-        if f["stats"]["user_id"][1] >= _CC_LO and f["stats"]["user_id"][0] <= _CC_HI
-    ]
+    view = log.view()
+    survivors, f1 = view.prune(v1, band_pred), view.prune(v1, {})
     assert 0 < len(survivors) < len(f1), (len(survivors), len(f1))
-    band = log.read_files(spark, survivors).where(
+    band = log.read_files(spark, v1, survivors).where(
         F.col("user_id").between(_CC_LO, _CC_HI)
     )
     out = band.agg(
@@ -430,16 +423,10 @@ def table_concurrent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the DELETE derives its file split from v0's WRITE-TIME stats — the
     # manifest is the catalog; no data file is opened to plan the rewrite
-    files = log.entry(0)["files"]
-    affected = [
-        f["path"]
-        for f in files
-        if f["n_rows"] > 0
-        and f["stats"]["o_custkey"][1] >= _CR_LO
-        and f["stats"]["o_custkey"][0] <= _CR_HI
-    ]
-    kept = [f["path"] for f in files if f["path"] not in set(affected)]
-    rewritten = spark.read.parquet(*affected).where(
+    hit = log.view().prune(0, {"o_custkey": (_CR_LO, _CR_HI)})
+    affected = [f["path"] for f in hit]
+    kept = sorted(log.live_files([0]) - set(affected))
+    rewritten = log.read_files(spark, 0, hit).where(
         ~F.col("o_custkey").between(_CR_LO, _CR_HI)
     )
 

@@ -391,8 +391,6 @@ def table_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     without duplicating the data."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune
-
     root = tempfile.mkdtemp(prefix="tcz_")
     log = SnapshotLog(root)
     ev = table(spark, sf_dir, "events").select(
@@ -404,21 +402,10 @@ def table_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.repartition(_ZC_FILES), note="round-robin landing", stats_cols=["x", "y"]
     )
 
-    def survivors(version: int, bands: dict) -> tuple[list[str], int]:
-        files = [f for f in log.entry(version)["files"] if f["n_rows"] > 0]
-        rows = [
-            type(
-                "R",
-                (),
-                {
-                    "file_path": f["path"],
-                    **{f"{c}_lo": f["stats"][c][0] for c in bands},
-                    **{f"{c}_hi": f["stats"][c][1] for c in bands},
-                },
-            )()
-            for f in files
-        ]
-        return prune(rows, bands), len(files)
+    def survivors(version: int, bands: dict) -> tuple[list[dict], int]:
+        # ({} keeps every non-empty file: the total to prune from)
+        view = log.view()
+        return view.prune(version, bands), len(view.prune(version, {}))
 
     x_band = {"x": (_ZCX_LO, _ZCX_HI)}
     y_band = {"y": (_ZCY_LO, _ZCY_HI)}
@@ -441,7 +428,7 @@ def table_compact_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_xy, _ = survivors(v1, both)
     assert 0 < len(keep_x) < total_x, (len(keep_x), total_x)
     assert 0 < len(keep_y) < total_y, (len(keep_y), total_y)
-    band = log.read_files(spark, keep_xy).where(
+    band = log.read_files(spark, v1, keep_xy).where(
         F.col("x").between(_ZCX_LO, _ZCX_HI)
         & F.col("y").between(_ZCY_LO, _ZCY_HI)
     )

@@ -300,8 +300,6 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         row lost or duplicated by the manifest surgery hash-mismatches."""
     import tempfile
 
-    from experiments_datafusion_spark.operators.table_format import prune
-
     register_sources(spark)
     root = tempfile.mkdtemp(prefix="tci_")
     log = SnapshotLog(root)
@@ -343,21 +341,10 @@ def table_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_full_rewrote = len(log.entry(v_inc)["files"])
     assert n_unclustered < n_full_rewrote, (n_unclustered, n_full_rewrote)
 
-    def survivors(version: int, band) -> tuple[list[str], int]:
-        files = [f for f in log.entry(version)["files"] if f["n_rows"] > 0]
-        rows = [
-            type(
-                "R",
-                (),
-                {
-                    "file_path": f["path"],
-                    "b_lo": f["stats"]["b"][0],
-                    "b_hi": f["stats"]["b"][1],
-                },
-            )()
-            for f in files
-        ]
-        return prune(rows, {"b": band}), len(files)
+    def survivors(version: int, band) -> tuple[list[dict], int]:
+        # ({} keeps every non-empty file: the total to prune from)
+        view = log.view()
+        return view.prune(version, {"b": band}), len(view.prune(version, {}))
 
     for band in (_CI_OLD, _CI_NEW):
         keep_inc, total_inc = survivors(v_inc, band)

@@ -23,7 +23,6 @@ from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
     mor_current_view,
     mor_read,
-    prune,
 )
 from experiments_datafusion_spark.queries import register
 
@@ -173,15 +172,14 @@ def scan_pruning_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Part 2 of the file-skipping story (scan_pruning_clustered is part 1:
 # row-group pruning, the only skipping vanilla Spark does on its own).
 # Table formats skip whole FILES at planning time by consulting a
-# MANIFEST — per-file column min/max collected once at write time.  Both
-# halves are Spark-expressible: the manifest is ONE distributed aggregate
-# over `_metadata.file_path` (never a footer walk on the driver), and
-# planning-time skipping is filtering the O(files) manifest driver-side
-# and scanning only the surviving paths.  At 100 TB the manifest is the
-# catalog's job (Delta/Iceberg keep it in the log); the dataflow — collect
-# stats at write, intersect [lo, hi] with the predicate, read the
-# survivors — is exactly this.  tests/test_round9.py pins numFiles ==
-# survivors < total via SparkPlan metrics.
+# MANIFEST — per-file column min/max collected once at write time: ONE
+# distributed aggregate over `_metadata.file_path` at commit (never a
+# footer walk on the driver).  Planning-time skipping filters the
+# O(files) manifest driver-side (LogView.prune) and scans only the
+# surviving files — the Delta/Iceberg dataflow: collect stats at write,
+# intersect [lo, hi] with the predicate, read the survivors.
+# tests/test_round9.py pins numFiles == survivors < total via SparkPlan
+# metrics.
 
 _MANIFEST_FILES = 16
 
@@ -200,15 +198,12 @@ WHERE o_custkey BETWEEN {_PRUNE_LO} AND {_PRUNE_HI}
 )
 def scan_pruning_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-pruned band read over the clustered rewrite (module
-    comment above): write clustered, build the per-file manifest with one
-    distributed aggregate, prune the file list driver-side, scan ONLY the
-    surviving files with the band predicate re-applied (manifest pruning
-    is necessarily conservative — files are kept on interval OVERLAP, so
-    the residual filter stays).  Same oracle as scan_pruning_clustered —
-    the two keys prove the two skipping tiers return identical answers.
-    Since round 10 the clustered rewrite is a SnapshotLog commit and the
-    stats manifest / pruning go through the layer's log-backed methods —
-    the add-file-stats placement a real format uses."""
+    comment above): commit clustered with write-time stats, prune the
+    file list driver-side (``LogView.prune``), scan ONLY the surviving
+    files with the band predicate re-applied (manifest pruning is
+    necessarily conservative — files are kept on interval OVERLAP, so the
+    residual filter stays).  Same oracle as scan_pruning_clustered — the
+    two keys prove the two skipping tiers return identical answers."""
     import tempfile
 
     root = tempfile.mkdtemp(prefix="manifest_")
@@ -217,11 +212,12 @@ def scan_pruning_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     v = log.commit(
-        orders.repartitionByRange(_MANIFEST_FILES, "o_custkey"), note="clustered"
+        orders.repartitionByRange(_MANIFEST_FILES, "o_custkey"),
+        note="clustered",
+        stats_cols=["o_custkey"],
     )
-    manifest = log.stats_manifest(spark, v, ["o_custkey"])
-    survivors = prune(manifest, {"o_custkey": (_PRUNE_LO, _PRUNE_HI)})
-    band = log.read_files(spark, survivors).where(
+    survivors = log.view().prune(v, {"o_custkey": (_PRUNE_LO, _PRUNE_HI)})
+    band = log.read_files(spark, v, survivors).where(
         F.col("o_custkey").between(_PRUNE_LO, _PRUNE_HI)
     )
     out = band.agg(

@@ -3,8 +3,9 @@ a seeded random walk over the commit surface — append, band-delete
 rewrite, compaction (round-robin AND clustered),
 RESTORE, log checkpointing, TIMESTAMP AS OF, and (round 12, VERDICT r11
 next #8) write-audit-publish (stage + publish AND stage + abandon +
-recovery), shallow CLONE, and retention VACUUM — with a plain-Python
-MODEL of the expected table contents at every version.  After every
+recovery), shallow CLONE, and retention VACUUM (also under a pending
+staged tip) — with a plain-Python MODEL of the expected table contents
+at every version.  After every
 operation the real log's read must equal the model, AS OF reads must
 equal the model's history, and changes_between must equal the model's
 set diff.  A second walk covers the merge-on-read surface (delete
@@ -16,11 +17,11 @@ surface: SINK-shaped ``append_once`` commits with txn replays (the
 exactly-once ledger must answer replays from ANY interleaved tip), batch
 reader-API CDF over random version ranges — including REWRITE-bearing
 ranges through the round-13 diff fallback — checked against the model's
-per-version multiset diff, paced availableNow stream drains
-(maxFilesPerTrigger + skipChangeCommits over whatever commit kinds the
-walk interleaved), and a schema-tracked streaming drain in the EVOLVING
-walk (the id-mapped backfill stream must agree with the column-id model
-after any rename/add/drop/widen prefix).
+per-version multiset diff, paced stream drains (maxFilesPerTrigger +
+skipChangeCommits over whatever commit kinds the walk interleaved), and
+a schema-tracked streaming drain in the EVOLVING walk (the id-mapped
+backfill stream must agree with the column-id model after any
+rename/add/drop/widen prefix).
 
 This is the table-format analog of tools/fuzz_differential.py: the
 hand-written keys each pin one dataflow; the walk probes the COMPOSITION
@@ -37,11 +38,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from experiments_datafusion_spark.operators.table_format import (
+    LogView,
     SnapshotLog,
     append_once,
     changes_between,
     clone_shallow,
     commit_staged,
+    file_stats,
     mor_current_view,
     publish_staged,
 )
@@ -93,9 +96,9 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
         op = rng.choices(
             ["append", "delete", "compact",
              "compact_sorted", "restore", "checkpoint", "wap_publish",
-             "wap_abandon", "vacuum_retain", "clone", "sink_commit",
-             "batch_cdf", "paced_drain"],
-            weights=[30, 16, 8, 8, 8, 4, 8, 5, 4, 3, 10, 8, 4],
+             "wap_abandon", "vacuum_retain", "wap_vacuum", "clone",
+             "sink_commit", "batch_cdf", "paced_drain"],
+            weights=[30, 16, 8, 8, 8, 4, 8, 5, 4, 4, 3, 10, 8, 4],
         )[0]
         if op == "sink_commit":
             # the streaming sink's commit shape: append_once with a
@@ -150,10 +153,12 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             assert got_set == want, f"seed={seed} step={step} cdf [{a},{b}]"
             continue
         if op == "paced_drain":
-            # fresh-checkpoint availableNow drain, paced + skipping
-            # change commits: output must equal v0's full state plus
-            # every removal-free version's adds — whatever kinds the
-            # walk interleaved in between
+            # fresh-checkpoint drain, paced + skipping change commits:
+            # output must equal v0's full state plus every removal-free
+            # version's adds — whatever kinds the walk interleaved in
+            # between.  One availableNow run drains ONE paced window by
+            # design (test_round12 pins that), so the walk drains the
+            # whole log in one query: a paced micro-batch per window
             if vacuumed or drains >= 2:
                 continue
             drains += 1
@@ -168,10 +173,10 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
                 .writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", out + "-chk")
-                .trigger(availableNow=True)
                 .start()
             )
-            assert q.awaitTermination(300), f"seed={seed} drain timeout"
+            q.processAllAvailable()
+            q.stop()
             got = sorted(r.id for r in spark.read.parquet(out).collect())
             want = sorted(i for ids in clean_adds.values() for i in ids)
             assert got == want, f"seed={seed} step={step} drain"
@@ -209,6 +214,30 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
             for v in [v for v in model if v < floor_v and v != latest]:
                 del model[v]
             assert _read_ids(log, spark) == model[latest], f"seed={seed} vacuum"
+            continue
+        if op == "wap_vacuum":
+            # retention vacuum while a write-audit-publish batch is still
+            # pending: the published head (not the staged tip) is the table
+            # consumers read, so its files must survive, and so must the
+            # staged batch's, which is then published
+            if len(model) < 3:
+                continue
+            ids = fresh_ids(rng.randint(1, 10))
+            sv = commit_staged(log, _df(spark, ids), note=f"staged {step}")
+            log.stamp_ts(sv, float(sv))
+            floor_v = rng.choice(sorted(model)[1:-1])
+            vacuumed = True
+            log.vacuum_retain(float(floor_v))
+            head = max(model)
+            for v in [v for v in model if v < floor_v and v != head]:
+                del model[v]
+            assert _read_ids(log, spark) == model[head], f"seed={seed} wap vacuum"
+            v = publish_staged(log, sv)
+            cur = sorted(cur + ids)
+            log.stamp_ts(v, float(v))
+            model[v] = sorted(cur)
+            clean_adds[v] = ids
+            assert _read_ids(log, spark) == model[v], f"seed={seed} wap vacuum publish"
             continue
         if op == "wap_publish":
             ids = fresh_ids(rng.randint(1, 10))
@@ -250,24 +279,29 @@ def test_log_random_walk_matches_model(spark, tmp_path, seed):
                 continue
             lo = rng.choice(cur)
             hi = lo + rng.randint(0, max(cur) - lo)
-            # rewrite: affected = files whose [min,max] hits the band (one
-            # distributed stats pass), keep = the rest — the pruned DELETE
-            # shape under a random band
-            from experiments_datafusion_spark.operators.table_format import (
-                file_stats,
-                prune,
-            )
-
-            stats = file_stats(log.read(spark), ["id"])
-            affected = prune(stats, {"id": (lo, hi)})
-            kept = [r.file_path for r in stats if r.file_path not in affected]
+            # rewrite: affected = files whose [min,max] hits the band, keep
+            # = the rest — the pruned DELETE shape under a random band.
+            # Most of the walk's commits record no stats, so the head's
+            # file dicts get their blocks from one distributed stats pass
+            # first: an unstatted file would be kept by the rule, turning
+            # every delete into a full rewrite
+            head = log.latest_version()
+            e = log.entry(head)
+            blocks = file_stats(log.read(spark), ["id"])
+            e["files"] = [
+                {**f, **blocks.get(f["path"], {"n_rows": 0, "stats": {}})}
+                for f in e["files"]
+            ]
+            affected = LogView({head: e}).prune(head, {"id": (lo, hi)})
             if not affected:
                 continue
-            df_new = log.read_files(spark, affected).where(
+            hit = {f["path"] for f in affected}
+            kept = [f["path"] for f in e["files"] if f["path"] not in hit]
+            df_new = log.read_files(spark, head, affected).where(
                 ~F.col("id").between(lo, hi)
             )
             v = log.commit_rewrite(
-                df_new, keep_files=kept, removed_files=affected,
+                df_new, keep_files=kept, removed_files=sorted(hit),
                 note=f"delete [{lo},{hi}]",
             )
             cur = [i for i in cur if not (lo <= i <= hi)]

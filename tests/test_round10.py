@@ -11,7 +11,6 @@ from experiments_datafusion_spark.operators.table_format import (
     SnapshotLog,
     changes_between,
     merge_upsert,
-    prune,
 )
 from experiments_datafusion_spark.queries import all_queries
 
@@ -176,18 +175,21 @@ def test_delete_pruned_rewrites_only_affected_files(spark, sf_dir, tmp_path):
 
     log = SnapshotLog(str(tmp_path / "t"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    log.commit(orders.repartitionByRange(R10._DEL_FILES, "o_custkey"))
-    stats = log.stats_manifest(spark, 0, ["o_custkey"])
-    affected = set(prune(stats, {"o_custkey": (R10._DEL_LO, R10._DEL_HI)}))
-    keep = [r.file_path for r in stats if r.file_path not in affected]
-    assert 0 < len(affected) < len(stats)  # the prune genuinely bites
-    rewritten = log.read_files(spark, sorted(affected)).where(
+    log.commit(
+        orders.repartitionByRange(R10._DEL_FILES, "o_custkey"),
+        stats_cols=["o_custkey"],
+    )
+    view = log.view()
+    affected = view.prune(0, {"o_custkey": (R10._DEL_LO, R10._DEL_HI)})
+    hit = {f["path"] for f in affected}
+    keep = [f["path"] for f in view.prune(0, {}) if f["path"] not in hit]
+    assert 0 < len(affected) < len(view.prune(0, {}))  # the prune genuinely bites
+    rewritten = log.read_files(spark, 0, affected).where(
         ~SF.col("o_custkey").between(R10._DEL_LO, R10._DEL_HI)
     )
-    v1 = log.commit_rewrite(rewritten, keep, sorted(affected))
-    norm = {p[len("file:"):] if p.startswith("file:") else p for p in keep}
+    v1 = log.commit_rewrite(rewritten, keep, sorted(hit))
     v1_paths = {fe.path for fe in log.manifest(v1)}
-    assert norm < v1_paths  # every untouched file carried forward by path
+    assert set(keep) < v1_paths  # every untouched file carried forward by path
     got = log.read(spark, v1)
     assert got.where(SF.col("o_custkey").between(R10._DEL_LO, R10._DEL_HI)).count() == 0
     want = orders.where(~SF.col("o_custkey").between(R10._DEL_LO, R10._DEL_HI))
@@ -299,13 +301,13 @@ def test_zorder_2d_manifest_pruning(spark, sf_dir, tmp_path):
     from experiments_datafusion_spark.queries import round10 as R10
 
     log = R10.zorder_layout_log(spark, sf_dir, str(tmp_path / "z"))
-    stats = log.stats_manifest(spark, 0, ["x", "y"])
-    total = len(stats)
+    view = log.view()
+    total = len(view.prune(0, {}))
     bands = {"x": (R10._ZX_LO, R10._ZX_HI), "y": (R10._ZY_LO, R10._ZY_HI)}
-    survivors = prune(stats, bands)
+    survivors = view.prune(0, bands)
     assert 0 < len(survivors) < total
 
-    band = log.read_files(spark, survivors).where(
+    band = log.read_files(spark, 0, survivors).where(
         SF.col("x").between(R10._ZX_LO, R10._ZX_HI)
         & SF.col("y").between(R10._ZY_LO, R10._ZY_HI)
     )
@@ -316,10 +318,12 @@ def test_zorder_2d_manifest_pruning(spark, sf_dir, tmp_path):
     # counterfactual: a 1-D layout clustered on x has no y locality, so the
     # y-band alone prunes nothing there — while the z-layout still skips
     one_d = SnapshotLog(str(tmp_path / "xonly"))
-    one_d.commit(log.read(spark, 0).repartitionByRange(R10._Z_FILES, "x"))
+    one_d.commit(
+        log.read(spark, 0).repartitionByRange(R10._Z_FILES, "x"), stats_cols=["x", "y"]
+    )
     y_band = {"y": (R10._ZY_LO, R10._ZY_HI)}
-    z_y_survivors = prune(stats, y_band)
-    x_y_survivors = prune(one_d.stats_manifest(spark, 0, ["x", "y"]), y_band)
+    z_y_survivors = view.prune(0, y_band)
+    x_y_survivors = one_d.view().prune(0, y_band)
     # 1-D layout has no y locality (an x-range file sees ~uniform y, so
     # nearly every file straddles the band); the z layout genuinely skips
     assert len(z_y_survivors) < len(x_y_survivors)
@@ -513,7 +517,6 @@ def test_partition_evolution_prunes_both_layout_generations(spark, sf_dir, tmp_p
     log = R10.partition_evolution_log(spark, sf_dir, str(tmp_path / "pe"))
     spec_a = {f["path"] for f in log.entry(0)["files"]}
     spec_b = {f["path"] for f in log.entry(1)["files"]} - spec_a
-    stats = log.stats_manifest(spark, 1, ["o_orderdate", "o_custkey"])
     bands = {
         "o_orderdate": (
             datetime.fromisoformat(R10._PE_D_LO),
@@ -521,12 +524,9 @@ def test_partition_evolution_prunes_both_layout_generations(spark, sf_dir, tmp_p
         ),
         "o_custkey": (R10._PE_C_LO, R10._PE_C_HI),
     }
-    survivors = {
-        p[len("file:"):] if p.startswith("file:") else p
-        for p in prune(stats, bands)
-    }
-    kept_a = {p for p in survivors if p in spec_a}
-    kept_b = {p for p in survivors if p in spec_b}
+    survivors = log.view().prune(1, bands)
+    kept_a = {f["path"] for f in survivors if f["path"] in spec_a}
+    kept_b = {f["path"] for f in survivors if f["path"] in spec_b}
     assert len(kept_a) < len(spec_a), "date band must skip spec-A files"
     assert len(kept_b) < len(spec_b), "custkey band must skip spec-B files"
     # soundness: pruned scan == full scan under the residual predicate
@@ -534,7 +534,7 @@ def test_partition_evolution_prunes_both_layout_generations(spark, sf_dir, tmp_p
         "o_custkey"
     ).between(R10._PE_C_LO, R10._PE_C_HI)
     full = log.read(spark, 1).where(pred).count()
-    pruned = log.read_files(spark, sorted(survivors)).where(pred).count()
+    pruned = log.read_files(spark, 1, survivors).where(pred).count()
     assert pruned == full > 0
 
 
@@ -557,22 +557,26 @@ def test_bloom_prunes_where_minmax_cannot(spark, sf_dir, tmp_path):
 
     log = SnapshotLog(str(tmp_path / "b"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    log.commit(orders.repartition(R10._BLOOM_FILES))
+    log.commit(orders.repartition(R10._BLOOM_FILES), stats_cols=["o_orderkey"])
     probes = R10._BLOOM_PROBES
     # min/max tier: a MID-domain probe sits inside every file's [min, max]
     # (a probe near the domain edge can luck into some pruning even here);
     # the scan's keep-set for the IN predicate is the UNION over probes
-    stats = log.stats_manifest(spark, 0, ["o_orderkey"])
+    view = log.view()
     for k in probes[1:]:  # 421, 1287 — mid-domain at every sf
-        assert len(prune(stats, {"o_orderkey": (k, k)})) == R10._BLOOM_FILES
-    minmax_keep = {p for k in probes for p in prune(stats, {"o_orderkey": (k, k)})}
+        assert len(view.prune(0, {"o_orderkey": (k, k)})) == R10._BLOOM_FILES
+    minmax_keep = {
+        f["path"] for k in probes for f in view.prune(0, {"o_orderkey": (k, k)})
+    }
     # bloom tier: strictly fewer files, none containing a probe is lost
     m = max(8192, 12 * (orders.count() // R10._BLOOM_FILES))
     blooms = file_bloom(log.read(spark, 0), "o_orderkey", m=m)
     survivors = bloom_prune(blooms, bloom_probe_positions(spark, probes, m=m))
     assert 0 < len(survivors) < len(minmax_keep) == R10._BLOOM_FILES
+    admitted = [f for f in log.entry(0)["files"] if f["path"] in set(survivors)]
+    assert len(admitted) == len(survivors)
     got = (
-        log.read_files(spark, survivors)
+        log.read_files(spark, 0, admitted)
         .where(F.col("o_orderkey").isin(*probes))
         .count()
     )

@@ -502,17 +502,9 @@ def test_compact_with_sort_cols_restores_pruning(spark, tmp_path):
     bands = sorted(tuple(f["stats"]["id"]) for f in files)
     for (lo1, hi1), (lo2, _hi2) in zip(bands, bands[1:]):
         assert hi1 < lo2, bands  # disjoint ranges: clustering is real
-    kept = [
-        f["path"]
-        for f in files
-        if f["stats"]["id"][1] >= 100 and f["stats"]["id"][0] <= 200
-    ]
+    kept = log.view().prune(v, {"id": (100, 200)})
     assert 0 < len(kept) < len(files)  # the band predicate skips files
-    got = (
-        spark.read.parquet(*kept)
-        .where(F.col("id").between(100, 200))
-        .count()
-    )
+    got = log.read_files(spark, v, kept).where(F.col("id").between(100, 200)).count()
     assert got == 101
     # rows survived the compaction exactly
     assert log.read(spark, v).count() == 10_000
@@ -741,6 +733,53 @@ def test_vacuum_retain_by_timestamp(spark, tmp_path):
     removed2 = log.vacuum_retain(since_ts=1e9)
     assert log.read(spark).count() == 30
     assert {fe.path for fe in log.manifest(1)} <= set(removed2) | v0_files
+
+
+def _staged_over_head(spark, tmp_path):
+    """v0 published (ts 0), v1 a pending write-audit-publish batch (ts 10)."""
+    from experiments_datafusion_spark.operators.table_format import commit_staged
+
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.stamp_ts(log.commit(spark.range(5), note="v0"), 0.0)
+    sv = commit_staged(log, spark.range(100, 103), note="staged v1")
+    log.stamp_ts(sv, 10.0)
+    return log, sv
+
+
+def test_vacuum_retain_keeps_the_published_head_under_a_staged_tip(spark, tmp_path):
+    """A staged tip is not the table consumers read: a window that
+    expired the published head must still keep its files — and the
+    pending batch's, which can still be published."""
+    from experiments_datafusion_spark.operators.table_format import publish_staged
+
+    log, sv = _staged_over_head(spark, tmp_path)
+    assert log.vacuum_retain(since_ts=5.0) == []
+    assert all(os.path.exists(fe.path) for fe in log.manifest(0))
+    assert sorted(r.id for r in log.read(spark).collect()) == list(range(5))
+    publish_staged(log, sv)
+    assert sorted(r.id for r in log.read(spark).collect()) == [0, 1, 2, 3, 4, 100, 101, 102]
+
+
+def test_compact_refuses_a_staged_tip(spark, tmp_path):
+    """``compact`` refuses a staged tip instead of publishing the
+    un-audited batch as the new head."""
+    log, sv = _staged_over_head(spark, tmp_path)
+    with pytest.raises(ValueError, match="staged"):
+        log.compact(spark)
+    with pytest.raises(ValueError, match="staged"):
+        log.compact(spark, version=0)
+    assert log.versions() == [0, sv]
+
+
+def test_read_and_clone_default_to_the_published_head(spark, tmp_path):
+    """``read`` and ``clone_shallow`` default to the published head, not
+    a staged tip."""
+    from experiments_datafusion_spark.operators.table_format import clone_shallow
+
+    log, _sv = _staged_over_head(spark, tmp_path)
+    assert sorted(r.id for r in log.read(spark).collect()) == list(range(5))
+    dst = clone_shallow(log, str(tmp_path / "clone"))
+    assert sorted(r.id for r in dst.read(spark).collect()) == list(range(5))
 
 
 def test_timestamp_as_of_resolution(spark, tmp_path):

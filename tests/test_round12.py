@@ -22,9 +22,7 @@ from experiments_datafusion_spark.operators.table_format import (
     changes_incremental,
     clone_shallow,
     commit_staged,
-    file_stats,
     merge_into,
-    prune,
     publish_staged,
 )
 from experiments_datafusion_spark.sources import register_sources
@@ -187,14 +185,10 @@ def test_txns_carried_through_every_commit_kind(spark, tmp_path, monkeypatch):
     # maintenance interposes between streaming appends
     log.compact(spark, target_file_bytes=16 * 1024)
     assert log.entry(log.latest_version())["txns"] == {"ing": [0, 0]}
-    stats = [
-        (r.file_path[len("file:"):] if r.file_path.startswith("file:") else r.file_path)
-        for r in file_stats(log.read(spark), ["id"])
-    ]
     log.commit_rewrite(
         log.read(spark).where(F.col("id") != 3),
         keep_files=[],
-        removed_files=stats,
+        removed_files=log.live_files([log.latest_version()]),
         note="delete id=3",
     )
     assert log.entry(log.latest_version())["txns"] == {"ing": [0, 0]}
@@ -679,24 +673,9 @@ def test_compact_zorder_prunes_both_dimensions(spark, tmp_path):
     log.commit(df.repartition(16), note="round-robin landing", stats_cols=["x", "y"])
 
     def survivors(version, bands):
-        files = [f for f in log.entry(version)["files"] if f["n_rows"] > 0]
-        rows = [
-            type(
-                "R",
-                (),
-                {
-                    "file_path": f["path"],
-                    **{
-                        f"{c}_lo": f["stats"][c][0] for c in bands
-                    },
-                    **{
-                        f"{c}_hi": f["stats"][c][1] for c in bands
-                    },
-                },
-            )()
-            for f in files
-        ]
-        return prune(rows, bands), len(files)
+        # ({} keeps every non-empty file: the total to prune from)
+        view = log.view()
+        return view.prune(version, bands), len(view.prune(version, {}))
 
     bands = {"x": (4, 11), "y": (40, 47)}
     keep0, total0 = survivors(0, bands)
@@ -712,7 +691,7 @@ def test_compact_zorder_prunes_both_dimensions(spark, tmp_path):
     assert len(keep_y) < total_y, "y-band did not prune on the z layout"
     assert len(keep_xy) <= min(len(keep_x), len(keep_y))
     # and the pruned band read is CORRECT (residual filter re-applied)
-    band = log.read_files(spark, keep_xy).where(
+    band = log.read_files(spark, v2, keep_xy).where(
         F.col("x").between(4, 11) & F.col("y").between(40, 47)
     )
     want = df.where(

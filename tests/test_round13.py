@@ -196,6 +196,32 @@ def test_parent_txns_walkback_only_for_legacy_tips(spark, tmp_path):
     assert log._parent_txns(log.latest_version()) == {"A": [0, 0]}
 
 
+def test_txnless_append_reads_one_entry(tmp_path, monkeypatch):
+    """A table that never recorded a txn map still records an empty one
+    on every commit, so an append reads its parent's entry and never
+    walks the log looking for a legacy record."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    schema = [["id", "bigint", True]]
+    for v in range(200):
+        log.commit_append_files([{"path": f"/nowhere/{v}.parquet", "size": 1}], schema)
+    calls = {"entry": 0, "_entries": 0}
+    real_entry, real_entries = SnapshotLog.entry, SnapshotLog._entries
+
+    def counting_entry(self, version):
+        calls["entry"] += 1
+        return real_entry(self, version)
+
+    def counting_entries(self, versions=None):
+        calls["_entries"] += 1
+        return real_entries(self, versions)
+
+    monkeypatch.setattr(SnapshotLog, "entry", counting_entry)
+    monkeypatch.setattr(SnapshotLog, "_entries", counting_entries)
+    v = log.commit_append_files([{"path": "/nowhere/200.parquet", "size": 1}], schema)
+    assert calls == {"entry": 1, "_entries": 0}  # the parent entry only
+    assert v == 200 and log.entry(v)["txns"] == {}
+
+
 def test_log_walks_parse_the_checkpoint_once(tmp_path, monkeypatch):
     """Per-version walks over a checkpointed log parse the checkpoint
     once per walk, not once per version it holds — each walk stays

@@ -7,6 +7,7 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from experiments_datafusion_spark.queries import round9 as R9
 
@@ -126,40 +127,203 @@ def test_manifest_pruning_skips_files(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from experiments_datafusion_spark.io import table
-    from experiments_datafusion_spark.operators.table_format import file_stats, prune
+    from experiments_datafusion_spark.operators.table_format import SnapshotLog
     from experiments_datafusion_spark.plans.audit import file_scan_metrics
 
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    path = str(tmp_path / "t")
-    orders.repartitionByRange(8, "o_custkey").write.mode("overwrite").parquet(path)
-    manifest = file_stats(spark.read.parquet(path), ["o_custkey"])
-    assert len(manifest) == 8
+    log = SnapshotLog(str(tmp_path / "t"))
+    v = log.commit(
+        orders.repartitionByRange(8, "o_custkey"), stats_cols=["o_custkey"]
+    )
+    view = log.view()
+    assert len(view.prune(v, {})) == 8
     lo, hi = 101, 140
-    survivors = prune(manifest, {"o_custkey": (lo, hi)})
+    survivors = view.prune(v, {"o_custkey": (lo, hi)})
     assert 0 < len(survivors) < 8, survivors
-    pruned = spark.read.parquet(*survivors).where(
+    pruned = log.read_files(spark, v, survivors).where(
         F.col("o_custkey").between(lo, hi)
     )
-    full = spark.read.parquet(path).where(F.col("o_custkey").between(lo, hi))
+    full = log.read(spark, v).where(F.col("o_custkey").between(lo, hi))
     key = lambda df: sorted(tuple(r) for r in df.collect())
     assert key(pruned) == key(full)
     m = file_scan_metrics(pruned.agg(F.count(F.lit(1))))
     assert sum(x["numFiles"] for x in m) == len(survivors)
 
 
-def test_manifest_pruning_conservative_on_overlap(spark):
+def _stats_view(stats, schema=(("k", "bigint"),)):
+    """A one-version ``LogView`` over hand-written file stats blocks:
+    ``stats`` is ``[(path, n_rows, {col: [lo, hi]})]``."""
+    from experiments_datafusion_spark.operators.table_format import LogView
+
+    files = [
+        {"path": p, "size": 1, "n_rows": n, "stats": st} for p, n, st in stats
+    ]
+    entry = {
+        "version": 0,
+        "schema": [[c, t, True] for c, t in schema],
+        "files": files,
+    }
+    return LogView({0: entry})
+
+
+def _kept(view, bands):
+    return [f["path"] for f in view.prune(0, bands)]
+
+
+def test_manifest_pruning_conservative_on_overlap():
     """prune keeps a file iff its [lo, hi] INTERSECTS the predicate
     interval — boundary-touching files must survive (off-by-one here
     silently drops matching rows at file boundaries)."""
-    from collections import namedtuple
+    view = _stats_view(
+        [("a", 1, {"k": [0, 100]}), ("b", 1, {"k": [100, 200]}), ("c", 1, {"k": [201, 300]})]
+    )
+    assert _kept(view, {"k": (100, 100)}) == ["a", "b"]
+    assert _kept(view, {"k": (150, 201)}) == ["b", "c"]
+    assert _kept(view, {"k": (301, 400)}) == []
 
-    from experiments_datafusion_spark.operators.table_format import prune
 
-    Row = namedtuple("Row", "file_path k_lo k_hi")
-    man = [Row("a", 0, 100), Row("b", 100, 200), Row("c", 201, 300)]
-    assert prune(man, {"k": (100, 100)}) == ["a", "b"]
-    assert prune(man, {"k": (150, 201)}) == ["b", "c"]
-    assert prune(man, {"k": (301, 400)}) == []
+def test_prune_rule_edges():
+    """The rest of the rule: an empty file is skipped, a file without a
+    stats block for a band's column is kept (conservative), a band must
+    meet EVERY column's interval, and a band column the version does not
+    have — or a non-temporal bound on a timestamp column — is refused."""
+    from datetime import date, datetime
+
+    view = _stats_view(
+        [
+            ("empty", 0, {}),
+            ("nostats", 5, {}),
+            ("both", 5, {"k": [0, 9], "j": [50, 59]}),
+            ("k_only", 5, {"k": [0, 9]}),
+            ("j_miss", 5, {"k": [0, 9], "j": [60, 69]}),
+        ],
+        schema=(("k", "bigint"), ("j", "bigint"), ("ts", "timestamp")),
+    )
+    assert _kept(view, {}) == ["nostats", "both", "k_only", "j_miss"]
+    assert _kept(view, {"k": (5, 5), "j": (55, 55)}) == ["nostats", "both", "k_only"]
+    assert _kept(view, {"k": (10, 20)}) == ["nostats"]
+    with pytest.raises(ValueError, match="no column 'zz'"):
+        view.prune(0, {"zz": (0, 1)})
+    with pytest.raises(ValueError, match="date/datetime bounds"):
+        view.prune(0, {"ts": ("1999-01-01", "1999-12-31")})
+    # a date bound is its midnight: the same encoding as a timestamp stat
+    ts_view = _stats_view(
+        [
+            ("d30", 1, {"ts": ["1999-06-30 00:00:00.000000"] * 2}),
+            ("d29", 1, {"ts": ["1999-06-29 23:59:59.999999"] * 2}),
+        ],
+        schema=(("ts", "timestamp"),),
+    )
+    assert _kept(ts_view, {"ts": (date(1999, 6, 30), datetime(2000, 1, 1))}) == ["d30"]
+
+
+def _id_mapped_with_stats(spark, tmp_path, cols, batches):
+    """An id-mapped log: v0 one unstatted row of 1000s, then one
+    single-file append per ``lo`` in ``batches`` — the first column runs
+    lo..lo+9 and every other column lo+100..lo+109 — each with write-time
+    stats on every column; returns the log and the appended files' paths
+    in order."""
+    from experiments_datafusion_spark.operators.table_format import SnapshotLog
+
+    log = SnapshotLog(str(tmp_path / "t"))
+    names = [n for _i, n, _t in cols]
+    ddl = ", ".join(f"{n} {t}" for _i, n, t in cols)
+    log.commit_columns(
+        spark.createDataFrame([(1000,) * len(cols)], ddl).coalesce(1), cols
+    )
+    paths = []
+    for lo in batches:
+        df = spark.range(lo, lo + 10).select(
+            *[(F.col("id") + (0 if i == 0 else 100)).alias(n) for i, n in enumerate(names)]
+        )
+        v = log.commit_append(df.coalesce(1), stats_cols=names)
+        (added,) = log.view().delta[v][0]
+        paths.append(added["path"])
+    return log, paths
+
+
+def test_prune_maps_a_renamed_column_through_the_ids(spark, tmp_path):
+    """A stat is keyed by the name its file was written under: after a
+    RENAME the live name still prunes (the old name is no column now),
+    and the pruned read returns the live column."""
+    log, (f1, f2) = _id_mapped_with_stats(
+        spark, tmp_path, [(1, "k", "bigint"), (2, "v", "bigint")], [0, 10]
+    )
+    v = log.evolve([(1, "key", "bigint"), (2, "v", "bigint")], note="rename")
+    view = log.view()
+    (v0_file,) = log.entry(0)["files"]
+    kept = view.prune(v, {"key": (12, 14)})
+    # f1 (k 0..9) is skipped; v0's file has no stats block, so it stays
+    assert [f["path"] for f in kept] == [v0_file["path"], f2]
+    with pytest.raises(ValueError, match="no column 'k'"):
+        view.prune(v, {"k": (12, 14)})
+    got = log.read_files(spark, v, kept).where(F.col("key").between(12, 14))
+    assert got.columns == ["key", "v"]
+    assert sorted((r.key, r.v) for r in got.collect()) == [(12, 112), (13, 113), (14, 114)]
+
+
+def test_prune_maps_a_swapped_rename_by_id(spark, tmp_path):
+    """Swapping two names (a<->b) must prune each live name by its id's
+    written stats, never by the stale name that now labels the other
+    column."""
+    log, (f1, f2) = _id_mapped_with_stats(
+        spark, tmp_path, [(1, "a", "bigint"), (2, "b", "bigint")], [0, 10]
+    )
+    v = log.evolve([(1, "b", "bigint"), (2, "a", "bigint")], note="swap")
+    view = log.view()
+    (v0_file,) = log.entry(0)["files"]
+    # live a = id 2, written as b: f1 holds 100..109, f2 110..119
+    assert [f["path"] for f in view.prune(v, {"a": (100, 104)})] == [v0_file["path"], f1]
+    # live b = id 1, written as a: f1 holds 0..9, f2 10..19
+    assert [f["path"] for f in view.prune(v, {"b": (15, 19)})] == [v0_file["path"], f2]
+    got = log.read_files(spark, v, view.prune(v, {"a": (100, 104)})).where(
+        F.col("a").between(100, 104)
+    )
+    assert sorted((r.a, r.b) for r in got.collect()) == [(100 + i, i) for i in range(5)]
+
+
+def test_prune_a_timestamp_band(spark, tmp_path):
+    """Timestamp and date stats are recorded as fixed-width ISO strings
+    and a datetime/date band prunes through the same encoding; the
+    pruned read equals the full band read."""
+    from datetime import date, datetime, timedelta
+
+    from experiments_datafusion_spark.operators.table_format import SnapshotLog
+
+    t0 = datetime(2000, 1, 1)
+    rows = [(i, t0 + timedelta(hours=i), (t0 + timedelta(hours=i)).date()) for i in range(96)]
+    df = spark.createDataFrame(rows, "id bigint, ts timestamp, d date")
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.commit(df.repartitionByRange(4, "ts"), stats_cols=["ts", "d"])
+    files = [f for f in log.entry(0)["files"] if f["n_rows"]]
+    assert {len(x) for f in files for x in f["stats"]["ts"] + f["stats"]["d"]} == {26}
+    view = log.view()
+    total = len(view.prune(0, {}))
+    lo, hi = datetime(2000, 1, 1, 10), datetime(2000, 1, 1, 12)
+    kept = view.prune(0, {"ts": (lo, hi)})
+    assert 0 < len(kept) < total
+    band = F.col("ts").between(lo, hi)
+    assert log.read_files(spark, 0, kept).where(band).count() == 3
+    day = view.prune(0, {"d": (date(2000, 1, 4), date(2000, 1, 4))})
+    assert 0 < len(day) < total
+    assert log.read_files(spark, 0, day).where(F.col("d") == date(2000, 1, 4)).count() == 24
+
+
+def test_unsupported_stats_type_is_refused_before_publish(spark, tmp_path):
+    """A stats column with no JSON encoding (decimal here) is refused
+    with the column's name, and nothing is published or left behind."""
+    from experiments_datafusion_spark.operators.table_format import SnapshotLog
+
+    log = SnapshotLog(str(tmp_path / "t"))
+    df = spark.range(4).select("id", F.col("id").cast("decimal(10,2)").alias("amt"))
+    with pytest.raises(ValueError, match="'amt'"):
+        log.commit(df, stats_cols=["amt"])
+    assert log.versions() == [] and os.listdir(log.root) == ["_log"]
+    log.commit(df, stats_cols=["id"])
+    before = sorted(os.listdir(log.root))
+    with pytest.raises(ValueError, match="'amt'"):
+        log.commit_append(df, stats_cols=["amt"])
+    assert log.versions() == [0] and sorted(os.listdir(log.root)) == before
 
 
 def test_positional_mor_equals_cow_row_for_row(spark, sf_dir, tmp_path):
